@@ -22,38 +22,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import _cpu_seconds_tree  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 XRUNS = int(os.environ.get("SPARK_GRAFT_XRUNS", "3"))
 PLAN_DIR = os.environ.get("SPARK_GRAFT_PLAN_DIR")
 PLAN_SUFFIX = os.environ.get("SPARK_GRAFT_PLAN_SUFFIX", ".txt")
-
-
-def _cpu_seconds_tree() -> float:
-    tick = os.sysconf("SC_CLK_TCK")
-    procs: dict[int, tuple[int, int]] = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat", "rb") as f:
-                s = f.read().decode("ascii", "replace")
-        except OSError:
-            continue
-        rest = s[s.rindex(")") + 2 :].split()
-        procs[int(pid)] = (int(rest[1]), int(rest[11]) + int(rest[12]))
-    children: dict[int, list[int]] = {}
-    for pid, (ppid, _) in procs.items():
-        children.setdefault(ppid, []).append(pid)
-    total, stack, seen = 0, [os.getpid()], set()
-    while stack:
-        p = stack.pop()
-        if p in seen or p not in procs:
-            continue
-        seen.add(p)
-        total += procs[p][1]
-        stack.extend(children.get(p, []))
-    return total / tick
 
 
 def main() -> None:

@@ -1,16 +1,19 @@
 """Deduplication family for training-data pipelines.
 
-Beyond the reference's exact record-hash dedup
-(/root/reference/src/llm_tab_cleaner/incremental.py:248-281), this adds the
-near-dup operators a 100 TB corpus pipeline needs: MinHash+LSH, SimHash, and
-n-gram Jaccard verification. Scale notes per operator:
+Beyond the reference's exact record-hash dedup (``incremental.py``), this
+adds the near-dup operators a 100 TB corpus pipeline needs: MinHash+LSH,
+SimHash, embedding LSH and n-gram Jaccard verification. Scale notes:
 
 * exact: hash-groupBy — one shuffle on the 16-byte digest, map-side combine.
-* minhash: signatures in one Arrow-batched UDF (numpy reduceat across the
-  batch), LSH banding natively (slice + hash), candidate pairs via a
-  self-join on (band, band_hash) — shuffle keyed on tiny band hashes, never
-  on document text. At 10^12 docs you'd bucket-partition the band table.
-* simhash: 64-bit signature UDF + native banding on 16-bit chunks.
+* near-dup pairs (minhash, simhash, embedding): each operator computes a
+  slim signature frame (one Arrow-batched UDF) and hands it to ONE banded-LSH
+  core, ``_banded_pairs``: materialize the signatures once, posexplode each
+  row's per-band keys to (band, bucket), drop over-cap buckets
+  (``_cap_buckets``), self-join on (band, bucket) with id_a < id_b. That
+  shuffle is keyed on small band keys, never on document text or vectors.
+  Per operator remain only the key function, the degenerate rows that never
+  band (NULL minhash, zero simhash, all-zero vector) and the verify step
+  (none, bit_count(xor) <= d, cosine), followed by one distinct().
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _MERSENNE = (1 << 61) - 1
@@ -39,21 +42,15 @@ def _cap_buckets(
     banded: DataFrame, keys: list[str], max_bucket_size: int, op: str
 ) -> DataFrame:
     """Drop over-cap (band, bucket) groups before a self-join — a hot bucket
-    of B docs is a B² reducer — and make the truncation VISIBLE (round-3
-    ADVICE: templated/boilerplate corpora can hold genuine near-dup clusters
-    above the cap, and silently vanishing pairs are indistinguishable from
-    'no dups'). ``banded`` must already be materialized (localCheckpoint) by
-    the caller, so the stats pass here is one tiny scan.
+    of B docs is a B² reducer — and make the truncation visible: templated
+    corpora can hold genuine near-dup clusters above the cap, and pairs
+    that vanish silently are indistinguishable from 'no dups'.
 
-    Cost shape (round-4 regression fix): exactly ONE extra Spark action — a
-    bounded collect of the over-cap keys (each over-cap group holds >
-    ``max_bucket_size`` docs, so there are at most N/max_bucket_size of
-    them). In the common no-hot-bucket case ``banded`` is returned
-    UNCHANGED — no join, no extra materialization, zero plan nodes added.
-    The round-4 version (eager stats localCheckpoint + .first() + semi-join
-    on every call) cost two scheduled jobs + a shuffle even when nothing was
-    over cap, which doubled the wall time of minhash/simhash pair queries
-    whose inputs are fixed-cost-dominated."""
+    Costs exactly one extra Spark action, a bounded collect of the over-cap
+    keys (each over-cap group holds > ``max_bucket_size`` docs, so there
+    are at most N/max_bucket_size of them). With no hot bucket ``banded``
+    is returned unchanged: no join and no plan node added. ``banded``
+    should read materialized data, since this stats pass replays it."""
     over = (
         banded.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_sz"))
@@ -90,6 +87,42 @@ def _cap_buckets(
         .select(*keys)
     )
     return banded.join(small, keys)
+
+
+def _banded_pairs(
+    sig: DataFrame,
+    ids: list[str],
+    keys: Column,
+    max_bucket_size: int,
+    op: str,
+    payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs sharing at least one (band, bucket): the banded-LSH
+    core of every near-dup pair operator here.
+
+    ``sig`` is a slim signature frame, one row per item. ``keys`` is an
+    array expression over its columns holding one bucket key per band;
+    rows whose ``keys`` is NULL (degenerate signatures) never band. Returns
+    ``{c}_a`` / ``{c}_b`` for every id and ``payload`` column, with
+    ``{ids[0]}_a < {ids[0]}_b`` and one row per colliding band — callers
+    verify, then ``distinct()``.
+
+    The banded rows have three consumers (the cap aggregate and both
+    self-join sides), so ``sig`` is materialized once unless it already is:
+    the analyzed logical plan root of a (local)checkpointed frame is
+    ``LogicalRDD``, and reading it needs no physical planning. The checkpoint holds the slim signature rows, not the banded
+    explode (bands× as many rows), which each consumer re-derives natively.
+    """
+    if sig._jdf.queryExecution().analyzed().nodeName() != "LogicalRDD":
+        sig = sig.localCheckpoint(eager=True)
+    cols = [*ids, *payload]
+    banded = sig.select(*cols, F.posexplode(keys).alias("band", "bucket"))
+    banded = _cap_buckets(banded, ["band", "bucket"], max_bucket_size, op)
+    a = banded.select("band", "bucket", *[F.col(c).alias(f"{c}_a") for c in cols])
+    b = banded.select("band", "bucket", *[F.col(c).alias(f"{c}_b") for c in cols])
+    return a.join(b, ["band", "bucket"]).filter(
+        F.col(f"{ids[0]}_a") < F.col(f"{ids[0]}_b")
+    )
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], content_col: str) -> DataFrame:
@@ -221,64 +254,38 @@ def lsh_candidate_pairs(
     bands: int = 16,
     max_bucket_size: int = 1000,
 ) -> DataFrame:
-    """Band the signatures and emit candidate near-dup pairs.
+    """Band the signatures and emit candidate near-dup pairs (unverified;
+    ``minhash_jaccard_estimate`` scores them).
 
-    bucket key = (band_id, hash(signature slice)); pairs come from a
-    self-join on the bucket key with id_a < id_b. The joined payload is only
-    ids + band keys — documents never shuffle.
+    Bucket key per band = hash(signature slice); pairs share a (band,
+    bucket) with id_a < id_b (``_banded_pairs``). The joined payload is
+    only ids + band keys — documents never shuffle. ``sig_df`` should be
+    localCheckpointed when it feeds other consumers too (the estimate
+    does); otherwise it is checkpointed here and those consumers still
+    replay the signature UDF.
 
-    Skew guards (round-2 VERDICT #3): NULL signatures (degenerate docs, see
-    minhash_signatures) never enter banding, and any (band, bucket) holding
-    more than ``max_bucket_size`` docs is dropped before the self-join — a
-    hot bucket of B docs is a B² reducer, and a bucket that large is an
-    exact-dup cluster (route through exact_dedup), not a near-dup candidate
-    set. Same pattern as ngram_jaccard_pairs' document-frequency cap.
+    Skew guards: NULL signatures (degenerate docs, see minhash_signatures)
+    never enter banding, and any (band, bucket) holding more than
+    ``max_bucket_size`` docs is dropped before the self-join — a hot bucket
+    of B docs is a B² reducer, and a bucket that large is an exact-dup
+    cluster (route through exact_dedup), not a near-dup candidate set. Same
+    pattern as ngram_jaccard_pairs' document-frequency cap.
     """
     rows_per_band = num_hashes // bands
-    sig_df = sig_df.filter(F.col("minhash").isNotNull())
-    banded = sig_df.select(
-        *id_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.hash(
-                            F.slice(F.col("minhash"), i * rows_per_band + 1, rows_per_band)
-                        ).alias("bucket"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(*id_cols, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    # The banded table has THREE consumers (cap aggregate + both self-join
-    # sides). If the signature lineage still contains the pandas UDF, each
-    # consumer would replay it — materialize once. If the caller already
-    # materialized sig_df (the documented pattern; _q_minhash_pairs does),
-    # banding is a cheap native explode+hash replay, and skipping the
-    # checkpoint saves one scheduled job per query (round-5: pair-query
-    # wall time is fixed-cost-dominated at small inputs).
-    sig_plan = sig_df._jdf.queryExecution().executedPlan().toString()
-    if "EvalPython" in sig_plan:
-        banded = banded.localCheckpoint(eager=True)
-
-    banded = _cap_buckets(banded, ["band", "bucket"], max_bucket_size, "lsh_candidate_pairs")
-
-    left = banded.select(
-        "band", "bucket", *[F.col(c).alias(f"{c}_a") for c in id_cols]
+    sig = F.col("minhash")
+    keys = F.when(
+        sig.isNotNull(),
+        F.array(
+            *[
+                F.hash(F.slice(sig, i * rows_per_band + 1, rows_per_band))
+                for i in range(bands)
+            ]
+        ),
     )
-    right = banded.select(
-        "band", "bucket", *[F.col(c).alias(f"{c}_b") for c in id_cols]
-    )
-    first = id_cols[0]
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col(f"{first}_a") < F.col(f"{first}_b"))
-        .select(*[f"{c}_a" for c in id_cols], *[f"{c}_b" for c in id_cols])
-        .distinct()
-    )
+    pairs = _banded_pairs(sig_df, id_cols, keys, max_bucket_size, "lsh_candidate_pairs")
+    return pairs.select(
+        *[f"{c}_a" for c in id_cols], *[f"{c}_b" for c in id_cols]
+    ).distinct()
 
 
 def minhash_jaccard_estimate(
@@ -444,19 +451,18 @@ def simhash_near_dup_pairs(
         but ~2¹⁶× fewer random collisions per table: the full-corpus
         operating point.
 
-    Skew guards (round-2 VERDICT #3): the all-zero signature (no tokens —
-    empty/whitespace-only docs, which _batch_simhash maps to 0) is excluded
-    from banding (exact-dup material, route through exact_dedup), and any
-    (chunk, key) bucket larger than ``max_bucket_size`` is dropped before
-    the self-join — identical-signature clusters that big are exact-dup
-    class, and their buckets are quadratic reducers at corpus scale."""
+    Skew guards: the all-zero signature (no tokens — empty/whitespace-only
+    docs, which _batch_simhash maps to 0) never enters banding (exact-dup
+    material, route through exact_dedup), and any (table, key) bucket
+    larger than ``max_bucket_size`` is dropped before the self-join —
+    identical-signature clusters that big are exact-dup class, and their
+    buckets are quadratic reducers at corpus scale."""
     from itertools import combinations
 
     if blocks is None:
-        # classic 4×16 for d <= 3; d+1 single-block tables above that —
-        # the PRE-round-5 code banded 4×16 for ANY max_hamming, silently
-        # missing pairs with 3 < hamming <= max_hamming that didn't share
-        # a chunk by luck; the default now always upholds the guarantee
+        # classic 4×16 for d <= 3; d+1 single-block tables above that, so
+        # the default always upholds the pigeonhole guarantee (4 blocks
+        # cannot: a pair with 3 < hamming <= d may flip bits in all four)
         blocks = max(4, max_hamming + 1)
     if blocks <= max_hamming:
         raise ValueError(
@@ -483,42 +489,17 @@ def simhash_near_dup_pairs(
             acc = F.xxhash64(acc)
         return acc
 
-    # Materialize the SIGNATURE table (one slim row per doc), not the
-    # banded explode: banding multiplies rows by the table count (45 at
-    # blocks=10/d=8), so checkpointing after the explode wrote 45x the
-    # blocks for data the downstream could re-derive with a cheap native
-    # explode per consumer (r6 A/B: 0.79x median wall, identical pairs).
-    # Skipped when the caller already materialized the signatures
-    # (no EvalPython left in the plan) — the minhash-path pattern.
-    sim_plan = sim_df._jdf.queryExecution().executedPlan().toString()
-    if "EvalPython" in sim_plan:
-        sim_df = sim_df.localCheckpoint(eager=True)
-    sim_df = sim_df.filter(F.col("simhash") != 0)
-    chunks = sim_df.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("chunk"), _table_key(c).alias("key")
-                    )
-                    for t, c in enumerate(combos)
-                ]
-            )
-        ).alias("cc"),
-    ).select(id_col, "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.key").alias("key"))
-    chunks = _cap_buckets(chunks, ["chunk", "key"], max_bucket_size, "simhash_near_dup_pairs")
-    a = chunks.select(
-        "chunk", "key", F.col(id_col).alias(f"{id_col}_a"), F.col("simhash").alias("_ha")
+    keys = F.when(
+        F.col("simhash") != 0, F.array(*[_table_key(c) for c in combos])
     )
-    b = chunks.select(
-        "chunk", "key", F.col(id_col).alias(f"{id_col}_b"), F.col("simhash").alias("_hb")
+    pairs = _banded_pairs(
+        sim_df, [id_col], keys, max_bucket_size, "simhash_near_dup_pairs",
+        payload=("simhash",),
     )
     return (
-        a.join(b, ["chunk", "key"])
-        .filter(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
-        .withColumn("hamming", F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))))
+        pairs.withColumn(
+            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+        )
         .filter(F.col("hamming") <= max_hamming)
         .select(f"{id_col}_a", f"{id_col}_b", "hamming")
         .distinct()
@@ -540,22 +521,32 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-dup pairs.
 
     ``dim`` (optional): the known vector width. When given, the per-pair
-    dot product uses the codegen-able unrolled form (bit-identical values,
-    see similarity.dot_expr_unrolled) instead of the interpreted lambda
-    fold — the verify join is the pair-count-proportional cost here.
+    dot product uses the unrolled add chain (bit-identical values, see
+    similarity.dot_expr_unrolled) instead of the interpreted lambda fold —
+    the verify join is the pair-count-proportional cost here.
 
     Default (``method="lsh"``, the validated path): banded random-hyperplane
     LSH — every vector gets `bands` bucket keys (one matmul per Arrow batch
     against a (dim, bands*planes_per_band) plane matrix), candidates are
-    pairs sharing ≥1 (band, bucket), and every candidate is verified with
-    the exact native cosine. The self-join shuffles only (band, bucket, id)
-    rows, never N² pairs and never the vectors. Recall: P[pair surfaces] =
+    pairs sharing ≥1 (band, bucket) (``_banded_pairs``), and every candidate
+    is verified with the exact native cosine. Recall: P[pair surfaces] =
     1-(1-p^r)^b with p = 1-θ/π; at cos ≥ 0.8 (θ≈37°), b=16, r=8 → ~0.94;
     at cos ≥ 0.95 → ~0.9999. The defaults are sized for the default
     ``min_cosine=0.95``; callers lowering the threshold MUST re-size the
     banding for their operating point (e.g. b=32, r=6 → ~0.9999 recall at
     cos 0.8) or opt into ``method="brute"`` for exactness — LSH is
     approximate by construction and misses are silent.
+
+    Scale shape: the banding self-join shuffles only (band, bucket, id)
+    rows, never the vectors. Candidates are not deduplicated before the
+    verify — a pair colliding in m bands is verified m times and the final
+    distinct() drops the repeats. The verify joins are broadcast only while
+    the vector side fits ``spark.sql.autoBroadcastJoinThreshold``; above
+    it, the band-inflated candidate set shuffles through both joins.
+
+    All-zero (and empty) vectors have no direction, so their cosine is
+    undefined: they yield no pairs in either method — the same policy as
+    NULL minhash and zero simhash signatures (exact-dup material).
 
     ``method="brute"`` is the exact O(N²) baseline, kept ONLY as the oracle
     for small-N verification (it is what the DuckDB twin computes).
@@ -566,55 +557,25 @@ def embedding_near_dup_pairs(
         dot_expr_unrolled,
     )
 
-    if method == "lsh":
-        # materialize the BUCKETS UDF output (one slim row per vector),
-        # not the banded explode: the explode multiplies rows by `bands`
-        # and is cheap native work each consumer can replay (r6 A/B:
-        # 0.81x median wall vs checkpointing post-explode)
-        b = banded_buckets(df, id_col, vec_col, bands, planes_per_band, seed)
-        b = b.select(id_col, "buckets").localCheckpoint(eager=True)
-        banded = b.select(
-            id_col, F.posexplode("buckets").alias("band", "bucket")
-        )
-        # hot-bucket cap (same guard as lsh_candidate_pairs / simhash):
-        # zero/degenerate vectors all sign-hash to one bucket per band — a
-        # quadratic reducer at corpus scale; clusters that big are
-        # exact-dup material, not near-dup candidates
-        banded = _cap_buckets(
-            banded, ["band", "bucket"], max_bucket_size, "embedding_near_dup_pairs"
-        )
-        a = banded.select("band", "bucket", F.col(id_col).alias("id_a"))
-        c = banded.select("band", "bucket", F.col(id_col).alias("id_b"))
-        # NO distinct here (guide §2.4 remove shuffles outright): deduping
-        # candidates would shuffle the full candidate set before the
-        # verify, while the verify join + cosine filter are map-side
-        # (broadcast) — so candidates stream through un-shuffled, a pair
-        # colliding in m bands is verified m times by the now-cheap
-        # unrolled dot, and the FINAL distinct (survivors only — a far
-        # smaller set) dedupes exactly as before. Result-identical
-        # (r6 A/B: verified row-for-row at a loose threshold; 0.94x wall).
-        cand = (
-            a.join(c, ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        va = _vec_side(df, id_col, vec_col, "id_a", "_va", "_na")
-        vb = _vec_side(df, id_col, vec_col, "id_b", "_vb", "_nb")
-        joined = cand.join(va, "id_a").join(vb, "id_b")
-    elif method == "brute":
-        a = _vec_side(df, id_col, vec_col, "id_a", "_va", "_na")
-        c = _vec_side(df, id_col, vec_col, "id_b", "_vb", "_nb")
-        joined = a.crossJoin(c).filter(F.col("id_a") < F.col("id_b"))
-    else:
+    if method not in ("lsh", "brute"):
         raise ValueError(f"unknown method: {method!r} (use 'lsh' or 'brute')")
-    # cosine = dot/(norm_a*norm_b) with the norms PRE-COMPUTED per side
-    # (guide §1.2 "per-task work"): the lambda-HOF fold is interpreted, and
-    # Catalyst inlines the verify filter into the join condition AND the
-    # output projection — so with cosine_expr inlined whole, every candidate
-    # pair paid SIX array folds (3 per evaluation x 2 evaluations). Norms
-    # per vector are O(N) not O(pairs); per pair only the dot fold remains
-    # (x2 evaluations). Identical arithmetic, same doubles: norm is the same
-    # fold over the same cast array, just evaluated in an earlier operator.
+    vec = F.col(vec_col)
+    df = df.filter((F.array_max(vec) > 0) | (F.array_min(vec) < 0))
+    va = _vec_side(df, id_col, vec_col, "id_a", "_va", "_na")
+    vb = _vec_side(df, id_col, vec_col, "id_b", "_vb", "_nb")
+    if method == "lsh":
+        sig = banded_buckets(df, id_col, vec_col, bands, planes_per_band, seed)
+        sig = sig.select(F.col(id_col).alias("id"), "buckets")
+        cand = _banded_pairs(
+            sig, ["id"], F.col("buckets"), max_bucket_size, "embedding_near_dup_pairs"
+        )
+        joined = cand.join(va, "id_a").join(vb, "id_b")
+    else:
+        joined = va.crossJoin(vb).filter(F.col("id_a") < F.col("id_b"))
+    # the norms come pre-computed per vector side: Catalyst inlines the
+    # cosine into both the join condition and the output projection, so a
+    # per-pair norm fold would run several times per candidate pair; per
+    # pair only the dot remains (same doubles, norm evaluated earlier)
     dot = (
         dot_expr_unrolled(F.col("_va"), F.col("_vb"), dim)
         if dim

@@ -103,7 +103,9 @@ def test_simhash_signature_goldens():
 def test_embedding_near_dup_lsh_matches_brute(spark):
     """Banded LSH (the default/validated path) must find every pair the
     brute-force twin finds on planted near-dups — recall 1.0 — and its plan
-    must not contain a cartesian product."""
+    must not contain a cartesian product. All-zero vectors (undefined
+    cosine) yield no pairs in either method instead of a division by zero
+    under ANSI mode."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -113,15 +115,20 @@ def test_embedding_near_dup_lsh_matches_brute(spark):
     for j in range(5):
         v = base[j] + rng.standard_normal(32).astype(np.float32) * 0.02
         rows.append((100 + j, list(map(float, v))))
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding"]))
-    lsh = dedup.embedding_near_dup_pairs(df, "vec_id", "embedding", min_cosine=0.95)
-    brute = dedup.embedding_near_dup_pairs(
-        df, "vec_id", "embedding", min_cosine=0.95, method="brute"
-    )
-    lp = lsh.toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    bp = brute.toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    assert len(bp) >= 5  # the plants are found by the oracle
-    pd.testing.assert_frame_equal(lp, bp, check_dtype=False)
+    zeros = [(900, [0.0] * 32), (901, [0.0] * 32)]
+    for extra in ([], zeros):
+        df = spark.createDataFrame(
+            pd.DataFrame(rows + extra, columns=["vec_id", "embedding"])
+        )
+        lsh = dedup.embedding_near_dup_pairs(df, "vec_id", "embedding", min_cosine=0.95)
+        brute = dedup.embedding_near_dup_pairs(
+            df, "vec_id", "embedding", min_cosine=0.95, method="brute"
+        )
+        lp = lsh.toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
+        bp = brute.toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
+        assert len(bp) >= 5  # the plants are found by the oracle
+        pd.testing.assert_frame_equal(lp, bp, check_dtype=False)
+        assert not {900, 901} & (set(lp.id_a) | set(lp.id_b))
     plan = lsh._jdf.queryExecution().executedPlan().toString()
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan, plan[:1500]
 
@@ -156,20 +163,89 @@ def test_degenerate_docs_dont_blow_up_banding(spark):
     assert (6000, 6001) in set(map(tuple, spairs[["doc_id_a", "doc_id_b"]].values))
 
 
-def test_banding_bucket_cap_drops_giant_clusters(spark):
+@pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
+def test_banding_bucket_cap_drops_giant_clusters(spark, op):
     """A (band, bucket) bigger than max_bucket_size is dropped before the
-    self-join — a 300-identical-doc cluster yields ZERO candidate pairs at
-    cap 100 (it is exact-dup material), while unrelated near-dups survive."""
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    rows = [(i, "identical cluster content shared by every doc here") for i in range(300)]
-    rows += [(1000, base), (1001, base.replace("today", "again"))]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    sigs = dedup.minhash_signatures(df, ["doc_id"], "text", 64, 5)
-    pairs = dedup.lsh_candidate_pairs(
-        sigs, ["doc_id"], 64, 16, max_bucket_size=100
-    ).toPandas()
-    assert not ((pairs.doc_id_a < 300) | (pairs.doc_id_b < 300)).any()
-    assert (1000, 1001) in set(map(tuple, pairs[["doc_id_a", "doc_id_b"]].values))
+    self-join — a 300-identical-item cluster yields ZERO pairs at cap 100
+    (it is exact-dup material), while an unrelated planted near-dup pair
+    survives. Runs through each operator's banding."""
+    import numpy as np
+
+    if op == "embedding":
+        rng = np.random.default_rng(5)
+        hot, near = rng.standard_normal((2, 16))
+        twin = near + rng.standard_normal(16) * 0.01
+        rows = [(i, hot.tolist()) for i in range(300)]
+        rows += [(1000, near.tolist()), (1001, twin.tolist())]
+        df = spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding"]))
+        pairs = dedup.embedding_near_dup_pairs(
+            df, "vec_id", "embedding", min_cosine=0.95, max_bucket_size=100
+        ).toPandas()
+        a, b = pairs.id_a, pairs.id_b
+    else:
+        base = (
+            "the quick brown fox jumps over the lazy dog while the band plays on "
+            "and the parade marches through the quiet town square at noon today"
+        )
+        rows = [(i, "identical cluster content shared by every doc here") for i in range(300)]
+        rows += [(1000, base), (1001, base.replace("noon", "dawn"))]
+        df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+        if op == "minhash":
+            sigs = dedup.minhash_signatures(df, ["doc_id"], "text", 64, 5)
+            pairs = dedup.lsh_candidate_pairs(
+                sigs, ["doc_id"], 64, 16, max_bucket_size=100
+            ).toPandas()
+        else:
+            sims = dedup.simhash_signatures(df, ["doc_id"], "text")
+            pairs = dedup.simhash_near_dup_pairs(
+                sims, "doc_id", max_hamming=3, max_bucket_size=100
+            ).toPandas()
+        a, b = pairs.doc_id_a, pairs.doc_id_b
+    assert not ((a < 300) | (b < 300)).any()
+    assert (1000, 1001) in set(zip(a, b))
+
+
+@pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
+def test_pair_operators_run_signature_udf_once(spark, docs, op):
+    """The banding core checkpoints a signature frame that still carries its
+    UDF, so the returned plan has no EvalPython (the cap aggregate and both
+    self-join sides read the checkpoint instead of replaying the UDF). A
+    pre-checkpointed input gets no second checkpoint: the same call runs
+    exactly one job fewer."""
+    import numpy as np
+
+    sc = spark.sparkContext
+    if op == "embedding":
+        vecs = np.random.default_rng(3).standard_normal((20, 8))
+        sig = spark.createDataFrame(
+            pd.DataFrame({"vec_id": range(20), "embedding": [v.tolist() for v in vecs]})
+        )
+        call = lambda s: dedup.embedding_near_dup_pairs(
+            s, "vec_id", "embedding", min_cosine=0.5
+        )
+    elif op == "minhash":
+        sig = dedup.minhash_signatures(docs, ["doc_id"], "text", 64, 5)
+        call = lambda s: dedup.lsh_candidate_pairs(s, ["doc_id"], 64, 16)
+    else:
+        sig = dedup.simhash_signatures(docs, ["doc_id"], "text")
+        call = lambda s: dedup.simhash_near_dup_pairs(s, "doc_id", max_hamming=6)
+
+    def jobs_of(frame, group):
+        sc.setJobGroup(group, group)
+        try:
+            out = call(frame)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    out, raw_jobs = jobs_of(sig, f"udf-once-{op}-raw")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan[:1500]
+    assert out.count() > 0
+    if op != "embedding":  # its signature UDF is internal: always checkpointed
+        _, pre_jobs = jobs_of(sig.localCheckpoint(eager=True), f"udf-once-{op}-pre")
+        assert pre_jobs == raw_jobs - 1
 
 
 def test_ngram_jaccard_short_docs_dont_crash(spark):
