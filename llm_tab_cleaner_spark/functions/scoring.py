@@ -396,11 +396,11 @@ def with_scores(df, content_col: str, spark: SparkSession, model: ScoringModel |
     # codec pass), and the Arrow binary column reaches the UDF as bytes —
     # dropping the per-row Python str.encode the scorer otherwise pays
     scored = df.withColumn("_score", udf(F.encode(F.col(content_col), "UTF-8")))
-    out = scored
-    for field in (
+    # one withColumns stage: the analyzer runs once, not once per field
+    fields = (
         "lang_pred", "lang_margin", "ppl_bits",
         "n_tokens", "n_distinct_tokens", "unique_token_ratio", "alnum_ratio",
         "is_nullish",
-    ):
-        out = out.withColumn(field, F.col(f"_score.{field}"))
+    )
+    out = scored.withColumns({f: F.col(f"_score.{f}") for f in fields})
     return out.drop("_score"), model

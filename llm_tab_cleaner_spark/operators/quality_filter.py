@@ -126,12 +126,15 @@ def apply_quality_filter(
     # predicate pushdown inlines a derived `keep` into filters and
     # re-evaluates every Column-expression feature 4-9× per row (round-2
     # plan audit), but an ArrowEvalPython output is a materialized barrier.
+    # Columns that do not depend on each other are added in one withColumns
+    # stage, so the analyzer runs once per stage rather than once per column;
+    # the optimized plan is the same either way (CollapseProject).
     content = F.col("content")
-    out = (
-        out.withColumn("n_chars", TF.n_chars(content))
-        .withColumn("has_long_line", TF.has_long_line(content))
-        .withColumn("is_autogen", TF.is_autogen(content))
-    )
+    features = {
+        "n_chars": TF.n_chars(content),
+        "has_long_line": TF.has_long_line(content),
+        "is_autogen": TF.is_autogen(content),
+    }
 
     # the ONE pandas UDF (langid + perplexity + token/alnum stats),
     # Arrow-batched. Statistical scores stabilize within the first tens of
@@ -142,10 +145,8 @@ def apply_quality_filter(
     # low_alnum_ratio are prefix-scoped too for files larger than the
     # prefix; 0 disables the cap and scores full content.
     if score_prefix_chars:
-        out = out.withColumn(
-            "_score_text", F.substring(F.col("content"), 1, score_prefix_chars)
-        )
-        out, model = with_scores(out, "_score_text", spark, model)
+        features["_score_text"] = F.substring(content, 1, score_prefix_chars)
+        out, model = with_scores(out.withColumns(features), "_score_text", spark, model)
         out = out.drop("_score_text")
         # is_nullish rides the scorer UDF (round-3 VERDICT #6: the native
         # lower/strip scan was inlined twice into every pushed-down keep
@@ -160,14 +161,15 @@ def apply_quality_filter(
             ).otherwise(TF.is_nullish(content)),
         )
     else:
-        out, model = with_scores(out, "content", spark, model)
+        out, model = with_scores(out.withColumns(features), "content", spark, model)
 
     # rule when-chains → fired array + max-confidence-wins drop confidence.
     # The array keeps null slots for unfired rules: CreateArray is codegen-
     # able, while filter()/array_compact() desugar to lambda HOFs which
     # de-codegen the ENTIRE collapsed Project (and its subexpression
-    # elimination — measured ~2× on the pipeline). Consumers (audit_trail,
-    # report) drop the nulls after explode, which is a row-level filter.
+    # elimination — measured ~2× on the pipeline). audit_trail drops the
+    # nulls after its explode (a row-level filter); the report counts each
+    # rule with array_contains, which skips them.
     rules = drop_rule_confidences(model)
     fired = F.array(
         *[
@@ -180,13 +182,12 @@ def apply_quality_filter(
             for name, conf in rules.items()
         ]
     )
-    out = out.withColumn("rules_fired", fired)
-    out = out.withColumn(
-        "drop_confidence",
-        F.greatest(
+    out = out.withColumns({
+        "rules_fired": fired,
+        "drop_confidence": F.greatest(
             *[F.coalesce(conf.cast("double"), F.lit(0.0)) for conf in rules.values()]
         ),
-    )
+    })
     out = out.withColumn("keep", F.col("drop_confidence") < F.lit(threshold))
 
     # decision confidence: drop → rule confidence; contested keep → 1 - drop
@@ -199,84 +200,78 @@ def apply_quality_filter(
         ),
         F.lit(TH.KEEP_CONF_FLOOR),
     )
-    out = out.withColumn(
-        "confidence",
-        F.when(~F.col("keep"), F.col("drop_confidence"))
-        .when(F.col("drop_confidence") > 0, F.lit(1.0) - F.col("drop_confidence"))
-        .otherwise(clean_keep_conf),
-    )
-
     # scrub stage: ONE combined detection scan gates the 7-pass replace
     # chain + per-family attribution — PII-free rows (the vast majority) pay
     # a single regex pass instead of 14. Identity-equal to the ungated chain.
-    out = out.withColumn("_any_pii", any_pii_detect_expr(F.col("content")))
-    out = out.withColumn(
-        "content_clean",
-        F.when(F.col("_any_pii"), scrub_expr(F.col("content"))).otherwise(F.col("content")),
-    )
+    out = out.withColumns({
+        "confidence": F.when(~F.col("keep"), F.col("drop_confidence"))
+        .when(F.col("drop_confidence") > 0, F.lit(1.0) - F.col("drop_confidence"))
+        .otherwise(clean_keep_conf),
+        "scrubbed": any_pii_detect_expr(content),
+    })
     scrub_hits = F.array(
         *[
-            F.when(F.col("content").rlike(pat), F.lit(name))
+            F.when(content.rlike(pat), F.lit(name))
             for name, pat, _repl in SCRUB_RULE_SPECS
         ]
     )
-    out = out.withColumn(
-        "scrub_rules",
-        F.when(F.col("_any_pii"), scrub_hits).otherwise(
+    out = out.withColumns({
+        "content_clean": F.when(F.col("scrubbed"), scrub_expr(content)).otherwise(content),
+        "scrub_rules": F.when(F.col("scrubbed"), scrub_hits).otherwise(
             F.array().cast("array<string>")
         ),
-    )
-    out = out.withColumnRenamed("_any_pii", "scrubbed")
+    })
     # for unscrubbed rows (the vast majority) content_clean IS content, so
     # clean_sha256 == content_sha256 by construction — reuse it instead of
     # paying a second full-content SHA-256 pass per row (guide §1.2
     # per-task work); scrubbed rows still hash their cleaned bytes
-    out = out.withColumn(
-        "clean_sha256",
-        F.when(F.col("scrubbed"), F.sha2(F.col("content_clean"), 256)).otherwise(
-            F.col("content_sha256")
-        ),
-    )
-    out = out.withColumn("partition_id", F.spark_partition_id())
+    out = out.withColumns({
+        "clean_sha256": F.when(
+            F.col("scrubbed"), F.sha2(F.col("content_clean"), 256)
+        ).otherwise(F.col("content_sha256")),
+        "partition_id": F.spark_partition_id(),
+    })
     return out, model
 
 
 def audit_trail(result: DataFrame) -> DataFrame:
     """Long-format audit table (FIXTURES.md §F3): one row per micro-decision
     (rule fired or scrub family applied), mirroring the reference's Fix/audit
-    entry (core.py:178-188, 469-481) with per-partition lineage."""
+    entry (core.py:178-188, 469-481) with per-partition lineage.
+
+    One pass: the drop-rule names and the scrub families are concatenated
+    into one array and posexploded together. A position inside
+    ``rules_fired`` is a drop rule (its confidence, keep/drop decision);
+    a position past it is a scrub family (confidence 1.0, ``scrub``).
+    Unfired rules and scrub families are null slots, filtered after the
+    explode; unscrubbed rows carry an empty ``scrub_rules``. No lambda HOF.
+    """
     keys = [F.col(k) for k in KEY_COLS]
-    rule_rows = (
+    pos = F.col("pos")
+    return (
         result.select(
             *keys,
-            F.explode("rules_fired").alias("f"),
+            F.posexplode(F.concat(F.col("rules_fired.rule"), F.col("scrub_rules"))).alias(
+                "pos", "rule_fired"
+            ),
+            F.col("rules_fired.confidence").alias("_rule_conf"),
             F.col("keep"),
             F.col("content_sha256").alias("before_sha256"),
             F.col("clean_sha256").alias("after_sha256"),
             F.col("partition_id"),
         )
-        .filter(F.col("f").isNotNull())  # unfired rules are null array slots
+        .filter(F.col("rule_fired").isNotNull())
         .select(
             *keys,
-            F.col("f.rule").alias("rule_fired"),
-            F.col("f.confidence").alias("confidence"),
-            F.when(F.col("keep"), F.lit("keep")).otherwise(F.lit("drop")).alias("decision"),
+            "rule_fired",
+            # get() is NULL past the end, where the scrub families start
+            F.coalesce(F.get(F.col("_rule_conf"), pos), F.lit(1.0)).alias("confidence"),
+            F.when(pos >= F.size("_rule_conf"), F.lit("scrub"))
+            .when(F.col("keep"), F.lit("keep"))
+            .otherwise(F.lit("drop"))
+            .alias("decision"),
             "before_sha256",
             "after_sha256",
             "partition_id",
         )
     )
-    scrub_rows = (
-        result.filter(F.col("scrubbed"))
-        .select(
-            *keys,
-            F.explode("scrub_rules").alias("rule_fired"),
-            F.lit(1.0).alias("confidence"),
-            F.lit("scrub").alias("decision"),
-            F.col("content_sha256").alias("before_sha256"),
-            F.col("clean_sha256").alias("after_sha256"),
-            F.col("partition_id"),
-        )
-        .filter(F.col("rule_fired").isNotNull())  # null slots from unfired families
-    )
-    return rule_rows.unionByName(scrub_rows)

@@ -4,8 +4,10 @@
 → ``CleanPipeline.run(df)``; ``SparkCleaner.clean_distributed``
 (spark.py:67-156) → ``CleanPipeline.run_and_write``; incremental resume
 (incremental.py:46-85) → ``CleanPipeline.run_incremental``. The report
-aggregation mirrors CleaningReport (core.py:162-176, 384-392) but is
-computed distributed (one agg pass over the result), not row-by-row.
+mirrors CleaningReport (core.py:162-176, 384-392) but is computed
+distributed, not row-by-row: ``run_and_write`` observes it (an
+``Observation`` on the output write) in the same pass that writes the
+cleaned rows, and ``report(result)`` runs the same aggregates as one job.
 """
 
 from __future__ import annotations
@@ -13,12 +15,16 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from llm_tab_cleaner_spark.functions import thresholds as TH
-from llm_tab_cleaner_spark.functions.scoring import ScoringModel
-from llm_tab_cleaner_spark.operators.quality_filter import apply_quality_filter, audit_trail
+from llm_tab_cleaner_spark.functions.scoring import ScoringModel, default_model
+from llm_tab_cleaner_spark.operators.quality_filter import (
+    apply_quality_filter,
+    audit_trail,
+    drop_rule_confidences,
+)
 from llm_tab_cleaner_spark.sources.state import StateStore
 
 
@@ -196,25 +202,40 @@ class CleanPipeline:
         self, df: DataFrame, output_path: str, audit_path: str | None = None
     ) -> CleaningReport:
         """Run + write cleaned parquet (kept rows, scrubbed content) + audit
-        parquet; return the aggregated report (spark.py:67-156 analog)."""
+        parquet; return the report (spark.py:67-156 analog).
+
+        The report is observed during the output write: an ``Observation``
+        sits below the write's ``keep`` filter, so it sees every row and
+        costs no extra job. ``result`` is persisted only when ``audit_path``
+        is set (the audit write is its second consumer) and is unpersisted
+        even when a write raises. Without an audit path the run is one job
+        with one scorer evaluation.
+        """
         t0 = time.time()
         result, audit = self.run(df)
-        result.persist()
-        (
-            result.filter(F.col("keep"))
-            .select(
-                "repo", "path", "commit", "lang",
-                F.col("content_clean").alias("content"),
-                "content_sha256", "clean_sha256", "confidence",
-            )
-            .write.mode("overwrite")
-            .parquet(output_path)
-        )
+        rules = self._rule_names()
+        obs = Observation()
         if audit_path:
-            audit.write.mode("overwrite").parquet(audit_path)
-        report = self.report(result)
+            result.persist()
+        try:
+            (
+                result.observe(obs, *_report_aggs(rules))
+                .filter(F.col("keep"))
+                .select(
+                    "repo", "path", "commit", "lang",
+                    F.col("content_clean").alias("content"),
+                    "content_sha256", "clean_sha256", "confidence",
+                )
+                .write.mode("overwrite")
+                .parquet(output_path)
+            )
+            if audit_path:
+                audit.write.mode("overwrite").parquet(audit_path)
+        finally:
+            if audit_path:
+                result.unpersist()
+        report = _to_report(obs.get, rules)
         report.processing_time = time.time() - t0
-        result.unpersist()
         return report
 
     def partition_metrics(self, result: DataFrame) -> DataFrame:
@@ -237,30 +258,41 @@ class CleanPipeline:
 
     # ---- aggregation (one distributed pass) ----
     def report(self, result: DataFrame) -> CleaningReport:
-        row = result.agg(
-            F.count("*").alias("total"),
-            F.sum(F.col("keep").cast("long")).alias("kept"),
-            F.sum(F.col("scrubbed").cast("long")).alias("scrubbed"),
-            F.avg("confidence").alias("avg_conf"),
-        ).collect()[0]
-        rule_rows = (
-            result.select(F.explode("rules_fired").alias("f"))
-            .filter(F.col("f").isNotNull())
-            .groupBy(F.col("f.rule").alias("rule"))
-            .count()
-            .collect()
-        )
-        total = row["total"] or 0
-        kept = row["kept"] or 0
-        avg_conf = float(row["avg_conf"] or 0.0)
-        # quality heuristic mirrors core.py:589-612's shape
-        quality = min(1.0, 0.8 + (kept / total) * 0.1 + avg_conf * 0.1) if total else 0.0
-        return CleaningReport(
-            total_files=total,
-            kept=int(kept),
-            dropped=int(total - kept),
-            scrubbed=int(row["scrubbed"] or 0),
-            avg_confidence=avg_conf,
-            quality_score=quality,
-            rule_counts={r["rule"]: r["count"] for r in rule_rows},
-        )
+        """The report of a scored ``result``: the aggregates
+        ``run_and_write`` observes, run here as one ``agg`` job."""
+        rules = self._rule_names()
+        return _to_report(result.agg(*_report_aggs(rules)).first().asDict(), rules)
+
+    def _rule_names(self) -> list[str]:
+        return list(drop_rule_confidences(self.model or default_model()))
+
+
+def _report_aggs(rules: list[str]) -> list[Column]:
+    """Aggregates behind CleaningReport: totals, mean confidence, and the
+    number of rows each drop rule fired on (unfired rules are null slots in
+    ``rules_fired``; array_contains needs no explode and no lambda)."""
+    fired = F.col("rules_fired.rule")
+    return [
+        F.count(F.lit(1)).alias("total"),
+        F.sum(F.col("keep").cast("long")).alias("kept"),
+        F.sum(F.col("scrubbed").cast("long")).alias("scrubbed"),
+        F.avg("confidence").alias("avg_conf"),
+        *[F.sum(F.array_contains(fired, r).cast("long")).alias(r) for r in rules],
+    ]
+
+
+def _to_report(row: dict, rules: list[str]) -> CleaningReport:
+    total = row["total"] or 0
+    kept = row["kept"] or 0
+    avg_conf = float(row["avg_conf"] or 0.0)
+    # quality heuristic mirrors core.py:589-612's shape
+    quality = min(1.0, 0.8 + (kept / total) * 0.1 + avg_conf * 0.1) if total else 0.0
+    return CleaningReport(
+        total_files=total,
+        kept=int(kept),
+        dropped=int(total - kept),
+        scrubbed=int(row["scrubbed"] or 0),
+        avg_confidence=avg_conf,
+        quality_score=quality,
+        rule_counts={r: int(row[r]) for r in rules if row[r]},
+    )

@@ -33,6 +33,17 @@ def build_session(
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. On a real cluster
     the master/memory settings come from spark-submit instead; every other
     config here is cluster-safe.
+
+    PySpark's DataFrame call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+    every ``pyspark.sql.functions`` call and Column operator walks the
+    Python stack, tries ``import IPython`` and makes extra JVM round trips
+    to record where it was made, and building the pipeline's plan makes
+    several hundred such calls per run. The captured call site only
+    decorates error messages. PySpark reads the conf once per process; to
+    get the call sites back, pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+    to the first ``build_session`` call.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -61,6 +72,7 @@ def build_session(
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")

@@ -190,3 +190,54 @@ def test_anti_join_resume_is_not_cartesian(spark, code_files_small, tmp_path):
     fresh = store.filter_new(df, spark)
     plan = _plan(fresh)
     assert "LeftAnti" in plan and "Cartesian" not in plan
+
+
+def _run_and_write_jobs_and_nodes(spark, df, tmp_path, audit: bool):
+    """(job count, node names of the output write's executed plan) of one
+    ``run_and_write``; jobs are counted with a statusTracker job group, the
+    plan is read back from the SQL status store."""
+    from llm_tab_cleaner_spark import CleanPipeline
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    group = f"run-and-write-{audit}"
+    since = store.executionsCount()
+    sc.setJobGroup(group, group)
+    try:
+        CleanPipeline(spark).run_and_write(
+            df, str(tmp_path / f"out{audit}"), str(tmp_path / f"audit{audit}") if audit else None
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    execs = store.executionsList()
+    first_write = None
+    for i in range(since, execs.size()):
+        graph = store.planGraph(execs.apply(i).executionId()).allNodes()
+        names = [graph.apply(k).name() for k in range(graph.size())]
+        if any("InsertIntoHadoopFsRelationCommand" in n for n in names):
+            first_write = names
+            break
+    return jobs, first_write
+
+
+def test_run_and_write_jobs_and_observed_single_scorer_plan(spark, tmp_path):
+    """The report is observed during the output write (a CollectMetrics
+    node, no job of its own) and ``result`` is persisted only for the audit
+    write: 2 jobs with an audit path, 1 without. Without one, the output
+    write evaluates the scorer once — the observe node stops the keep
+    filter from being pushed under a second scorer evaluation — and reads
+    no cache."""
+    from llm_tab_cleaner_spark.fixtures.code_files import write_fixture
+
+    cf_path, _ = write_fixture(str(tmp_path / "fxw"), 300)
+    df = spark.read.parquet(cf_path)
+    jobs, _ = _run_and_write_jobs_and_nodes(spark, df, tmp_path, audit=True)
+    assert jobs == 2
+    jobs, nodes = _run_and_write_jobs_and_nodes(spark, df, tmp_path, audit=False)
+    assert jobs == 1
+    assert nodes is not None
+    assert nodes.count("ArrowEvalPython") == 1, nodes
+    assert nodes.count("CollectMetrics") == 1, nodes
+    assert "InMemoryTableScan" not in nodes, nodes
