@@ -1,8 +1,12 @@
-"""Build dist/llm_tab_cleaner_spark.zip for spark-submit --py-files."""
+"""Build the spark-submit artifacts: dist/llm_tab_cleaner_spark.zip for
+--py-files and dist/llm_tab_cleaner_spark-scorer.jar (the JVM scorer) for
+--jars."""
 
 from __future__ import annotations
 
 import os
+import shutil
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -17,11 +21,24 @@ def build(out: str | None = None) -> str:
             if "__pycache__" in dirpath:
                 continue
             for f in files:
-                if f.endswith(".py"):
+                if f.endswith((".py", ".java")):
                     full = os.path.join(dirpath, f)
                     zf.write(full, os.path.relpath(full, ROOT))
     return out
 
 
+def build_jar(out: str | None = None) -> str:
+    """Copy the compiled scorer jar (compiling it on a cache miss) to ``out``."""
+    if ROOT not in sys.path:  # run as a script from jobs/
+        sys.path.insert(0, ROOT)
+    from llm_tab_cleaner_spark.jvm import scorer_jar
+
+    out = out or os.path.join(ROOT, "dist", "llm_tab_cleaner_spark-scorer.jar")
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    shutil.copyfile(scorer_jar(), out)
+    return out
+
+
 if __name__ == "__main__":
     print(build())
+    print(build_jar())

@@ -2,12 +2,18 @@
 "runs via spark-submit --py-files with zero per-row Python").
 
 Usage (local smoke):
-    python jobs/package.py                      # builds dist/llm_tab_cleaner_spark.zip
+    python jobs/package.py    # builds dist/llm_tab_cleaner_spark.zip and
+                              # the scorer jar dist/llm_tab_cleaner_spark-scorer.jar
     spark-submit --master local[8] \
       --py-files dist/llm_tab_cleaner_spark.zip \
+      --jars dist/llm_tab_cleaner_spark-scorer.jar \
       jobs/run_quality_filter.py \
       --input /path/code_files.parquet --output /path/out \
       --audit /path/audit --state /path/state --metrics /path/metrics
+
+``--jars`` is required: the scorer is a Java UDF, and its class must be on
+the driver's classpath when the JVM starts. This script runs inside an
+already-started JVM, so setting ``spark.jars`` here could not add it.
 
 On a cluster, --master/--num-executors/memory come from spark-submit; the
 job only sets semantic configs. Incremental by default when --state is given
@@ -26,10 +32,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # One BLAS thread per executor python worker (round-2 VERDICT #5): without
 # the pin, N workers × default-N BLAS threads oversubscribes quadratically
-# and the scorer UDF anti-scales (measured 4.5× at 32 workers in
-# session.py's local harness). spark-submit bypasses session.build_session,
-# so the job must carry the executorEnv pins itself — they are semantic
-# configs, cluster-safe, and inert where BLAS is absent.
+# and numpy UDFs anti-scale (the former pandas scorer measured 4.5× at 32
+# workers in session.py's local harness). The scorer runs in the JVM now;
+# the pins stay for the numpy UDFs that remain (dedup signatures,
+# fingerprint and similarity kernels). spark-submit bypasses
+# session.build_session, so the job must carry the executorEnv pins itself
+# — they are semantic configs, cluster-safe, and inert where BLAS is absent.
 EXECUTOR_ENV_PINS = {
     "spark.executorEnv.OMP_NUM_THREADS": "1",
     "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",

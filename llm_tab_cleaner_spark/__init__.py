@@ -8,7 +8,10 @@ resume, and explicit skew handling.
 
 Architecture (see SURVEY.md §7):
   - ``functions/``  — native Column expressions (text features, PII scrub,
-    hashes) and the single vectorized pandas-UDF scorer (langid + perplexity).
+    hashes) and the scorer (langid + perplexity + token stats): the model is
+    trained in Python and scored by one Java UDF.
+  - ``jvm/``        — the scorer's Java source and the jar build
+    (``build_session`` compiles it once per source version).
   - ``operators/``  — rule compiler, quality-filter pipeline, profiler,
     dedup family, similarity search, text analysis, calibration.
   - ``sources/``    — IO + the state/checkpoint store (parquet manifest,
@@ -18,8 +21,8 @@ Architecture (see SURVEY.md §7):
     table with golden keep/drop labels and golden scrubbed bytes.
   - ``streaming/``  — Structured Streaming variant of the clean stage.
 
-Everything in the hot path is either a native Column expression (whole-stage
-codegen) or one Arrow-batched pandas UDF — zero per-row Python.
+Everything in the hot path is a native Column expression or the Java scorer
+UDF, inside whole-stage codegen — the batch pipeline has no Python stage.
 """
 
 __version__ = "0.2.0"

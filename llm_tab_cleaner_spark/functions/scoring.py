@@ -1,8 +1,8 @@
-"""Vectorized language-ID + perplexity scorer (the ONE pandas UDF).
+"""Language-ID + perplexity scorer: one Java UDF on the hot path.
 
 Replaces the reference's per-value LLM call
 (/root/reference/src/llm_tab_cleaner/llm_providers.py:29-66, 370-404) with a
-deterministic, broadcast, hashed char-trigram model:
+deterministic hashed char-trigram model:
 
 * **langid** — multinomial naive-Bayes over hashed char trigrams
   (fastText-style bag-of-ngrams linear model; 4096 buckets × |languages|).
@@ -10,27 +10,31 @@ deterministic, broadcast, hashed char-trigram model:
   trigram unigram model (2^15 buckets) trained on the seed corpus; garbled
   text scores several bits above the training mean.
 
-The UDF is iterator-style (model unpickled once per executor/partition, per
-spark.py:266-293's broadcast-rehydration pattern) and the inner scoring is
-fully numpy-vectorized ACROSS the Arrow batch — bytes of all rows are
-concatenated, trigram buckets computed in one shot, per-row reductions via
-``np.add.reduceat`` / scatter-add. Zero per-row Python (north_rule).
+``train_model`` fits the tables in Python. ``with_scores`` runs the scorer
+as the Java UDF in ``jvm/Scorer.java`` (compiled by ``build_session``): the
+tables reach it as constructor arguments, and the whole score — both model
+heads, the token/alnum stats and the null-ish check — is computed in the
+JVM, inside the query's codegen stage, with no Python stage at all.
+``ScoringModel.score_batch`` is the numpy reference kernel the Java port
+equals field for field (``tests/test_scoring_jvm.py``); it is vectorized
+across a batch, with per-row reductions via ``np.add.reduceat`` /
+``np.bincount``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
-import pickle
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from llm_tab_cleaner_spark.functions import thresholds as TH
 from llm_tab_cleaner_spark.functions.corpus import training_corpus
+from llm_tab_cleaner_spark.jvm import SCORER_CLASS
 
 B_LANG = 4096  # langid hash buckets (small: scatter-add builds n_rows × B_LANG)
 B_PPL = 1 << 15  # perplexity hash buckets
@@ -42,12 +46,12 @@ SCORE_SCHEMA = (
     "alnum_ratio double, is_nullish boolean"
 )
 
-# is_nullish rides the scorer UDF (round-3 VERDICT #6): as a Column
-# expression its lower(ws_strip(...)) scan was inlined TWICE into every
-# pushed-down keep filter (nullish rule + short rule's negation); behind
-# the Arrow barrier it is computed once, and the byte-level check below is
-# exact for the ASCII token set (Java \s == this byte class on UTF-8;
-# non-ASCII text can never equal an ASCII token under either lowercasing).
+# is_nullish rides the scorer (round-3 VERDICT #6): as a Column expression
+# its lower(ws_strip(...)) scan was inlined TWICE into every pushed-down
+# keep filter (nullish rule + short rule's negation); behind the scorer's
+# barrier it is computed once, and the byte-level check below is exact for
+# the ASCII token set (Java \s == this byte class on UTF-8; non-ASCII text
+# can never equal an ASCII token under either lowercasing).
 _ASCII_WS = b" \t\n\x0b\x0c\r"
 _NULLISH_BYTES = frozenset(t.encode("ascii") for t in TH.NULLISH_TOKENS)
 _NULLISH_MAX_BYTES = max(len(t) for t in TH.NULLISH_TOKENS)
@@ -87,8 +91,8 @@ def _batch_text_stats(
     from bytes minus UTF-8 continuation bytes. These stats used to live in
     Column expressions, but Catalyst's predicate pushdown inlines a derived
     `keep` into filters, re-evaluating each split/regexp 4-9× per row (the
-    round-2 plan audit); behind the ArrowEvalPython barrier they are
-    computed exactly once.
+    round-2 plan audit); behind the scorer's barrier they are computed
+    exactly once.
     """
     nt = np.zeros(n, dtype=np.int32)
     nd = np.zeros(n, dtype=np.int32)
@@ -145,10 +149,10 @@ def _batch_text_stats(
     # than the two-key lexsort. Within-row collision odds go from 2^-64 to
     # T²/2^53 (~1e-8 for a 10k-token prefix) — the same accepted
     # hash-distinctness caveat. BOTH paths compare the SAME 52 truncated
-    # bits: a full-width fallback would let nd differ by Arrow-batch size
-    # (batch-composition determinism rule). Arrow batches are ≤4096 rows
-    # (session conf — exactly this packed path's 12-row-index-bit limit);
-    # the lexsort fallback covers callers feeding more.
+    # bits: a full-width fallback would let nd differ by batch size
+    # (batch-composition determinism rule), and the JVM scorer compares the
+    # same 52 bits. Batches of ≤4096 rows take the packed path (its
+    # 12-row-index-bit limit); the lexsort fallback covers larger ones.
     h52 = h >> np.uint64(12)
     if n <= 4096:
         packed = (tok_row.astype(np.uint64) << np.uint64(52)) | h52
@@ -189,9 +193,10 @@ class ScoringModel:
     train_mean_bits: float
     ppl_drop_bits: float  # decision threshold (train mean + margin)
 
-    # ---- batch scoring (vectorized across all rows of an Arrow batch) ----
+    # ---- batch scoring (the reference kernel, vectorized across rows) ----
     def score_batch(self, texts: pd.Series) -> pd.DataFrame:
-        """Scores for a whole Arrow batch. Batches whose total byte volume
+        """Scores for a batch of texts (bytes, str, or None = empty); the
+        JVM scorer equals this field for field. Batches whose total byte volume
         exceeds _SCORE_CHUNK_BYTES are processed in row-contiguous chunks
         and concatenated: every score is row-local (the
         batch-composition-invariance contract), so chunking cannot change
@@ -227,9 +232,7 @@ class ScoringModel:
         return self._score_chunk(texts)
 
     def _score_chunk(self, texts: pd.Series) -> pd.DataFrame:
-        # bytes rows come from the UDF's JVM-side encode() (a free
-        # reinterpret for UTF-8 strings) — no per-row Python encode; str
-        # rows (tests, direct callers) still work
+        # bytes rows are scored as given; str rows are UTF-8 encoded first
         raw = [
             t if isinstance(t, bytes)
             else (t.encode("utf-8", "replace") if isinstance(t, str) else b"")
@@ -371,31 +374,53 @@ def default_model() -> ScoringModel:
     return _MODEL_CACHE["default"]
 
 
-def make_score_udf(spark: SparkSession, model: ScoringModel | None = None):
-    """Build the iterator pandas UDF with the model broadcast to executors."""
-    model = model or default_model()
-    bc = spark.sparkContext.broadcast(pickle.dumps(model, protocol=4))
+def _scorer_class(spark: SparkSession):
+    from py4j.java_gateway import JavaClass
 
-    @F.pandas_udf(SCORE_SCHEMA)
-    def score_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        local = pickle.loads(bc.value)  # once per partition (iterator form)
-        for series in it:
-            yield local.score_batch(series)
+    cls = spark._jvm
+    for part in SCORER_CLASS.split("."):
+        cls = getattr(cls, part)
+    if not isinstance(cls, JavaClass):
+        raise RuntimeError(
+            f"the JVM scorer class {SCORER_CLASS} is not on the driver classpath. "
+            "Create the session with llm_tab_cleaner_spark.session.build_session "
+            "(it compiles the jar and sets spark.jars), or, under spark-submit, "
+            "build the jar with `python jobs/package.py` and pass it with "
+            "--jars dist/llm_tab_cleaner_spark-scorer.jar."
+        )
+    return cls
 
-    return score_udf, model
+
+def _scorer_function(spark: SparkSession, model: ScoringModel) -> str:
+    """Name of the session function scoring with ``model``; registers the
+    Java UDF on first use in a session. The name carries a hash of the model
+    tables, so each (session, model) registers once."""
+    lang = np.ascontiguousarray(model.lang_logprob, dtype="<f4").tobytes()
+    ppl = np.ascontiguousarray(model.ppl_bits_table, dtype="<f4").tobytes()
+    digest = hashlib.sha256("\n".join(model.languages).encode() + lang + ppl)
+    name = f"llm_tab_cleaner_score_{digest.hexdigest()[:16]}"
+    if not spark.catalog.functionExists(name):
+        _scorer_class(spark).register(
+            spark._jsparkSession, name, SCORE_SCHEMA, list(model.languages),
+            list(TH.NULLISH_TOKENS), lang, ppl,
+        )
+    return name
 
 
 def with_scores(df, content_col: str, spark: SparkSession, model: ScoringModel | None = None):
     """df + (lang_pred, lang_margin, ppl_bits, n_tokens, n_distinct_tokens,
-    unique_token_ratio, alnum_ratio) from the single scorer UDF. The text
-    stats ride the same Arrow barrier as the model scores, so downstream
-    rule references can never re-evaluate them (Catalyst inlines derived
-    predicates through filters; an ArrowEvalPython output cannot be)."""
-    udf, model = make_score_udf(spark, model)
-    # encode() JVM-side: UTF8String → binary is a reinterpret (no copy, no
-    # codec pass), and the Arrow binary column reaches the UDF as bytes —
-    # dropping the per-row Python str.encode the scorer otherwise pays
-    scored = df.withColumn("_score", udf(F.encode(F.col(content_col), "UTF-8")))
+    unique_token_ratio, alnum_ratio, is_nullish) from the single JVM scorer
+    UDF; NULL content scores as the empty string. The UDF is registered
+    nondeterministic, which is the planner barrier: Catalyst does not push a
+    filter through a nondeterministic Project, so a downstream ``keep``
+    filter reads the scorer's outputs instead of inlining (and re-running)
+    the scorer or any stat derived from it."""
+    model = model or default_model()
+    name = _scorer_function(spark, model)
+    # encode() to UTF-8 hands the JVM the string's own bytes (no decode)
+    scored = df.withColumn(
+        "_score", F.call_function(name, F.encode(F.col(content_col), "UTF-8"))
+    )
     # one withColumns stage: the analyzer runs once, not once per field
     fields = (
         "lang_pred", "lang_margin", "ppl_bits",

@@ -4,14 +4,15 @@ Spark-first re-expression of the reference's clean loop
 (/root/reference/src/llm_tab_cleaner/core.py:360-392 per-column loop +
 spark.py:296-337 per-value UDF): all heuristic rules are native Column
 expressions combined with max-confidence-wins semantics
-(cleaning_rule.py:148-175), the only Python is the single Arrow-batched
-scorer UDF (langid + perplexity), and the confidence gate
-(core.py:374-377) becomes ``keep = drop_confidence < threshold``.
+(cleaning_rule.py:148-175), the scorer (langid + perplexity + token
+stats) is one Java UDF in the same codegen stage, so the plan has no Python
+stage, and the confidence gate (core.py:374-377) becomes
+``keep = drop_confidence < threshold``.
 
 Plan shape (SURVEY.md §7):
 
     content_sha256 → [anti-join state] → [salted repartition] →
-    native features → scorer UDF → rule when-chains → keep/confidence →
+    native features → JVM scorer UDF → rule when-chains → keep/confidence →
     scrub (regexp_replace chain) → clean_sha256 → result + audit
 """
 
@@ -125,7 +126,8 @@ def apply_quality_filter(
     # heavy token/alnum stats come from the scorer UDF below: Catalyst's
     # predicate pushdown inlines a derived `keep` into filters and
     # re-evaluates every Column-expression feature 4-9× per row (round-2
-    # plan audit), but an ArrowEvalPython output is a materialized barrier.
+    # plan audit), but a filter is never pushed through the scorer's
+    # nondeterministic Project.
     # Columns that do not depend on each other are added in one withColumns
     # stage, so the analyzer runs once per stage rather than once per column;
     # the optimized plan is the same either way (CollapseProject).
@@ -136,19 +138,19 @@ def apply_quality_filter(
         "is_autogen": TF.is_autogen(content),
     }
 
-    # the ONE pandas UDF (langid + perplexity + token/alnum stats),
-    # Arrow-batched. Statistical scores stabilize within the first tens of
-    # KB, so score a bounded prefix — at 100 TB this caps Arrow transfer +
-    # UDF work per megabyte file while rules/scrub/sha still see full
-    # content. DOCUMENTED SEMANTICS (PipelineConfig.score_prefix_chars,
-    # README): the token/alnum stats feeding excessive_repetition and
-    # low_alnum_ratio are prefix-scoped too for files larger than the
-    # prefix; 0 disables the cap and scores full content.
+    # the ONE scorer UDF (langid + perplexity + token/alnum stats), a Java
+    # UDF. Statistical scores stabilize within the first tens of KB, so
+    # score a bounded prefix — at 100 TB this caps scorer work per megabyte
+    # file while rules/scrub/sha still see full content. DOCUMENTED
+    # SEMANTICS (PipelineConfig.score_prefix_chars, README): the token/alnum
+    # stats feeding excessive_repetition and low_alnum_ratio are
+    # prefix-scoped too for files larger than the prefix; 0 disables the cap
+    # and scores full content.
     if score_prefix_chars:
         features["_score_text"] = F.substring(content, 1, score_prefix_chars)
         out, model = with_scores(out.withColumns(features), "_score_text", spark, model)
         out = out.drop("_score_text")
-        # is_nullish rides the scorer UDF (round-3 VERDICT #6: the native
+        # is_nullish rides the scorer (round-3 VERDICT #6: the native
         # lower/strip scan was inlined twice into every pushed-down keep
         # filter). The UDF saw only the prefix, which is exact whenever the
         # file fits in it; the rare larger file falls back to the native

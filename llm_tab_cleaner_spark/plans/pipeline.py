@@ -41,7 +41,7 @@ class PipelineConfig:
     # excessive_repetition / low-alnum keep/drop rules for files LARGER than
     # the prefix judge the first 64 KiB, not the whole file (short_content
     # cannot misfire: any file over the prefix has far more than 10 tokens).
-    # At 100 TB this caps Arrow transfer + UDF work per megabyte file; set 0
+    # At 100 TB this caps the scorer's work per megabyte file; set 0
     # to score full content when whole-file stats matter more than cost.
     score_prefix_chars: int = 65536
     # a fitted operators.calibration.Calibrator: adds confidence_calibrated
@@ -50,7 +50,7 @@ class PipelineConfig:
     # ---- opt-in corpus stages (beyond-reference X21/X22) ----
     # license_allow: route files by header license class BEFORE the scorer
     # runs — the standard pretraining shape (drop copyleft/restricted files
-    # before paying Arrow transfer + scorer cost for them; the class comes
+    # before paying scorer cost for them; the class comes
     # from a bounded 2 KiB header scan, so the gate is ~free per file).
     # e.g. ("permissive", "none"). The result carries license_class and
     # spdx_id columns. None (default) = no gate, no columns.
@@ -101,7 +101,7 @@ class CleanPipeline:
         license gate (drop disallowed classes before paying scorer cost for
         them), the comment-ratio feature, and the Gopher duplicate-line
         gate. All pure projections/filters —
-        the pipeline stays single-Arrow-stage and shuffle-free
+        the pipeline stays free of Python stages and shuffles
         (tests/test_plans.py). Public so the gate can run standalone
         (inventory a corpus without scoring it); ``score``/``run`` call it
         automatically."""

@@ -4,7 +4,7 @@ Mirrors the session the reference builds at
 ``/root/reference/src/llm_tab_cleaner/spark.py:214-221, 414-428`` (AQE,
 coalescePartitions, skewJoin, Arrow) but tuned for this engine:
 UTC session TZ (duckdb-oracle parity), Arrow batches sized for code files,
-shuffle partitions ≈ cores.
+shuffle partitions ≈ cores, and the JVM scorer's jar on ``spark.jars``.
 """
 
 from __future__ import annotations
@@ -12,14 +12,19 @@ from __future__ import annotations
 import os
 
 # One BLAS thread per python worker: N workers × default-N BLAS threads
-# oversubscribes quadratically and the scorer UDF anti-scales (measured 4.5×
-# slowdown at 32 workers). Must be set before numpy loads in the workers —
-# local-mode workers inherit the driver env, and executorEnv covers clusters.
+# oversubscribes quadratically, and numpy UDFs anti-scale (the former pandas
+# scorer measured a 4.5× slowdown at 32 workers). The quality-filter scorer
+# runs in the JVM now; the pins stay for the numpy UDFs that remain (dedup
+# signatures, fingerprint and similarity kernels). Must be set before numpy
+# loads in the workers — local-mode workers inherit the driver env, and
+# executorEnv covers clusters.
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
            "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
 from pyspark.sql import SparkSession
+
+from llm_tab_cleaner_spark.jvm import scorer_jar
 
 
 def build_session(
@@ -44,6 +49,14 @@ def build_session(
     get the call sites back, pass
     ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
     to the first ``build_session`` call.
+
+    The quality-filter scorer is a Java UDF: its jar (``jvm.scorer_jar()``)
+    goes on ``spark.jars``, ahead of any jars in ``extra_conf``. The first
+    call for a given scorer source compiles it with ``javac`` into the
+    per-user cache (a few seconds); later calls reuse the cached jar.
+    Without a JDK this raises instead of starting a session the pipeline
+    cannot run in. Jars only reach a JVM that starts here: if a session
+    already exists, it is returned as it is.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -59,13 +72,11 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch size: 4096 halves per-batch fixed costs (serde setup,
-        # pandas materialization, numpy kernel overheads) vs 2048 — measured
-        # 17.3 → 9.3 CPU-s floor per 50k-file pass, 5/6 interleaved pairs
-        # favorable (BENCH/BASELINE.md round-4) — and 4096 rows is exactly
-        # the scorer's packed-sort distinct-path limit. Memory safety for
-        # big-row batches comes from the scorer's BYTE-bounded internal
-        # chunking (scoring._SCORE_CHUNK_BYTES), not from the row count.
+        # Arrow batch size for the pandas UDFs (dedup signatures,
+        # fingerprints, user rule callables): 4096 halves per-batch fixed
+        # costs (serde setup, pandas materialization, numpy kernel
+        # overheads) vs 2048 — measured 17.3 → 9.3 CPU-s floor per 50k-file
+        # pass when the scorer was a pandas UDF (BENCH/BASELINE.md round-4).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # split big text-heavy scans across tasks (default 128m under-splits
         # a 150 MB single-file input into 1-2 tasks)
@@ -78,7 +89,10 @@ def build_session(
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    jars = ",".join(j for j in (scorer_jar(), extra.pop("spark.jars", "")) if j)
+    builder = builder.config("spark.jars", jars)
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

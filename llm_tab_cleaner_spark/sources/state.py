@@ -72,8 +72,10 @@ class StateStore:
 
     def filter_new(self, df: DataFrame, spark: SparkSession) -> DataFrame:
         """Drop rows already processed (left-anti join on content_sha256).
-        Input must already carry content_sha256."""
-        state = self.processed(spark).select("content_sha256").distinct()
+        Input must already carry content_sha256. The state side is not
+        deduplicated: a left-anti join only asks whether a match exists, and
+        a distinct() would plan an aggregate and a shuffle over all state."""
+        state = self.processed(spark).select("content_sha256")
         return df.join(state, "content_sha256", "left_anti")
 
     # ---- commit ----

@@ -61,7 +61,7 @@ def test_platt_sigmoid_improves_brier_and_matches_expr(labeled, spark):
     np.testing.assert_allclose(got.cc.to_numpy(), calibrated, atol=1e-9)
 
 
-def test_pipeline_calibration_wiring(spark):
+def test_pipeline_calibration_wiring(spark, assert_jvm_scorer_plan, parquet_input):
     """PipelineConfig.calibrator adds a confidence_calibrated column computed
     by the fitted calibrator, with no extra UDF stage in the plan."""
     from pyspark.sql import functions as F
@@ -73,14 +73,12 @@ def test_pipeline_calibration_wiring(spark):
     result, _ = pipe.run(spark.createDataFrame(cf))
     pipe.fit_calibration(result, spark.createDataFrame(lab), method="isotonic")
     assert pipe.config.calibrator is not None
-    result2 = pipe.score(spark.createDataFrame(cf))
+    result2 = pipe.score(parquet_input(cf))
     out = result2.select("confidence", "confidence_calibrated").toPandas()
     want = pipe.config.calibrator.apply_numpy(out.confidence.to_numpy())
     np.testing.assert_allclose(out.confidence_calibrated, np.round(want, 6), atol=1e-9)
-    # still exactly ONE Arrow stage — calibration is a native when-chain
-    plan = result2._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in plan
+    # still no Python stage — calibration is a native when-chain
+    assert_jvm_scorer_plan(result2)
 
 
 def test_metrics_one_pass(labeled):

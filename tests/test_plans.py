@@ -1,5 +1,6 @@
 """Physical-plan guards — the 100 TB story in assertions (SURVEY.md §7 risks):
-zero per-row Python, pushdown reaches the scan, exactly one Arrow stage."""
+zero per-row Python, pushdown reaches the scan, no Python stage in the
+pipeline (the scorer is one JVM UDF, evaluated once)."""
 
 from __future__ import annotations
 
@@ -12,29 +13,31 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_single_arrow_stage_no_python_udfs(spark, code_files_small):
+def test_no_python_stage_single_jvm_scorer(
+    spark, code_files_small, assert_jvm_scorer_plan, parquet_input
+):
     from llm_tab_cleaner_spark import CleanPipeline
 
     cf, _ = code_files_small
-    result, _ = CleanPipeline(spark).run(spark.createDataFrame(cf.iloc[:50]))
+    result, _ = CleanPipeline(spark).run(parquet_input(cf.iloc[:50]))
     result.collect()
     plan = _plan(result)
-    # exactly one ArrowEvalPython (the scorer); no row-wise BatchEvalPython;
-    # no lambda HOFs (they de-codegen the whole projection)
-    assert plan.count("ArrowEvalPython") == 1, plan[:2000]
-    assert "BatchEvalPython" not in plan
+    # no Python eval node; the scorer once; no lambda HOFs (they de-codegen
+    # the whole projection)
+    assert_jvm_scorer_plan(result)
     assert "lambdafunction" not in plan
 
 
-def test_keep_filter_has_no_heavy_expression_duplication(spark, tmp_path):
+def test_keep_filter_has_no_heavy_expression_duplication(spark, tmp_path, assert_jvm_scorer_plan):
     """Round-2 regression guard: filtering on `keep` must NOT re-evaluate
     heavy text expressions — Catalyst's predicate pushdown inlines derived
     predicates in terms of base columns, and with Column-expression features
     the executed Filter contained split(ws_strip(content)) 6+ times per row
     (~3× the whole pipeline's cost). The token/alnum stats now come from the
-    scorer UDF (an ArrowEvalPython output cannot be inlined), so the
-    optimized keep-count plan must contain ZERO split/array_distinct and at
-    most the two cheap single-scan regex features."""
+    scorer UDF (a nondeterministic Project a filter is never pushed
+    through), so the optimized keep-count plan must contain ZERO
+    split/array_distinct and at most the two cheap single-scan regex
+    features."""
     import re as _re
 
     from llm_tab_cleaner_spark import CleanPipeline
@@ -51,7 +54,7 @@ def test_keep_filter_has_no_heavy_expression_duplication(spark, tmp_path):
     # the larger-than-prefix fallback's 2 branch-guarded refs (nullish rule
     # + short rule) that never execute on files fitting the scoring prefix
     assert plan.count("regexp_replace") <= 2, plan[:2000]
-    assert "ArrowEvalPython" in plan or "score_udf" in plan
+    assert_jvm_scorer_plan(result)
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, tmp_path):
@@ -138,10 +141,12 @@ def test_license_chain_codegen(spark, tmp_path):
     assert re.search(r"\*\(\d+\) Project", plan), plan[:1500]
 
 
-def test_pipeline_corpus_stages_single_arrow_stage(spark, code_files_small):
+def test_pipeline_corpus_stages_no_python_stage(
+    spark, code_files_small, assert_jvm_scorer_plan, parquet_input
+):
     """Pipeline with the opt-in license gate + comment ratio ON must keep
-    the plan shape: exactly one Arrow stage (the scorer), no row-wise
-    Python, no lambda HOFs (round-4 VERDICT #5's done-bar)."""
+    the plan shape: no Python stage, the JVM scorer once, no lambda HOFs
+    (round-4 VERDICT #5's done-bar)."""
     from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
 
     cf, _ = code_files_small
@@ -149,11 +154,10 @@ def test_pipeline_corpus_stages_single_arrow_stage(spark, code_files_small):
         spark,
         PipelineConfig(license_allow=("permissive", "none"), with_comment_ratio=True),
     )
-    result, _ = pipe.run(spark.createDataFrame(cf.iloc[:50]))
+    result, _ = pipe.run(parquet_input(cf.iloc[:50]))
     result.collect()
     plan = _plan(result)
-    assert plan.count("ArrowEvalPython") == 1, plan[:2000]
-    assert "BatchEvalPython" not in plan
+    assert_jvm_scorer_plan(result)
     assert "lambdafunction" not in plan
 
 
@@ -192,10 +196,34 @@ def test_anti_join_resume_is_not_cartesian(spark, code_files_small, tmp_path):
     assert "LeftAnti" in plan and "Cartesian" not in plan
 
 
+def test_filter_new_has_no_aggregate_on_state_side(spark, tmp_path):
+    """A left-anti join needs no distinct state: the plan has no aggregate
+    (distinct() planned HashAggregate → Exchange → HashAggregate over all
+    state hashes), and a hash committed twice still drops its row once,
+    never duplicates it."""
+    from pyspark.sql import functions as F2
+
+    from llm_tab_cleaner_spark.sources.state import StateStore
+
+    store = StateStore(str(tmp_path / "st"))
+    rows = spark.createDataFrame([(f"h{i}",) for i in range(6)], "content_sha256 string")
+    done = rows.filter(F2.col("content_sha256").isin("h0", "h1", "h2"))
+    for batch in ("a", "b"):  # the same hashes in two batches
+        store.commit(
+            done.withColumn("confidence", F2.lit(0.9)).withColumn("keep", F2.lit(True)), batch
+        )
+    fresh = store.filter_new(rows, spark)
+    optimized = fresh._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in optimized, optimized
+    assert "HashAggregate" not in _plan(fresh) and "LeftAnti" in _plan(fresh)
+    assert sorted(r[0] for r in fresh.collect()) == ["h3", "h4", "h5"]
+
+
 def _run_and_write_jobs_and_nodes(spark, df, tmp_path, audit: bool):
-    """(job count, node names of the output write's executed plan) of one
-    ``run_and_write``; jobs are counted with a statusTracker job group, the
-    plan is read back from the SQL status store."""
+    """(job count, [(name, description)] of the output write's executed
+    plan nodes) of one ``run_and_write``; jobs are counted with a
+    statusTracker job group, the plan is read back from the SQL status
+    store."""
     from llm_tab_cleaner_spark import CleanPipeline
 
     sc = spark.sparkContext
@@ -215,9 +243,9 @@ def _run_and_write_jobs_and_nodes(spark, df, tmp_path, audit: bool):
     first_write = None
     for i in range(since, execs.size()):
         graph = store.planGraph(execs.apply(i).executionId()).allNodes()
-        names = [graph.apply(k).name() for k in range(graph.size())]
-        if any("InsertIntoHadoopFsRelationCommand" in n for n in names):
-            first_write = names
+        nodes = [(graph.apply(k).name(), graph.apply(k).desc()) for k in range(graph.size())]
+        if any("InsertIntoHadoopFsRelationCommand" in n for n, _ in nodes):
+            first_write = nodes
             break
     return jobs, first_write
 
@@ -226,9 +254,8 @@ def test_run_and_write_jobs_and_observed_single_scorer_plan(spark, tmp_path):
     """The report is observed during the output write (a CollectMetrics
     node, no job of its own) and ``result`` is persisted only for the audit
     write: 2 jobs with an audit path, 1 without. Without one, the output
-    write evaluates the scorer once — the observe node stops the keep
-    filter from being pushed under a second scorer evaluation — and reads
-    no cache."""
+    write has no Python stage, evaluates the JVM scorer once, and reads no
+    cache."""
     from llm_tab_cleaner_spark.fixtures.code_files import write_fixture
 
     cf_path, _ = write_fixture(str(tmp_path / "fxw"), 300)
@@ -238,6 +265,8 @@ def test_run_and_write_jobs_and_observed_single_scorer_plan(spark, tmp_path):
     jobs, nodes = _run_and_write_jobs_and_nodes(spark, df, tmp_path, audit=False)
     assert jobs == 1
     assert nodes is not None
-    assert nodes.count("ArrowEvalPython") == 1, nodes
-    assert nodes.count("CollectMetrics") == 1, nodes
-    assert "InMemoryTableScan" not in nodes, nodes
+    names = [n for n, _ in nodes]
+    assert not any("EvalPython" in n for n in names), names
+    assert sum(d.count("llm_tab_cleaner_score_") for _, d in nodes) == 1, nodes
+    assert names.count("CollectMetrics") == 1, names
+    assert "InMemoryTableScan" not in names, names

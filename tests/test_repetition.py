@@ -153,18 +153,19 @@ def test_pipeline_dup_line_gate(spark, code_files_small):
     assert b > 0.9
 
 
-def test_pipeline_gate_plan_stays_clean(spark, code_files_small):
-    """The gate is a native projection+filter: still exactly one Arrow stage
-    (the scorer), no row-wise Python, no lambda HOFs de-codegening the
-    projection (array_distinct is not a lambda HOF)."""
+def test_pipeline_gate_plan_stays_clean(
+    spark, code_files_small, assert_jvm_scorer_plan, parquet_input
+):
+    """The gate is a native projection+filter: still no Python stage, the
+    JVM scorer once, no lambda HOFs de-codegening the projection
+    (array_distinct is not a lambda HOF)."""
     from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
 
     cf, _ = code_files_small
     result, _ = CleanPipeline(
         spark, PipelineConfig(dup_line_frac_max=0.30)
-    ).run(spark.createDataFrame(cf.iloc[:30]))
+    ).run(parquet_input(cf.iloc[:30]))
     result.collect()
     plan = result._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1, plan[:2000]
-    assert "BatchEvalPython" not in plan
+    assert_jvm_scorer_plan(result)
     assert "lambdafunction" not in plan
