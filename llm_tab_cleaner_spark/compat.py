@@ -508,6 +508,7 @@ class StreamingCleaner:
         trigger_interval: str = "10 seconds",
         columns: list[str] | None = None,
     ):
+        from llm_tab_cleaner_spark.plans.pipeline import PipelineConfig
         from llm_tab_cleaner_spark.streaming.stream_clean import clean_stream
 
         if columns is not None:
@@ -531,8 +532,8 @@ class StreamingCleaner:
             self.spark,
             output_dir=output_path,
             checkpoint_dir=self.checkpoint_location,
-            threshold=self.confidence_threshold,
             trigger_seconds=seconds,
+            config=PipelineConfig(confidence_threshold=self.confidence_threshold),
         )
 
 

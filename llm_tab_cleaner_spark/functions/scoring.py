@@ -49,18 +49,11 @@ SCORE_SCHEMA = (
 # is_nullish rides the scorer (round-3 VERDICT #6): as a Column expression
 # its lower(ws_strip(...)) scan was inlined TWICE into every pushed-down
 # keep filter (nullish rule + short rule's negation); behind the scorer's
-# barrier it is computed once, and the byte-level check below is exact for
-# the ASCII token set (Java \s == this byte class on UTF-8; non-ASCII text
-# can never equal an ASCII token under either lowercasing).
+# barrier it is computed once, on the whole text (not the scored prefix),
+# with the ASCII-only case folding thresholds.NULLISH_TOKENS states.
 _ASCII_WS = b" \t\n\x0b\x0c\r"
 _NULLISH_BYTES = frozenset(t.encode("ascii") for t in TH.NULLISH_TOKENS)
 _NULLISH_MAX_BYTES = max(len(t) for t in TH.NULLISH_TOKENS)
-
-#: byte cap per internal scoring chunk (see ScoringModel.score_batch):
-#: the kernels' blob-sized int64 intermediates make peak memory ≈ 8× this
-#: per live array — 32 MB keeps the worst case comfortably inside a
-#: worker while typical ~720 B-row batches (a few MB) never split
-_SCORE_CHUNK_BYTES = 32 << 20
 
 _FMIX1 = np.uint64(0xFF51AFD7ED558CCD)
 _FMIX2 = np.uint64(0xC4CEB9FE1A85EC53)
@@ -172,6 +165,16 @@ def _batch_text_stats(
     return nt, nd, uniq, alnum, nonws_bytes
 
 
+def _score_prefix(b: bytes) -> bytes:
+    """The first TH.SCORE_PREFIX_CHARS characters of UTF-8 bytes: a character
+    starts at every byte that is not a continuation byte (0x80-0xBF), as in
+    Spark's ``substring`` on valid UTF-8."""
+    if len(b) <= TH.SCORE_PREFIX_CHARS:
+        return b
+    starts = np.flatnonzero((np.frombuffer(b, dtype=np.uint8) & 0xC0) != 0x80)
+    return b[: starts[TH.SCORE_PREFIX_CHARS]] if starts.size > TH.SCORE_PREFIX_CHARS else b
+
+
 def _trigram_buckets(data: np.ndarray, n_buckets: int) -> np.ndarray:
     """Hash every length-3 byte window: (b0*961 + b1*31 + b2) & (n_buckets-1).
 
@@ -196,48 +199,15 @@ class ScoringModel:
     # ---- batch scoring (the reference kernel, vectorized across rows) ----
     def score_batch(self, texts: pd.Series) -> pd.DataFrame:
         """Scores for a batch of texts (bytes, str, or None = empty); the
-        JVM scorer equals this field for field. Batches whose total byte volume
-        exceeds _SCORE_CHUNK_BYTES are processed in row-contiguous chunks
-        and concatenated: every score is row-local (the
-        batch-composition-invariance contract), so chunking cannot change
-        any value, and it bounds the kernel working set — the stats/trigram
-        kernels allocate several blob-sized int64 intermediates (~8 bytes
-        per input byte each), so an unbounded 4096-row batch of
-        64 KiB-prefix files would otherwise peak at multiple GB per
-        worker."""
-        lens = np.fromiter(
-            (
-                len(t) if isinstance(t, bytes)
-                else (len(t.encode("utf-8", "replace")) if isinstance(t, str) else 0)
-                for t in texts
-            ),
-            dtype=np.int64,
-            count=len(texts),
-        )
-        if len(texts) > 1 and lens.sum() > _SCORE_CHUNK_BYTES:
-            bounds = [0]
-            acc = 0
-            for i, ln in enumerate(lens):
-                acc += int(ln)
-                if acc > _SCORE_CHUNK_BYTES and i + 1 > bounds[-1]:
-                    bounds.append(i + 1)
-                    acc = 0
-            if bounds[-1] != len(texts):
-                bounds.append(len(texts))
-            parts = [
-                self._score_chunk(texts.iloc[a:b])
-                for a, b in zip(bounds[:-1], bounds[1:])
-            ]
-            return pd.concat(parts, ignore_index=True)
-        return self._score_chunk(texts)
-
-    def _score_chunk(self, texts: pd.Series) -> pd.DataFrame:
+        JVM scorer equals this field for field. The scores read each text's
+        first TH.SCORE_PREFIX_CHARS characters; is_nullish reads all of it."""
         # bytes rows are scored as given; str rows are UTF-8 encoded first
-        raw = [
+        full = [
             t if isinstance(t, bytes)
             else (t.encode("utf-8", "replace") if isinstance(t, str) else b"")
             for t in texts
         ]
+        raw = [_score_prefix(b) for b in full]
         lens = np.fromiter((len(b) for b in raw), dtype=np.int64, count=len(raw))
         blob = np.frombuffer(b"".join(raw), dtype=np.uint8)
         n = len(raw)
@@ -248,13 +218,13 @@ class ScoringModel:
         byte_row = np.repeat(np.arange(n, dtype=np.int32), lens)
         nt, nd, uniq, alnum, nonws = _batch_text_stats(blob, lens, byte_row, n)
 
-        # nullish flag: only rows with ≤ max-token non-ws bytes can match an
-        # (ASCII) nullish token, so the per-row strip/lower/set-probe runs on
-        # that tiny candidate set — everything else is one bincount already
-        # paid for above. Row-local by construction (batch-composition rule).
+        # nullish flag: only rows whose prefix has ≤ max-token non-ws bytes
+        # can match an (ASCII) nullish token, so the per-row strip/lower/
+        # set-probe of the full text runs on that tiny candidate set. Row-
+        # local by construction (batch-composition rule).
         out_nullish = np.zeros(n, dtype=bool)
         for i in np.nonzero(nonws <= _NULLISH_MAX_BYTES)[0]:
-            out_nullish[i] = raw[i].strip(_ASCII_WS).lower() in _NULLISH_BYTES
+            out_nullish[i] = full[i].strip(_ASCII_WS).lower() in _NULLISH_BYTES
 
         if blob.size >= 3:
             # a window starting at byte i is valid iff byte i and i+2
@@ -394,15 +364,17 @@ def _scorer_class(spark: SparkSession):
 def _scorer_function(spark: SparkSession, model: ScoringModel) -> str:
     """Name of the session function scoring with ``model``; registers the
     Java UDF on first use in a session. The name carries a hash of the model
-    tables, so each (session, model) registers once."""
+    tables and the constructor's other arguments, so each (session, model)
+    registers once."""
     lang = np.ascontiguousarray(model.lang_logprob, dtype="<f4").tobytes()
     ppl = np.ascontiguousarray(model.ppl_bits_table, dtype="<f4").tobytes()
-    digest = hashlib.sha256("\n".join(model.languages).encode() + lang + ppl)
+    params = repr((model.languages, TH.NULLISH_TOKENS, TH.SCORE_PREFIX_CHARS))
+    digest = hashlib.sha256(params.encode() + lang + ppl)
     name = f"llm_tab_cleaner_score_{digest.hexdigest()[:16]}"
     if not spark.catalog.functionExists(name):
         _scorer_class(spark).register(
             spark._jsparkSession, name, SCORE_SCHEMA, list(model.languages),
-            list(TH.NULLISH_TOKENS), lang, ppl,
+            list(TH.NULLISH_TOKENS), TH.SCORE_PREFIX_CHARS, lang, ppl,
         )
     return name
 
@@ -410,7 +382,10 @@ def _scorer_function(spark: SparkSession, model: ScoringModel) -> str:
 def with_scores(df, content_col: str, spark: SparkSession, model: ScoringModel | None = None):
     """df + (lang_pred, lang_margin, ppl_bits, n_tokens, n_distinct_tokens,
     unique_token_ratio, alnum_ratio, is_nullish) from the single JVM scorer
-    UDF; NULL content scores as the empty string. The UDF is registered
+    UDF, which receives the full content: the first seven read its first
+    TH.SCORE_PREFIX_CHARS characters, is_nullish reads all of it (the UDF
+    makes the cut, so callers pass the whole column). NULL content scores
+    as the empty string. The UDF is registered
     nondeterministic, which is the planner barrier: Catalyst does not push a
     filter through a nondeterministic Project, so a downstream ``keep``
     filter reads the scorer's outputs instead of inlining (and re-running)

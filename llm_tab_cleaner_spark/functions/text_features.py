@@ -68,14 +68,6 @@ def unique_token_ratio(col: Column) -> Column:
     ).otherwise(F.lit(1.0))
 
 
-def special_char_ratio(col: Column) -> Column:
-    """Non-alphanumeric, non-whitespace chars / non-whitespace chars
-    (reference analog: multimodal_cleaning.py:174-177)."""
-    nonspace = F.length(F.regexp_replace(col, r"\s", ""))
-    special = F.length(F.regexp_replace(col, r"[a-zA-Z0-9\s]", ""))
-    return F.when(nonspace > 0, special / nonspace).otherwise(F.lit(0.0))
-
-
 ALNUM_CHARS = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
 WS_CHARS = " \t\n\x0b\x0c\r"  # exactly Java regex \s
 
@@ -100,7 +92,10 @@ def ws_strip(col: Column) -> Column:
 
 def is_nullish(col: Column) -> Column:
     """Null-indicator predicate (reference: core.py:556-559,
-    cleaning_rule.py:182-202)."""
+    cleaning_rule.py:182-202) for queries and oracles. The pipeline's flag
+    comes from the JVM scorer, which folds ASCII letters only (the rule next
+    to TH.NULLISH_TOKENS); Spark's ``lower`` here also folds non-ASCII
+    letters, e.g. U+212A KELVIN SIGN to "k"."""
     norm = F.lower(ws_strip(F.coalesce(col, F.lit(""))))
     return norm.isin(*TH.NULLISH_TOKENS)
 
@@ -176,11 +171,11 @@ def keyword_langid(col: Column) -> Column:
 
 def feature_columns(content: Column) -> dict[str, Column]:
     """The full native feature bundle as standalone expressions (each tree
-    self-contained — fine for one-off queries/oracles). The PIPELINE must use
-    ``with_feature_columns`` instead: these trees each embed their own
-    ``split``, and neither CollapseProject nor codegen subexpression
-    elimination dedupes the copies (measured 24 vs 8 CPU-s for the token
-    family on 72 MB).
+    self-contained — fine for one-off queries/oracles). The pipeline takes
+    the token/alnum stats and is_nullish from the JVM scorer instead: these
+    trees each embed their own ``split``, and neither CollapseProject nor
+    codegen subexpression elimination dedupes the copies (measured 24 vs 8
+    CPU-s for the token family on 72 MB).
 
     Deliberately lambda-free: any higher-order function in the collapsed
     Project disables whole-stage codegen AND subexpression elimination for
@@ -198,39 +193,3 @@ def feature_columns(content: Column) -> dict[str, Column]:
         "is_nullish": is_nullish(content).alias("is_nullish"),
         "is_autogen": is_autogen(content).alias("is_autogen"),
     }
-
-
-def with_feature_columns(df, content_col: str = "content"):
-    """Pipeline form of the feature bundle: the token array is materialized
-    ONCE in its own projection and every count derives from that column
-    reference. CollapseProject keeps a non-cheap expression referenced more
-    than once in its own Project, so the 72 MB split/array work happens one
-    time instead of four (values identical to feature_columns)."""
-    content = F.col(content_col)
-    stripped = ws_strip(content)
-    staged = df.select(
-        "*",
-        F.split(stripped, r"\s+").alias("__toks"),
-        F.length(stripped).alias("__striplen"),
-    )
-    nt = F.when(F.col("__striplen") == 0, F.lit(0)).otherwise(F.size("__toks"))
-    nd = F.when(F.col("__striplen") == 0, F.lit(0)).otherwise(
-        F.size(F.array_distinct(F.col("__toks")))
-    )
-    counted = staged.select(
-        "*", nt.alias("__nt"), nd.alias("__nd")
-    )
-    out = counted.select(
-        "*",
-        n_chars(content).alias("n_chars"),
-        has_long_line(content).alias("has_long_line"),
-        F.col("__nt").alias("n_tokens"),
-        F.col("__nd").alias("n_distinct_tokens"),
-        F.when(F.col("__nt") > 0, F.col("__nd") / F.col("__nt"))
-        .otherwise(F.lit(1.0))
-        .alias("unique_token_ratio"),
-        alnum_ratio(content).alias("alnum_ratio"),
-        is_nullish(content).alias("is_nullish"),
-        is_autogen(content).alias("is_autogen"),
-    )
-    return out.drop("__toks", "__striplen", "__nt", "__nd")

@@ -14,17 +14,24 @@ from __future__ import annotations
 CONF_THRESHOLD = 0.8
 
 # Null-indicator tokens (reference: core.py:556-559 + cleaning_rule.py:182-202).
+# A file is null-ish when its whole content, with ASCII whitespace (the Java
+# \s set) stripped from both ends and ASCII letters lower-cased, equals one
+# of these. Only A-Z fold: a non-ASCII letter never matches, so fullwidth
+# "ＮＵＬＬ" and "unKnown" (U+212A KELVIN SIGN, which Unicode lower-cases
+# to "k") are not null-ish, however much whitespace surrounds them.
 NULLISH_TOKENS = (
     "n/a", "na", "null", "none", "missing", "", "unknown", "tbd", "tba", "todo", "nil",
 )
 
+# The scorer's langid, perplexity and token/alnum stats read at most this
+# many leading characters of a file (is_nullish reads the whole file).
+# Statistical scores settle within the first tens of KB, so the cap bounds
+# scorer work per megabyte file; rules, scrub and hashes see full content.
+SCORE_PREFIX_CHARS = 65536
+
 # Minified / single-long-line detection (reference analog:
 # profiler.py:346-359 length outliers; multimodal_cleaning.py:156-160).
 MAX_LINE_LEN = 1000
-
-# Binary-ish junk: special-character ratio over non-whitespace chars
-# (reference analog: multimodal_cleaning.py:174-177).
-SPECIAL_RATIO_MAX = 0.30
 
 # Binary-ish junk, structure-aware variant actually used by the drop rule:
 # alphanumeric chars / non-whitespace chars. Punctuation-heavy but legitimate

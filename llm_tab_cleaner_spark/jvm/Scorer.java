@@ -77,16 +77,18 @@ public final class Scorer implements UDF1<byte[], Row> {
     /** -log2 P(bucket) over B_PPL buckets. */
     private final float[] pplBits;
     private final byte[][] nullish;
-    private final int nullishMaxBytes;
+    private final int prefixChars;
 
     /**
      * @param languages   language labels, in the model's order
      * @param nullish     the null-ish tokens (ASCII, lower case)
+     * @param prefixChars leading characters the scores read
      * @param langLogprob float32 little-endian, language-major (L × 4096)
      * @param pplBits     float32 little-endian (32768)
      */
     public Scorer(
-            List<String> languages, List<String> nullish, byte[] langLogprob, byte[] pplBits) {
+            List<String> languages, List<String> nullish, int prefixChars,
+            byte[] langLogprob, byte[] pplBits) {
         this.languages = languages.toArray(new String[0]);
         this.nLang = this.languages.length;
         if (nLang < 2 || nLang > 8) {
@@ -102,12 +104,10 @@ public final class Scorer implements UDF1<byte[], Row> {
         }
         this.pplBits = floats(pplBits, B_PPL);
         this.nullish = new byte[nullish.size()][];
-        int maxBytes = 0;
         for (int i = 0; i < nullish.size(); i++) {
             this.nullish[i] = nullish.get(i).getBytes(StandardCharsets.US_ASCII);
-            maxBytes = Math.max(maxBytes, this.nullish[i].length);
         }
-        this.nullishMaxBytes = maxBytes;
+        this.prefixChars = prefixChars;
     }
 
     private static float[] floats(byte[] raw, int expected) {
@@ -127,17 +127,20 @@ public final class Scorer implements UDF1<byte[], Row> {
      */
     public static void register(
             SparkSession spark, String name, String schemaDdl, List<String> languages,
-            List<String> nullish, byte[] langLogprob, byte[] pplBits) {
-        Scorer scorer = new Scorer(languages, nullish, langLogprob, pplBits);
+            List<String> nullish, int prefixChars, byte[] langLogprob, byte[] pplBits) {
+        Scorer scorer = new Scorer(languages, nullish, prefixChars, langLogprob, pplBits);
         spark.udf().register(
             name, functions.udf(scorer, StructType.fromDDL(schemaDdl)).asNondeterministic());
     }
 
-    /** NULL scores as the empty string. */
+    /**
+     * NULL scores as the empty string. The scores read the first
+     * {@code prefixChars} characters; {@code is_nullish} reads all of it.
+     */
     @Override
     public Row call(byte[] text) {
         byte[] b = text == null ? new byte[0] : text;
-        int n = b.length;
+        int n = prefixEnd(b);
 
         // text stats: byte classes, whitespace tokens and their hashes
         int alnum = 0, ws = 0, cont = 0, nt = 0;
@@ -174,7 +177,7 @@ public final class Scorer implements UDF1<byte[], Row> {
         double uniq = nt > 0 ? (double) nd / nt : 1.0;
         int nonspace = n - cont - ws;
         double alnumRatio = nonspace > 0 ? (double) alnum / nonspace : 1.0;
-        boolean isNullish = n - ws <= nullishMaxBytes && isNullishToken(b);
+        boolean isNullish = isNullishToken(b);
 
         // trigram heads: ppl over windows at even row offsets, langid over
         // windows at offsets divisible by 3
@@ -209,6 +212,21 @@ public final class Scorer implements UDF1<byte[], Row> {
         return RowFactory.create(lang, margin, bits, nt, nd, uniq, alnumRatio, isNullish);
     }
 
+    /**
+     * Byte length of the first {@code prefixChars} characters. A character
+     * starts at every byte that is not a UTF-8 continuation byte (0x80-0xBF),
+     * which is how Spark's {@code substring} and {@code length} step through
+     * valid UTF-8.
+     */
+    private int prefixEnd(byte[] b) {
+        if (b.length <= prefixChars) return b.length;
+        int chars = 0;
+        for (int i = 0; i < b.length; i++) {
+            if ((b[i] & 0xC0) != 0x80 && chars++ == prefixChars) return i;
+        }
+        return b.length;
+    }
+
     private static int bucket(byte[] b, int i) {
         return ((b[i] & 0xFF) * 961 + (b[i + 1] & 0xFF) * 31 + (b[i + 2] & 0xFF)) & (B_PPL - 1);
     }
@@ -223,7 +241,10 @@ public final class Scorer implements UDF1<byte[], Row> {
         return h >>> 12;
     }
 
-    /** ASCII-whitespace-stripped, ASCII-lower-cased text is a nullish token. */
+    /**
+     * ASCII-whitespace-stripped, ASCII-lower-cased text is a nullish token.
+     * Only the whitespace at the two ends is read before the length check.
+     */
     private boolean isNullishToken(byte[] b) {
         int lo = 0, hi = b.length;
         while (lo < hi && CLS[b[lo] & 0xFF] == 2) lo++;

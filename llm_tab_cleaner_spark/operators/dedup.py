@@ -140,11 +140,10 @@ def exact_dedup(df: DataFrame, key_cols: list[str], content_col: str) -> DataFra
     )
 
 
-#: Byte bound for the dedup kernels' internal chunking — same contract as
-#: scoring._SCORE_CHUNK_BYTES but sized for these kernels' heavier
+#: Byte bound for the dedup kernels' internal chunking, sized for their
 #: per-input-byte footprint (_batch_token_hashes materializes ~40 bytes of
-#: int64/uint64/bool intermediates per input byte vs the scorer's ~8-16):
-#: a 4 MiB chunk bounds the transient working set near ~200 MB per worker.
+#: int64/uint64/bool intermediates per input byte): a 4 MiB chunk bounds
+#: the transient working set near ~200 MB per Python worker.
 #: Row-count caps can't give this guarantee — 4096 rows of 1 MB docs is a
 #: 4 GB batch — and every kernel here is row-local, so chunking can never
 #: change a result (the batch-composition-invariance contract,

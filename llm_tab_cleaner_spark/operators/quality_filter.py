@@ -5,14 +5,17 @@ Spark-first re-expression of the reference's clean loop
 spark.py:296-337 per-value UDF): all heuristic rules are native Column
 expressions combined with max-confidence-wins semantics
 (cleaning_rule.py:148-175), the scorer (langid + perplexity + token
-stats) is one Java UDF in the same codegen stage, so the plan has no Python
-stage, and the confidence gate (core.py:374-377) becomes
+stats + null-ish check) is one Java UDF in the same codegen stage, so the
+plan has no Python stage, and the confidence gate (core.py:374-377) becomes
 ``keep = drop_confidence < threshold``.
 
 Plan shape (SURVEY.md §7):
 
     content_sha256 → [anti-join state] → [salted repartition] →
-    native features → JVM scorer UDF → rule when-chains → keep/confidence →
+    native features (length, long line, autogen markers) →
+    JVM scorer UDF over the full content (it scores the first
+    TH.SCORE_PREFIX_CHARS characters and checks null-ish on all of it) →
+    rule when-chains → keep/confidence →
     scrub (regexp_replace chain) → clean_sha256 → result + audit
 """
 
@@ -94,7 +97,6 @@ def apply_quality_filter(
     threshold: float = TH.CONF_THRESHOLD,
     num_partitions: int | None = None,
     salt_buckets: int = 16,
-    score_prefix_chars: int = 65536,
 ) -> tuple[DataFrame, ScoringModel]:
     """Score every file; returns a DataFrame with decision + audit columns.
 
@@ -104,19 +106,6 @@ def apply_quality_filter(
     scrub_rules (array<string>), partition_id.
     """
     model = model or default_model()
-
-    if 0 < score_prefix_chars < 1024:
-        # statistical scores need a few hundred trigrams; a tiny prefix
-        # silently changes keep/drop decisions (ROADMAP guard)
-        import warnings
-
-        warnings.warn(
-            f"score_prefix_chars={score_prefix_chars} is below 1024; language/"
-            "perplexity scores over so little text are unreliable — clamping",
-            stacklevel=2,
-        )
-        score_prefix_chars = 1024
-
     out = df.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
     if num_partitions:
@@ -138,32 +127,13 @@ def apply_quality_filter(
         "is_autogen": TF.is_autogen(content),
     }
 
-    # the ONE scorer UDF (langid + perplexity + token/alnum stats), a Java
-    # UDF. Statistical scores stabilize within the first tens of KB, so
-    # score a bounded prefix — at 100 TB this caps scorer work per megabyte
-    # file while rules/scrub/sha still see full content. DOCUMENTED
-    # SEMANTICS (PipelineConfig.score_prefix_chars, README): the token/alnum
-    # stats feeding excessive_repetition and low_alnum_ratio are
-    # prefix-scoped too for files larger than the prefix; 0 disables the cap
-    # and scores full content.
-    if score_prefix_chars:
-        features["_score_text"] = F.substring(content, 1, score_prefix_chars)
-        out, model = with_scores(out.withColumns(features), "_score_text", spark, model)
-        out = out.drop("_score_text")
-        # is_nullish rides the scorer (round-3 VERDICT #6: the native
-        # lower/strip scan was inlined twice into every pushed-down keep
-        # filter). The UDF saw only the prefix, which is exact whenever the
-        # file fits in it; the rare larger file falls back to the native
-        # expression — evaluated per-row only on that branch, so typical
-        # rows never run the regex at all.
-        out = out.withColumn(
-            "is_nullish",
-            F.when(
-                F.col("n_chars") <= F.lit(score_prefix_chars), F.col("is_nullish")
-            ).otherwise(TF.is_nullish(content)),
-        )
-    else:
-        out, model = with_scores(out.withColumns(features), "content", spark, model)
+    # the ONE scorer UDF (langid + perplexity + token/alnum stats + the
+    # null-ish check), a Java UDF over the full content. It scores the first
+    # TH.SCORE_PREFIX_CHARS characters, which caps scorer work per megabyte
+    # file while rules/scrub/sha still see full content; the token/alnum
+    # stats feeding excessive_repetition and low_alnum_ratio are therefore
+    # prefix-scoped for larger files. is_nullish reads the whole file.
+    out, model = with_scores(out.withColumns(features), "content", spark, model)
 
     # rule when-chains → fired array + max-confidence-wins drop confidence.
     # The array keeps null slots for unfired rules: CreateArray is codegen-

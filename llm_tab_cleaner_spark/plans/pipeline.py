@@ -34,16 +34,6 @@ class PipelineConfig:
     num_partitions: int | None = None  # None → let AQE decide (no extra shuffle)
     salt_buckets: int = 16
     state_dir: str | None = None  # enables incremental resume when set
-    # The scorer UDF sees at most this content prefix; 0 = full content.
-    # PREFIX-SCOPED SEMANTICS (deliberate, round-2 ADVICE surfaced): langid,
-    # perplexity AND the token stats (n_tokens, n_distinct_tokens,
-    # unique_token_ratio, alnum_ratio) all come from this prefix, so the
-    # excessive_repetition / low-alnum keep/drop rules for files LARGER than
-    # the prefix judge the first 64 KiB, not the whole file (short_content
-    # cannot misfire: any file over the prefix has far more than 10 tokens).
-    # At 100 TB this caps the scorer's work per megabyte file; set 0
-    # to score full content when whole-file stats matter more than cost.
-    score_prefix_chars: int = 65536
     # a fitted operators.calibration.Calibrator: adds confidence_calibrated
     # (native when-chain / sigmoid, zero UDF) next to the raw confidence
     calibrator: object | None = None
@@ -146,7 +136,6 @@ class CleanPipeline:
             threshold=self.config.confidence_threshold,
             num_partitions=self.config.num_partitions,
             salt_buckets=self.config.salt_buckets,
-            score_prefix_chars=self.config.score_prefix_chars,
         )
         if self.config.calibrator is not None:
             result = result.withColumn(

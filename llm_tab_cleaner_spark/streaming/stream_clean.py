@@ -14,8 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from llm_tab_cleaner_spark.functions import thresholds as TH
-from llm_tab_cleaner_spark.operators.quality_filter import apply_quality_filter
+from llm_tab_cleaner_spark.plans.pipeline import CleanPipeline, PipelineConfig
 
 CODE_FILES_SCHEMA = T.StructType(
     [
@@ -162,29 +161,27 @@ def clean_stream(
     spark: SparkSession,
     output_dir: str,
     checkpoint_dir: str,
-    threshold: float = TH.CONF_THRESHOLD,
     trigger_seconds: float | None = None,
     queryName: str = "clean_stream",
-    config=None,
+    config: PipelineConfig | None = None,
 ):
     """Score a streaming code-files DataFrame and append keep/confidence +
     scrubbed content to a parquet sink with exactly-once checkpointing
     (ST1-ST3: spark.py:401-411's writeStream shape).
 
-    ``config`` (an optional PipelineConfig) enables the same opt-in corpus
-    stages the batch pipeline runs (license gate before the scorer,
-    comment_ratio feature, Gopher dup-line gate): all stateless native
-    projections/filters, so they compose with Structured Streaming
-    unchanged, and their columns ride the sink schema."""
-    if config is not None:
-        from llm_tab_cleaner_spark.plans.pipeline import CleanPipeline
-
-        stream_df = CleanPipeline(spark, config).prepare(stream_df)
-    scored, _model = apply_quality_filter(
-        stream_df, spark, threshold=threshold, num_partitions=None
-    )
+    Scoring is ``CleanPipeline(spark, config).score``, the call a batch run
+    makes, so each file gets the batch decision: ``config`` (default
+    ``PipelineConfig()``) sets the confidence threshold, the calibrator
+    (its ``confidence_calibrated`` column rides the sink) and the opt-in
+    corpus stages (license gate before the scorer, comment_ratio feature,
+    Gopher dup-line gate). All are stateless native projections/filters,
+    so they compose with Structured Streaming unchanged."""
+    scored = CleanPipeline(spark, config or PipelineConfig()).score(stream_df)
     extra = [
-        c for c in ("license_class", "spdx_id", "comment_ratio", "dup_line_frac")
+        c for c in (
+            "license_class", "spdx_id", "comment_ratio", "dup_line_frac",
+            "confidence_calibrated",
+        )
         if c in scored.columns
     ]
     out = scored.select(

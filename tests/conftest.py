@@ -3,6 +3,7 @@ sandbox, codegen JIT ≈ first-use; see .claude/skills/verify/SKILL.md)."""
 
 from __future__ import annotations
 
+import re
 import sys
 
 import pytest
@@ -46,10 +47,14 @@ def assert_jvm_scorer_plan():
     optimized plan of ``result.filter("keep").groupBy().count()``. The
     scorer is registered nondeterministic, so Catalyst keeps it in one
     Project below the keep filter; registered deterministic, it would be
-    inlined into the pushed-down filter and appear twice. The result must
-    read a file scan (``parquet_input``): the optimizer evaluates
-    projections over a ``createDataFrame`` LocalRelation at planning time,
-    which leaves no scorer in the plan to guard."""
+    inlined into the pushed-down filter and appear twice. The scorer owns
+    its input contract: it reads the bare ``content`` column (no prefix
+    ``substring`` column) and nothing recomputes null-ish next to it (no
+    ``ws_strip`` regex). The result must read a file scan
+    (``parquet_input``): the optimizer evaluates projections over a
+    ``createDataFrame`` LocalRelation at planning time, which leaves no
+    scorer in the plan to guard."""
+    from llm_tab_cleaner_spark.functions import thresholds as TH
 
     def check(result) -> None:
         plan = result._jdf.queryExecution().executedPlan().toString()
@@ -57,6 +62,12 @@ def assert_jvm_scorer_plan():
         q = result.filter("keep").groupBy().count()
         opt = q._jdf.queryExecution().optimizedPlan().toString()
         assert opt.count("llm_tab_cleaner_score_") == 1, opt[:3000]
+        scorer_on_content = (
+            r"llm_tab_cleaner_score_[0-9a-f]+\(static_invoke\(Encode\.encode\(content#\d+, "
+        )
+        assert re.search(scorer_on_content, opt), opt[:3000]
+        assert not re.search(rf"substring\([^()]*, {TH.SCORE_PREFIX_CHARS}\)", opt), opt[:3000]
+        assert r"^\s+|\s+$" not in opt, opt[:3000]
 
     return check
 

@@ -36,8 +36,8 @@ def test_keep_filter_has_no_heavy_expression_duplication(spark, tmp_path, assert
     (~3× the whole pipeline's cost). The token/alnum stats now come from the
     scorer UDF (a nondeterministic Project a filter is never pushed
     through), so the optimized keep-count plan must contain ZERO
-    split/array_distinct and at most the two cheap single-scan regex
-    features."""
+    split/array_distinct/regexp_replace; the only regex left is the
+    single-scan long-line feature."""
     import re as _re
 
     from llm_tab_cleaner_spark import CleanPipeline
@@ -50,10 +50,9 @@ def test_keep_filter_has_no_heavy_expression_duplication(spark, tmp_path, assert
     plan = q._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("split(") == 0, plan[:2000]
     assert plan.count("array_distinct") == 0
-    # round-4: is_nullish rides the scorer UDF, so the only regexes left are
-    # the larger-than-prefix fallback's 2 branch-guarded refs (nullish rule
-    # + short rule) that never execute on files fitting the scoring prefix
-    assert plan.count("regexp_replace") <= 2, plan[:2000]
+    # is_nullish comes from the scorer UDF for every file, whatever its
+    # length, so no ws_strip regexp_replace is left in the keep filter
+    assert plan.count("regexp_replace") == 0, plan[:2000]
     assert_jvm_scorer_plan(result)
 
 

@@ -1,16 +1,18 @@
-"""Scoring-prefix cap: huge files are scored on a bounded prefix while the
-rules/scrub/sha paths still see full content."""
+"""Scoring-prefix cap: huge files are scored on a bounded prefix
+(thresholds.SCORE_PREFIX_CHARS) while the rules/scrub/sha paths still see
+full content."""
 
 from __future__ import annotations
 
 import hashlib
 
 import pandas as pd
-from pyspark.sql import functions as F
+
+from llm_tab_cleaner_spark.functions import thresholds as TH
 
 
 def test_huge_file_scored_on_prefix_but_scrubbed_fully(spark):
-    from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
+    from llm_tab_cleaner_spark import CleanPipeline
 
     # realistic varied body: many template instantiations (low perplexity,
     # healthy token diversity), ~300 KB total
@@ -24,15 +26,14 @@ def test_huge_file_scored_on_prefix_but_scrubbed_fully(spark):
     ]
     tail_pii = "\n# contact: deep@tail.com at 10.9.8.7\n"
     huge = "\n".join(parts) + tail_pii  # PII beyond any reasonable scoring prefix
-    assert len(huge) > 200_000
+    assert len(huge) > 3 * TH.SCORE_PREFIX_CHARS
     pdf = pd.DataFrame(
         {
             "repo": ["r"], "path": ["big.py"], "commit": ["c" * 40],
             "lang": ["python"], "content": [huge],
         }
     )
-    cfg = PipelineConfig(score_prefix_chars=4096)
-    result, _ = CleanPipeline(spark, cfg).run(spark.createDataFrame(pdf))
+    result, _ = CleanPipeline(spark).run(spark.createDataFrame(pdf))
     row = result.select("keep", "lang_pred", "content_clean", "clean_sha256").collect()[0]
     assert row["keep"] and row["lang_pred"] == "python"
     # scrub operated on the FULL text, beyond the scoring prefix
@@ -40,17 +41,3 @@ def test_huge_file_scored_on_prefix_but_scrubbed_fully(spark):
     assert "deep@tail.com" not in row["content_clean"]
     expected = huge.replace("deep@tail.com", "<EMAIL>").replace("10.9.8.7", "<IP_ADDRESS>")
     assert row["clean_sha256"] == hashlib.sha256(expected.encode()).hexdigest()
-
-
-def test_prefix_does_not_change_fixture_decisions(spark, code_files_small):
-    from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
-
-    cf, _ = code_files_small
-    df = spark.createDataFrame(cf.iloc[:300])
-    full, _ = CleanPipeline(spark, PipelineConfig(score_prefix_chars=0)).run(df)
-    pref, _ = CleanPipeline(spark, PipelineConfig(score_prefix_chars=65536)).run(df)
-    a = full.select("commit", "keep", "confidence").toPandas()
-    b = pref.select("commit", "keep", "confidence").toPandas()
-    j = a.merge(b, on="commit", suffixes=("_f", "_p"))
-    assert (j.keep_f == j.keep_p).all()
-    assert (j.confidence_f == j.confidence_p).all()

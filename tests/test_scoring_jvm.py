@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from llm_tab_cleaner_spark.fixtures.code_files import generate_code_files
+from llm_tab_cleaner_spark.functions import thresholds as TH
 from llm_tab_cleaner_spark.functions.scoring import default_model, with_scores
 
 FIELDS = (
@@ -80,13 +81,21 @@ def _adversarial_rows() -> list:
         b"a" * 23,  # 7 windows: no confident call
         b"tok " * 5000,
         b"x" * 70_000,
+        # longer than the scoring prefix: multi-byte characters on both
+        # sides of the cut, and null-ish tokens behind long padding
+        ("日本語のテキスト " * 9000).encode("utf-8"),
+        ("é" * (TH.SCORE_PREFIX_CHARS - 1) + "🙂" + "tail words").encode("utf-8"),
+        ("a" * TH.SCORE_PREFIX_CHARS + "é").encode("utf-8"),
+        b" " * 70_000 + b"NULL" + b"\n" * 70_000,
+        b" " * 70_000 + b"real code here",
+        b"\x80" * 70_000 + b" trailing continuation bytes",
     ]
 
 
 def test_jvm_scorer_equals_reference_on_adversarial_rows(spark, parquet_input):
     """NULL, empty, whitespace-only, padded/upper-case nullish tokens,
-    2-3 byte rows, a 1 MB row, non-ASCII, invalid UTF-8, all-'a' rows and
-    the 8-window langid boundary."""
+    2-3 byte rows, a 1 MB row, non-ASCII, invalid UTF-8, all-'a' rows, the
+    8-window langid boundary, and rows longer than the scoring prefix."""
     _jvm_vs_reference(spark, parquet_input, _adversarial_rows())
 
 
@@ -117,32 +126,42 @@ def test_jvm_scorer_breaks_logit_ties_like_numpy(spark, parquet_input):
     _jvm_vs_reference(spark, parquet_input, raw, tied)
 
 
-@pytest.mark.parametrize("prefix", [0, 65536])
+@pytest.mark.parametrize("prefix", [0, TH.SCORE_PREFIX_CHARS])
 def test_pipeline_scores_equal_reference(spark, parquet_input, prefix):
-    """Through ``apply_quality_filter``: the score fields equal
-    ``score_batch`` of the scored prefix (the full text at 0), and
-    ``is_nullish`` — the prefix's flag for files that fit it, the native
-    check on the full text otherwise — equals ``score_batch`` of the full
-    text."""
+    """Through ``apply_quality_filter``: at ``prefix`` 0 all 8 fields equal
+    ``score_batch`` of the full texts; otherwise the 7 score fields equal
+    ``score_batch`` of each text's first ``prefix`` characters (Python
+    slices code points, as Spark's ``substring`` does). A token's null-ish
+    flag is the same however much whitespace pads it, also past the
+    prefix; only ASCII letters fold (U+212A KELVIN SIGN does not match
+    "k")."""
     from llm_tab_cleaner_spark.operators.quality_filter import apply_quality_filter
 
     cf, _ = generate_code_files(200, seed=9)
+    pad = " " * 70_000
+    nullish = {"UNKNOWN": True, "un\u212anown": False}
+    padded = [t for tok in nullish for t in (tok, pad + tok, tok + pad, pad + tok + pad)]
     texts = list(cf.content) + [
         None, "", "   ", " N/A ", "a" * 3000,
         " " * 70_000,                     # nullish in prefix and in full
         " " * 70_000 + "real code here",  # nullish prefix, not nullish file
         "def f(x):\n    return x\n" * 4000,  # > 65,536 chars
-    ]
+        "def größe(x):  # 🙂\n    return x\n" * 3000,  # > prefix, multi-byte
+    ] + padded
     pdf = pd.DataFrame({
         "repo": "r", "path": [f"p{i}" for i in range(len(texts))],
         "commit": "c", "lang": "python", "content": texts,
     })
     df = parquet_input(pdf, "repo string, path string, commit string, lang string, content string")
-    out, model = apply_quality_filter(df, spark, score_prefix_chars=prefix)
+    out, model = apply_quality_filter(df, spark)
     got = out.select("path", *FIELDS).toPandas().set_index("path").loc[pdf.path].reset_index()
-    scored = [t if (t is None or not prefix) else t[:prefix] for t in texts]
-    _assert_fields_equal(got, model.score_batch(pd.Series(scored)), FIELDS[:-1])
-    _assert_fields_equal(got, model.score_batch(pd.Series(texts)), ("is_nullish",))
+    if prefix:
+        prefixes = [t if t is None else t[:prefix] for t in texts]
+        _assert_fields_equal(got, model.score_batch(pd.Series(prefixes)), FIELDS[:-1])
+    else:
+        _assert_fields_equal(got, model.score_batch(pd.Series(texts)))
+    want = [flag for flag in nullish.values() for _ in range(4)]
+    assert got.is_nullish.tolist()[-len(padded):] == want
 
 
 def test_with_scores_without_scorer_class_names_the_fix(spark, monkeypatch):

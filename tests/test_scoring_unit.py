@@ -76,21 +76,3 @@ def test_batch_is_nullish_matches_native_semantics():
     got = list(out.is_nullish)
     want = [native(v) for v in vals]
     assert got == want, list(zip(vals, got, want))
-
-
-def test_score_batch_byte_chunking_is_value_identical(monkeypatch):
-    """score_batch splits oversized batches into byte-bounded chunks (the
-    Arrow row cap no longer bounds memory — round-4); every score is
-    row-local, so chunked and unchunked results must be identical."""
-    from llm_tab_cleaner_spark.functions import scoring as S
-
-    cf, _ = generate_code_files(500, seed=21)
-    m = default_model()
-    whole = m.score_batch(cf.content).reset_index(drop=True)
-    monkeypatch.setattr(S, "_SCORE_CHUNK_BYTES", 10_000)  # force many chunks
-    chunked = m.score_batch(cf.content).reset_index(drop=True)
-    pd.testing.assert_frame_equal(whole, chunked)
-    # a single row larger than the cap still scores (chunk of one)
-    monkeypatch.setattr(S, "_SCORE_CHUNK_BYTES", 100)
-    big = m.score_batch(pd.Series(["word " * 200, "x"]))
-    assert len(big) == 2 and big.n_tokens.iloc[0] == 200

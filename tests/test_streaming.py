@@ -40,6 +40,50 @@ def test_stream_matches_batch(spark, code_files_small, tmp_path):
     assert (j.clean_sha256_b == j.clean_sha256_s).all()
 
 
+def test_stream_applies_config_threshold_and_calibrator(spark, code_files_small, tmp_path):
+    """clean_stream scores the way a batch run does: the config's
+    confidence threshold and calibrator reach the sink, whose keep,
+    confidence and confidence_calibrated equal CleanPipeline(spark,
+    cfg).run on the same rows."""
+    from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
+    from llm_tab_cleaner_spark.streaming.stream_clean import clean_stream, file_stream_source
+
+    cf, labels = code_files_small
+    cf = cf.iloc[:300]
+    fitted = CleanPipeline(spark)
+    default, _ = fitted.run(spark.createDataFrame(cf))
+    fitted.fit_calibration(default, spark.createDataFrame(labels), method="isotonic")
+    cfg = PipelineConfig(confidence_threshold=0.5, calibrator=fitted.config.calibrator)
+
+    src = str(tmp_path / "src_cfg")
+    os.makedirs(src)
+    spark.createDataFrame(cf.iloc[:150]).coalesce(1).write.mode("append").parquet(src)
+    spark.createDataFrame(cf.iloc[150:]).coalesce(1).write.mode("append").parquet(src)
+    out_dir = str(tmp_path / "out_cfg")
+    q = clean_stream(
+        file_stream_source(spark, src, max_files_per_trigger=1),
+        spark,
+        output_dir=out_dir,
+        checkpoint_dir=str(tmp_path / "ckpt_cfg"),
+        queryName="cfg_stream",
+        config=cfg,
+    )
+    q.awaitTermination(300)
+
+    keys = ["repo", "path", "commit"]
+    cols = ["keep", "confidence", "confidence_calibrated"]
+    got = spark.read.parquet(out_dir).toPandas()
+    batch, _ = CleanPipeline(spark, cfg).run(spark.createDataFrame(cf))
+    want = batch.select(*keys, *cols).toPandas()
+    j = want.merge(got, on=keys, suffixes=("_b", "_s"), validate="1:1")
+    assert len(j) == len(cf)
+    for c in cols:
+        assert (j[f"{c}_b"] == j[f"{c}_s"]).all(), c
+    # the threshold decides rows here: the default gate keeps files 0.5 drops
+    at_default = default.select(*keys, "keep").toPandas().merge(j, on=keys)
+    assert (at_default.keep != at_default.keep_s).any()
+
+
 def test_stream_restart_resumes_from_checkpoint(spark, code_files_small, tmp_path):
     from llm_tab_cleaner_spark.streaming.stream_clean import clean_stream, file_stream_source
 
