@@ -1,6 +1,6 @@
 """Build the spark-submit artifacts: dist/llm_tab_cleaner_spark.zip for
---py-files and dist/llm_tab_cleaner_spark-scorer.jar (the JVM scorer) for
---jars."""
+--py-files and dist/llm_tab_cleaner_spark-udfs.jar (the JVM scorer and
+signature kernels) for --jars."""
 
 from __future__ import annotations
 
@@ -28,14 +28,14 @@ def build(out: str | None = None) -> str:
 
 
 def build_jar(out: str | None = None) -> str:
-    """Copy the compiled scorer jar (compiling it on a cache miss) to ``out``."""
+    """Copy the compiled UDF jar (compiling it on a cache miss) to ``out``."""
     if ROOT not in sys.path:  # run as a script from jobs/
         sys.path.insert(0, ROOT)
-    from llm_tab_cleaner_spark.jvm import scorer_jar
+    from llm_tab_cleaner_spark.jvm import JAR_NAME, udf_jar
 
-    out = out or os.path.join(ROOT, "dist", "llm_tab_cleaner_spark-scorer.jar")
+    out = out or os.path.join(ROOT, "dist", JAR_NAME)
     os.makedirs(os.path.dirname(out), exist_ok=True)
-    shutil.copyfile(scorer_jar(), out)
+    shutil.copyfile(udf_jar(), out)
     return out
 
 

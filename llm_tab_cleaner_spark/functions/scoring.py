@@ -23,7 +23,6 @@ across a batch, with per-row reductions via ``np.add.reduceat`` /
 
 from __future__ import annotations
 
-import hashlib
 import math
 from dataclasses import dataclass
 
@@ -32,6 +31,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from llm_tab_cleaner_spark import jvm as J
 from llm_tab_cleaner_spark.functions import thresholds as TH
 from llm_tab_cleaner_spark.functions.corpus import training_corpus
 from llm_tab_cleaner_spark.jvm import SCORER_CLASS
@@ -344,23 +344,6 @@ def default_model() -> ScoringModel:
     return _MODEL_CACHE["default"]
 
 
-def _scorer_class(spark: SparkSession):
-    from py4j.java_gateway import JavaClass
-
-    cls = spark._jvm
-    for part in SCORER_CLASS.split("."):
-        cls = getattr(cls, part)
-    if not isinstance(cls, JavaClass):
-        raise RuntimeError(
-            f"the JVM scorer class {SCORER_CLASS} is not on the driver classpath. "
-            "Create the session with llm_tab_cleaner_spark.session.build_session "
-            "(it compiles the jar and sets spark.jars), or, under spark-submit, "
-            "build the jar with `python jobs/package.py` and pass it with "
-            "--jars dist/llm_tab_cleaner_spark-scorer.jar."
-        )
-    return cls
-
-
 def _scorer_function(spark: SparkSession, model: ScoringModel) -> str:
     """Name of the session function scoring with ``model``; registers the
     Java UDF on first use in a session. The name carries a hash of the model
@@ -369,14 +352,11 @@ def _scorer_function(spark: SparkSession, model: ScoringModel) -> str:
     lang = np.ascontiguousarray(model.lang_logprob, dtype="<f4").tobytes()
     ppl = np.ascontiguousarray(model.ppl_bits_table, dtype="<f4").tobytes()
     params = repr((model.languages, TH.NULLISH_TOKENS, TH.SCORE_PREFIX_CHARS))
-    digest = hashlib.sha256(params.encode() + lang + ppl)
-    name = f"llm_tab_cleaner_score_{digest.hexdigest()[:16]}"
-    if not spark.catalog.functionExists(name):
-        _scorer_class(spark).register(
-            spark._jsparkSession, name, SCORE_SCHEMA, list(model.languages),
-            list(TH.NULLISH_TOKENS), TH.SCORE_PREFIX_CHARS, lang, ppl,
-        )
-    return name
+    return J.session_udf(
+        spark, "llm_tab_cleaner_score", params.encode() + lang + ppl, SCORER_CLASS, "register",
+        SCORE_SCHEMA, list(model.languages), list(TH.NULLISH_TOKENS), TH.SCORE_PREFIX_CHARS,
+        lang, ppl,
+    )
 
 
 def with_scores(df, content_col: str, spark: SparkSession, model: ScoringModel | None = None):

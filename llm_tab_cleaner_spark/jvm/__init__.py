@@ -1,17 +1,21 @@
-"""The JVM scorer jar: ``Scorer.java`` compiled once per source version.
+"""The JVM UDF jar: every ``*.java`` here compiled once per source version.
 
-``scorer_jar()`` returns the path of a jar holding
-``llm_tab_cleaner_spark.jvm.Scorer``, compiling it with the JDK's ``javac``
-against the Spark jars PySpark ships when the per-user cache has no jar for
-this source and Spark version. ``build_session`` puts it on ``spark.jars``;
-for spark-submit, ``python jobs/package.py`` copies it into ``dist/`` for
-``--jars``. There is no Python fallback: without ``javac`` (and no cached
-jar) this raises, saying what to install.
+``udf_jar()`` returns the path of a jar holding the package's Java UDFs
+(``Scorer``, the quality-filter scorer, and ``Signatures``, the near-dup
+signature kernels), compiling them with the JDK's ``javac`` against the
+Spark jars PySpark ships when the per-user cache has no jar for these
+sources and this Spark version. ``build_session`` puts it on
+``spark.jars``; for spark-submit, ``python jobs/package.py`` copies it into
+``dist/`` for ``--jars``. There is no Python fallback: without ``javac``
+(and no cached jar) this raises, saying what to install.
 
 The cache is ``$XDG_CACHE_HOME/llm_tab_cleaner_spark`` (default
-``~/.cache/llm_tab_cleaner_spark``), keyed by a hash of the source and the
-PySpark version, so a changed source or Spark upgrade compiles afresh and an
-unchanged one never does.
+``~/.cache/llm_tab_cleaner_spark``), keyed by a hash of all the sources and
+the PySpark version, so a changed source or Spark upgrade compiles afresh
+and an unchanged one never does.
+
+``session_udf`` registers a UDF under a name carrying a hash of its
+parameters, once per session.
 """
 
 from __future__ import annotations
@@ -25,7 +29,8 @@ import zipfile
 from importlib import resources
 
 SCORER_CLASS = "llm_tab_cleaner_spark.jvm.Scorer"
-_SOURCE = "Scorer.java"
+SIGNATURES_CLASS = "llm_tab_cleaner_spark.jvm.Signatures"
+JAR_NAME = "llm_tab_cleaner_spark-udfs.jar"
 
 
 def cache_dir() -> str:
@@ -41,12 +46,12 @@ def _javac() -> str:
     if found:
         return found
     raise RuntimeError(
-        "javac not found: the quality-filter scorer runs as a Java UDF that "
-        "build_session compiles once into "
+        "javac not found: the scorer and the near-dup signature kernels run "
+        "as Java UDFs that build_session compiles once into "
         f"{cache_dir()}. Install a JDK 17+ (e.g. `apt-get install "
         "openjdk-17-jdk-headless`) or point JAVA_HOME at one, then rerun. "
         "For spark-submit, build the jar where a JDK exists "
-        "(`python jobs/package.py`) and pass it with --jars."
+        f"(`python jobs/package.py`) and pass it with --jars dist/{JAR_NAME}."
     )
 
 
@@ -56,14 +61,20 @@ def _spark_jars_dir() -> str:
     return os.path.join(_find_spark_home(), "jars")
 
 
-def scorer_jar() -> str:
-    """Path of the compiled scorer jar, compiling it on a cache miss."""
+def udf_jar() -> str:
+    """Path of the compiled UDF jar, compiling it on a cache miss."""
     import pyspark
 
-    source = resources.files(__package__).joinpath(_SOURCE).read_bytes()
-    key = hashlib.sha256(source + pyspark.__version__.encode()).hexdigest()[:16]
+    pkg = resources.files(__package__)
+    sources = {
+        p.name: p.read_bytes() for p in sorted(pkg.iterdir(), key=lambda p: p.name)
+        if p.name.endswith(".java")
+    }
+    digest = hashlib.sha256(pyspark.__version__.encode())
+    for name, body in sources.items():
+        digest.update(name.encode() + b"\0" + body)
     cache = cache_dir()
-    jar = os.path.join(cache, f"scorer-{key}.jar")
+    jar = os.path.join(cache, f"udfs-{digest.hexdigest()[:16]}.jar")
     if os.path.exists(jar):
         return jar
 
@@ -71,21 +82,23 @@ def scorer_jar() -> str:
     os.makedirs(cache, exist_ok=True)
     staging = tempfile.mkdtemp(prefix="build-", dir=cache)
     try:
-        src = os.path.join(staging, _SOURCE)
-        with open(src, "wb") as fh:
-            fh.write(source)
+        srcs = []
+        for name, body in sources.items():
+            srcs.append(os.path.join(staging, name))
+            with open(srcs[-1], "wb") as fh:
+                fh.write(body)
         classes = os.path.join(staging, "classes")
         proc = subprocess.run(
             [
                 javac, "--release", "17", "-nowarn", "-encoding", "UTF-8",
-                "-cp", os.path.join(_spark_jars_dir(), "*"), "-d", classes, src,
+                "-cp", os.path.join(_spark_jars_dir(), "*"), "-d", classes, *srcs,
             ],
             capture_output=True,
             text=True,
         )
         if proc.returncode != 0:
-            raise RuntimeError(f"compiling {_SOURCE} failed:\n{proc.stderr[-4000:]}")
-        tmp_jar = os.path.join(staging, "scorer.jar")
+            raise RuntimeError(f"compiling {', '.join(sources)} failed:\n{proc.stderr[-4000:]}")
+        tmp_jar = os.path.join(staging, "udfs.jar")
         with zipfile.ZipFile(tmp_jar, "w", zipfile.ZIP_DEFLATED) as zf:
             zf.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
             for dirpath, _dirs, files in sorted(os.walk(classes)):
@@ -96,3 +109,32 @@ def scorer_jar() -> str:
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     return jar
+
+
+def _jvm_class(spark, class_name: str):
+    """The py4j handle of ``class_name``; raises naming the fix when the
+    session's JVM was started without the UDF jar."""
+    from py4j.java_gateway import JavaClass
+
+    cls = spark._jvm
+    for part in class_name.split("."):
+        cls = getattr(cls, part)
+    if not isinstance(cls, JavaClass):
+        raise RuntimeError(
+            f"the JVM UDF class {class_name} is not on the driver classpath. "
+            "Create the session with llm_tab_cleaner_spark.session.build_session "
+            "(it compiles the jar and sets spark.jars), or, under spark-submit, "
+            "build the jar with `python jobs/package.py` and pass it with "
+            f"--jars dist/{JAR_NAME}."
+        )
+    return cls
+
+
+def session_udf(spark, prefix: str, params: bytes, class_name: str, method: str, *args) -> str:
+    """Name of the session function ``{prefix}_{hash of params}``. On first
+    use in a session, the static ``class_name.method(session, name, *args)``
+    registers it, so each (session, parameters) registers once."""
+    name = f"{prefix}_{hashlib.sha256(params).hexdigest()[:16]}"
+    if not spark.catalog.functionExists(name):
+        getattr(_jvm_class(spark, class_name), method)(spark._jsparkSession, name, *args)
+    return name

@@ -6,14 +6,15 @@ SimHash, embedding LSH and n-gram Jaccard verification. Scale notes:
 
 * exact: hash-groupBy — one shuffle on the 16-byte digest, map-side combine.
 * near-dup pairs (minhash, simhash, embedding): each operator computes a
-  slim signature frame (one Arrow-batched UDF) and hands it to ONE banded-LSH
-  core, ``_banded_pairs``: materialize the signatures once, posexplode each
-  row's per-band keys to (band, bucket), drop over-cap buckets
-  (``_cap_buckets``), self-join on (band, bucket) with id_a < id_b. That
-  shuffle is keyed on small band keys, never on document text or vectors.
-  Per operator remain only the key function, the degenerate rows that never
-  band (NULL minhash, zero simhash, all-zero vector) and the verify step
-  (none, bit_count(xor) <= d, cosine), followed by one distinct().
+  slim signature frame (one Java UDF from ``jvm/Signatures.java``, no Python
+  stage) and hands it to ONE banded-LSH core, ``_banded_pairs``: materialize
+  the signatures once, posexplode each row's per-band keys to (band,
+  bucket), drop over-cap buckets (``_cap_buckets``), self-join on (band,
+  bucket) with id_a < id_b. That shuffle is keyed on small band keys, never
+  on document text or vectors. Per operator remain only the key function,
+  the degenerate rows that never band (NULL minhash, zero simhash, all-zero
+  vector) and the verify step (none, bit_count(xor) <= d, cosine), followed
+  by one distinct().
 """
 
 from __future__ import annotations
@@ -25,6 +26,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from llm_tab_cleaner_spark import jvm as J
+from llm_tab_cleaner_spark.operators.similarity import (
+    banded_buckets,
+    dot_expr,
+    dot_expr_unrolled,
+    norm_expr,
+)
 
 _MERSENNE = (1 << 61) - 1
 
@@ -174,17 +183,6 @@ def _byte_chunks(texts: pd.Series, max_bytes: int = _DEDUP_CHUNK_BYTES):
         yield texts.iloc[start:]
 
 
-def _shingle_hashes(text: str, k: int) -> np.ndarray:
-    data = np.frombuffer(text.encode("utf-8", "replace"), dtype=np.uint8)
-    if data.size < k:
-        return np.zeros(0, dtype=np.int64)  # no shingles → degenerate doc
-    x = data.astype(np.int64)
-    h = np.zeros(data.size - k + 1, dtype=np.int64)
-    for j in range(k):
-        h = (h * 257 + x[j : data.size - k + 1 + j]) % _MERSENNE
-    return np.unique(h)
-
-
 def minhash_signatures(
     df: DataFrame,
     id_cols: list[str],
@@ -195,55 +193,28 @@ def minhash_signatures(
 ) -> DataFrame:
     """id_cols + minhash signature (array<bigint>, length num_hashes).
 
-    One iterator pandas UDF; per batch, all shingle hashes are concatenated
-    and the per-row min over each of the `num_hashes` permutations is taken
-    with np.minimum.reduceat — vectorized across the batch.
+    One Java UDF (``Signatures.MinHash`` in ``jvm/Signatures.java``) over
+    the content's UTF-8 bytes: shingle hashes over every ``shingle_k``-byte
+    window, then per permutation the minimum of ``(s * a + b) mod 2^61-1``
+    (wrapping int64 arithmetic). The seed-``seed`` permutations are drawn
+    here, on the driver, and travel inside the UDF instance.
 
     Docs with NO shingles (shorter than ``shingle_k`` bytes — empty or
     whitespace-only content) get a NULL signature: every such doc would
     otherwise share one identical signature and land in the SAME bucket of
-    EVERY band, creating a quadratic reducer at corpus scale (round-2
-    VERDICT "What's wrong" #3). They are exact-dup material — route them
-    through exact_dedup instead; lsh_candidate_pairs skips NULLs.
+    EVERY band, creating a quadratic reducer at corpus scale. They are
+    exact-dup material — route them through exact_dedup instead;
+    lsh_candidate_pairs skips NULLs.
     """
     rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64)
-    b = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64)
-
-    def _sig_batch(texts: pd.Series) -> pd.Series:
-        per_row = [
-            _shingle_hashes(t if isinstance(t, str) else "", shingle_k) for t in texts
-        ]
-        empty = np.fromiter((p.size == 0 for p in per_row), dtype=bool, count=len(per_row))
-        # sentinel segment for reduceat; nulled out below
-        per_row = [p if p.size else np.zeros(1, dtype=np.int64) for p in per_row]
-        lens = np.fromiter((p.size for p in per_row), dtype=np.int64, count=len(per_row))
-        blob = np.concatenate(per_row) if per_row else np.zeros(0, dtype=np.int64)
-        starts = np.zeros(len(per_row), dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        sigs = np.empty((len(per_row), num_hashes), dtype=np.int64)
-        # one 1-D pass per permutation: np.minimum.reduceat over axis 0
-        # of a 2-D array falls into a slow per-segment-per-column outer
-        # loop (measured 42 s vs 1 s for the same values on 1M shingles)
-        for j in range(num_hashes):
-            mj = (blob * a[j] + b[j]) % _MERSENNE
-            sigs[:, j] = np.minimum.reduceat(mj, starts)
-        return pd.Series(
-            [None if e else s for e, s in zip(empty, sigs)], dtype=object
-        )
-
-    @F.pandas_udf("array<long>")
-    def sig_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # byte-bounded chunks (not row-count): the shingle blob + per-
-        # permutation modmul each allocate ~8 bytes per input byte, so an
-        # unbounded batch of large docs would blow the per-worker working
-        # set (round-4 VERDICT #1). Signatures are row-local — chunking
-        # cannot change any value.
-        for texts in it:
-            for chunk in _byte_chunks(texts):
-                yield _sig_batch(chunk)
-
-    return df.select(*id_cols, sig_udf(F.col(content_col)).alias("minhash"))
+    a = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype("<i8").tobytes()
+    b = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64).astype("<i8").tobytes()
+    name = J.session_udf(
+        df.sparkSession, "llm_tab_cleaner_minhash", repr(shingle_k).encode() + a + b,
+        J.SIGNATURES_CLASS, "registerMinHash", a, b, shingle_k,
+    )
+    sig = F.call_function(name, F.encode(F.col(content_col), "UTF-8"))
+    return df.select(*id_cols, sig.alias("minhash"))
 
 
 def lsh_candidate_pairs(
@@ -261,7 +232,7 @@ def lsh_candidate_pairs(
     only ids + band keys — documents never shuffle. ``sig_df`` should be
     localCheckpointed when it feeds other consumers too (the estimate
     does); otherwise it is checkpointed here and those consumers still
-    replay the signature UDF.
+    recompute the signatures (scan plus the MinHash UDF).
 
     Skew guards: NULL signatures (degenerate docs, see minhash_signatures)
     never enter banding, and any (band, bucket) holding more than
@@ -299,7 +270,9 @@ def minhash_jaccard_estimate(
     — integer arithmetic, identical values to the lambda fold, which is a
     CodegenFallback evaluated interpreted per slot per pair (the
     pair-count-proportional cost of this operator); signatures of any
-    other width fall back to the fold."""
+    other width fall back to the fold, which also keeps the chain out of
+    whole-stage codegen (see similarity.dot_expr_unrolled for why that is
+    faster)."""
     a = sig_df.select(F.col(id_col).alias(f"{id_col}_a"), F.col("minhash").alias("_sa"))
     b = sig_df.select(F.col(id_col).alias(f"{id_col}_b"), F.col("minhash").alias("_sb"))
     eq = F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int"))
@@ -334,7 +307,8 @@ def _batch_token_hashes(texts: pd.Series) -> tuple[np.ndarray, np.ndarray, int]:
     a polynomial accumulation mod 2^64 (weight P^offset-in-token, one
     np.add.reduceat) finalized with murmur3's fmix64. Returns
     ``(h, tok_row, n_rows)``: hash and owning row index per token, in
-    document order. Shared kernel of SimHash and the n-gram hasher.
+    document order. Kernel of the n-gram hashers; the JVM SimHash
+    (``simhash_signatures``) hashes tokens the same way.
     """
     raw = [t.encode("utf-8", "replace") if isinstance(t, str) else b"" for t in texts]
     n = len(raw)
@@ -381,48 +355,21 @@ def _batch_token_hashes(texts: pd.Series) -> tuple[np.ndarray, np.ndarray, int]:
     return h, tok_row, n
 
 
-def _batch_simhash(texts: pd.Series) -> np.ndarray:
-    """SimHash for every row of an Arrow batch — zero per-row/per-token Python.
-
-    Token hashes from the shared _batch_token_hashes kernel; per-row bit
-    votes from 64 weighted bincounts. Replaces the per-byte Python FNV loop
-    flagged in round 1 (VERDICT "What's wrong" #2).
-    """
-    h, tok_row, n = _batch_token_hashes(texts)
-    out = np.zeros(n, dtype=np.int64)
-    if h.size == 0:
-        return out
-    tok_count = np.bincount(tok_row, minlength=n)
-    ones = np.empty((n, 64), dtype=np.float64)
-    for j in range(64):
-        ones[:, j] = np.bincount(
-            tok_row, weights=((h >> np.uint64(j)) & np.uint64(1)).astype(np.float64),
-            minlength=n,
-        )
-    bit_set = ones * 2 > tok_count[:, None]  # majority vote (ties → 0, as before)
-    packed = (
-        bit_set.astype(np.uint64) << np.arange(64, dtype=np.uint64)[None, :]
-    ).sum(axis=1, dtype=np.uint64)
-    out = packed.view(np.int64).copy()
-    out[tok_count == 0] = 0
-    return out
-
-
 def simhash_signatures(
     df: DataFrame, id_cols: list[str], content_col: str, seed: int = 42
 ) -> DataFrame:
-    """64-bit SimHash over whitespace tokens (fully vectorized per batch)."""
-
-    @F.pandas_udf("long")
-    def sim_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # byte-bounded chunks: _batch_token_hashes allocates ~40 bytes of
-        # intermediates per input byte (see _DEDUP_CHUNK_BYTES); signatures
-        # are row-local, so chunking cannot change any value
-        for texts in it:
-            for chunk in _byte_chunks(texts):
-                yield pd.Series(_batch_simhash(chunk))
-
-    return df.select(*id_cols, sim_udf(F.col(content_col)).alias("simhash"))
+    """id_cols + 64-bit SimHash (bigint) over the content's whitespace
+    tokens, from one Java UDF (``Signatures.SimHash`` in
+    ``jvm/Signatures.java``): tokens split on ASCII whitespace bytes, each
+    hashed with the wrapping polynomial + fmix64 of ``_batch_token_hashes``,
+    and a majority vote per bit. A text with no token (NULL, empty,
+    whitespace only) gets 0. ``seed`` is accepted for API compatibility;
+    the signature does not depend on it."""
+    name = J.session_udf(
+        df.sparkSession, "llm_tab_cleaner_simhash", b"", J.SIGNATURES_CLASS, "registerSimHash"
+    )
+    sig = F.call_function(name, F.encode(F.col(content_col), "UTF-8"))
+    return df.select(*id_cols, sig.alias("simhash"))
 
 
 def simhash_near_dup_pairs(
@@ -451,7 +398,7 @@ def simhash_near_dup_pairs(
         operating point.
 
     Skew guards: the all-zero signature (no tokens — empty/whitespace-only
-    docs, which _batch_simhash maps to 0) never enters banding (exact-dup
+    docs, which simhash_signatures maps to 0) never enters banding (exact-dup
     material, route through exact_dedup), and any (table, key) bucket
     larger than ``max_bucket_size`` is dropped before the self-join —
     identical-signature clusters that big are exact-dup class, and their
@@ -522,11 +469,13 @@ def embedding_near_dup_pairs(
     ``dim`` (optional): the known vector width. When given, the per-pair
     dot product uses the unrolled add chain (bit-identical values, see
     similarity.dot_expr_unrolled) instead of the interpreted lambda fold —
-    the verify join is the pair-count-proportional cost here.
+    the verify join is the pair-count-proportional cost here — and the LSH
+    planes are drawn for that width (without it, the width is read from one
+    row).
 
     Default (``method="lsh"``, the validated path): banded random-hyperplane
-    LSH — every vector gets `bands` bucket keys (one matmul per Arrow batch
-    against a (dim, bands*planes_per_band) plane matrix), candidates are
+    LSH — every vector gets `bands` bucket keys (``similarity.banded_buckets``,
+    one Java UDF against a (dim, bands*planes_per_band) plane matrix), candidates are
     pairs sharing ≥1 (band, bucket) (``_banded_pairs``), and every candidate
     is verified with the exact native cosine. Recall: P[pair surfaces] =
     1-(1-p^r)^b with p = 1-θ/π; at cos ≥ 0.8 (θ≈37°), b=16, r=8 → ~0.94;
@@ -550,12 +499,6 @@ def embedding_near_dup_pairs(
     ``method="brute"`` is the exact O(N²) baseline, kept ONLY as the oracle
     for small-N verification (it is what the DuckDB twin computes).
     """
-    from llm_tab_cleaner_spark.operators.similarity import (
-        banded_buckets,
-        dot_expr,
-        dot_expr_unrolled,
-    )
-
     if method not in ("lsh", "brute"):
         raise ValueError(f"unknown method: {method!r} (use 'lsh' or 'brute')")
     vec = F.col(vec_col)
@@ -563,7 +506,7 @@ def embedding_near_dup_pairs(
     va = _vec_side(df, id_col, vec_col, "id_a", "_va", "_na")
     vb = _vec_side(df, id_col, vec_col, "id_b", "_vb", "_nb")
     if method == "lsh":
-        sig = banded_buckets(df, id_col, vec_col, bands, planes_per_band, seed)
+        sig = banded_buckets(df, id_col, vec_col, bands, planes_per_band, seed, dim)
         sig = sig.select(F.col(id_col).alias("id"), "buckets")
         cand = _banded_pairs(
             sig, ["id"], F.col("buckets"), max_bucket_size, "embedding_near_dup_pairs"
@@ -593,8 +536,6 @@ def _vec_side(df: DataFrame, id_col: str, vec_col: str, id_out: str, v_out: str,
     """One side of a cosine-verify join: (id, vector cast to double ONCE,
     pre-computed norm). Casting and the norm fold happen per VECTOR here
     instead of per candidate pair in the join."""
-    from llm_tab_cleaner_spark.operators.similarity import norm_expr
-
     return df.select(
         F.col(id_col).alias(id_out),
         F.col(vec_col).cast("array<double>").alias(v_out),

@@ -3,9 +3,10 @@
 Baseline: brute-force cosine top-k with fully native expressions
 (zip_with + aggregate — JVM-side, no Python). Scale path: random-hyperplane
 LSH bucketing so the candidate set shrinks from N to a bucket; at 100 TB the
-bucket table is the only thing that shuffles, and the plane matrix is a
-broadcast. An IVF-style variant (seeded centroid assignment) gives
-probe-style search without MLlib dependencies.
+bucket table is the only thing that shuffles, and the plane matrix travels
+inside the Java UDF that computes the keys (``Signatures.Hyperplanes``). An
+IVF-style variant (seeded centroid assignment) gives probe-style search
+without MLlib dependencies.
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from llm_tab_cleaner_spark import jvm as J
 
 
 def _lit_array(vec: Sequence[float]):
@@ -44,7 +47,14 @@ def dot_expr_unrolled(a, b, dim: int):
     GetArrayItem terms: the same double operations in the same order, so
     every result is bit-identical to ``dot_expr``. Rows whose arrays are
     not exactly ``dim`` long fall back to the interpreted fold — results
-    can never silently change on unexpected input."""
+    can never silently change on unexpected input.
+
+    That fallback is a CodegenFallback, so it also keeps the enclosing
+    operator out of whole-stage codegen, and it stays on purpose: without
+    it the 64-wide chain lands in one generated method of 15-38 KB of
+    bytecode, above HotSpot's 8,000-byte JIT limit, and runs interpreted
+    (the near_dup benchmark's embedding leg took 3.6 s instead of 1.1 s on
+    a 4-vCPU host)."""
     acc = F.lit(0.0)
     for j in range(dim):
         acc = acc + a[j] * b[j]
@@ -68,28 +78,21 @@ def cosine_topk(
     )
 
 
+def _planes(dim: int, total: int, seed: int) -> np.ndarray:
+    """The seed-``seed`` (dim, total) float32 plane matrix."""
+    return np.random.default_rng(seed).standard_normal((dim, total)).astype(np.float32)
+
+
 def hyperplane_buckets(
     df: DataFrame, id_col: str, vec_col: str, n_planes: int = 8, dim: int = 64, seed: int = 42
 ) -> DataFrame:
-    """Random-hyperplane LSH bucket per vector (one Arrow-batched UDF doing a
-    single matmul per batch; planes are closure-broadcast). float64 matmul:
-    the plane constants are f32-rounded (exactly representable in f64), so an
-    external twin using double arithmetic (the DuckDB oracle) computes the
-    identical sign bits."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes)).astype(np.float32).astype(np.float64)
-
-    @F.pandas_udf("int")
-    def bucket_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for vecs in it:
-            m = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-            bits = (m @ planes) > 0  # (n, n_planes)
-            keys = np.zeros(len(vecs), dtype=np.int64)
-            for j in range(n_planes):
-                keys |= bits[:, j].astype(np.int64) << j
-            yield pd.Series(keys.astype(np.int32))
-
-    return df.select(id_col, vec_col, bucket_udf(F.col(vec_col)).alias("bucket"))
+    """Random-hyperplane LSH bucket per vector (int): ``banded_buckets``
+    with one band of ``n_planes`` planes. The plane constants are
+    f32-rounded (exactly representable in f64) and every dot is a double
+    sum, so an external twin using double arithmetic (the DuckDB oracle)
+    computes the same sign bits."""
+    out = banded_buckets(df, id_col, vec_col, 1, n_planes, seed, dim)
+    return out.select(id_col, vec_col, F.col("buckets")[0].alias("bucket"))
 
 
 def banded_buckets(
@@ -99,29 +102,29 @@ def banded_buckets(
     bands: int = 16,
     planes_per_band: int = 8,
     seed: int = 42,
+    dim: int | None = None,
 ) -> DataFrame:
     """`bands` random-hyperplane bucket keys per vector (array<int>, one per
-    band) from a single matmul per Arrow batch against a broadcast
-    (dim, bands*planes_per_band) plane matrix. The OR-of-ANDs banding gives
-    the recall a single bucket key cannot (see embedding_near_dup_pairs)."""
+    band) from one Java UDF (``Signatures.Hyperplanes``) holding the
+    seed-``seed`` (dim, bands*planes_per_band) float32 plane matrix: bit j
+    of band b is set when the vector's double-summed dot with plane
+    b*planes_per_band + j is positive. The OR-of-ANDs banding gives the
+    recall a single bucket key cannot (see embedding_near_dup_pairs).
+
+    The planes are drawn on the driver, so it needs the vector width:
+    ``dim`` when given, else read from one row (one small job). A vector of
+    another width raises."""
+    if dim is None:
+        row = df.filter(F.col(vec_col).isNotNull()).select(F.size(vec_col)).head()
+        dim = row[0] if row else 0
     total = bands * planes_per_band
-
-    @F.pandas_udf("array<int>")
-    def buckets_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        planes = None
-        for vecs in it:
-            m = np.stack(vecs.to_numpy()).astype(np.float32)
-            if planes is None:
-                rng = np.random.default_rng(seed)
-                planes = rng.standard_normal((m.shape[1], total)).astype(np.float32)
-            bits = (m @ planes) > 0  # (n, bands*r)
-            keys = np.zeros((len(vecs), bands), dtype=np.int32)
-            for b in range(bands):
-                for j in range(planes_per_band):
-                    keys[:, b] |= bits[:, b * planes_per_band + j].astype(np.int32) << j
-            yield pd.Series(list(keys))
-
-    return df.select(id_col, vec_col, buckets_udf(F.col(vec_col)).alias("buckets"))
+    planes = _planes(dim, total, seed).astype("<f4").tobytes()
+    params = repr((dim, bands, planes_per_band)).encode() + planes
+    name = J.session_udf(
+        df.sparkSession, "llm_tab_cleaner_hyperplanes", params,
+        J.SIGNATURES_CLASS, "registerHyperplanes", planes, dim, bands, planes_per_band,
+    )
+    return df.select(id_col, vec_col, F.call_function(name, F.col(vec_col)).alias("buckets"))
 
 
 def lsh_topk(
@@ -141,10 +144,13 @@ def lsh_topk(
     hyperplane LSH."""
     dim = len(query)
     bucketed = hyperplane_buckets(df, id_col, vec_col, n_planes, dim, seed)
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes)).astype(np.float32).astype(np.float64)
-    qbits = (np.asarray(query, dtype=np.float64) @ planes) > 0
-    qkey = int(sum(int(b) << j for j, b in enumerate(qbits)))
+    planes = _planes(dim, n_planes, seed).tolist()
+    qkey = 0
+    for j in range(n_planes):
+        dot = 0.0  # the UDF's sequential double sum, so the query's own row agrees
+        for i in range(dim):
+            dot += float(query[i]) * planes[i][j]
+        qkey |= (dot > 0) << j
     keys = {qkey}
     frontier = {qkey}
     for _ in range(max(0, multiprobe)):

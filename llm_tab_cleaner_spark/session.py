@@ -4,7 +4,7 @@ Mirrors the session the reference builds at
 ``/root/reference/src/llm_tab_cleaner/spark.py:214-221, 414-428`` (AQE,
 coalescePartitions, skewJoin, Arrow) but tuned for this engine:
 UTC session TZ (duckdb-oracle parity), Arrow batches sized for code files,
-shuffle partitions ≈ cores, and the JVM scorer's jar on ``spark.jars``.
+shuffle partitions ≈ cores, and the JVM UDF jar on ``spark.jars``.
 """
 
 from __future__ import annotations
@@ -14,17 +14,17 @@ import os
 # One BLAS thread per python worker: N workers × default-N BLAS threads
 # oversubscribes quadratically, and numpy UDFs anti-scale (the former pandas
 # scorer measured a 4.5× slowdown at 32 workers). The quality-filter scorer
-# runs in the JVM now; the pins stay for the numpy UDFs that remain (dedup
-# signatures, fingerprint and similarity kernels). Must be set before numpy
-# loads in the workers — local-mode workers inherit the driver env, and
-# executorEnv covers clusters.
+# and the near-dup signature kernels run in the JVM now; the pins stay for
+# the numpy UDFs that remain (n-gram hashes, fingerprint, IVF and kNN
+# kernels). Must be set before numpy loads in the workers — local-mode
+# workers inherit the driver env, and executorEnv covers clusters.
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
            "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
 from pyspark.sql import SparkSession
 
-from llm_tab_cleaner_spark.jvm import scorer_jar
+from llm_tab_cleaner_spark.jvm import udf_jar
 
 
 def build_session(
@@ -50,10 +50,11 @@ def build_session(
     ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
     to the first ``build_session`` call.
 
-    The quality-filter scorer is a Java UDF: its jar (``jvm.scorer_jar()``)
-    goes on ``spark.jars``, ahead of any jars in ``extra_conf``. The first
-    call for a given scorer source compiles it with ``javac`` into the
-    per-user cache (a few seconds); later calls reuse the cached jar.
+    The quality-filter scorer and the near-dup signature kernels are Java
+    UDFs: their jar (``jvm.udf_jar()``) goes on ``spark.jars``, ahead of any
+    jars in ``extra_conf``. The first call for a given version of the Java
+    sources compiles them with ``javac`` into the per-user cache (a few
+    seconds); later calls reuse the cached jar.
     Without a JDK this raises instead of starting a session the pipeline
     cannot run in. Jars only reach a JVM that starts here: if a session
     already exists, it is returned as it is.
@@ -72,7 +73,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch size for the pandas UDFs (dedup signatures,
+        # Arrow batch size for the pandas UDFs (n-gram hashes,
         # fingerprints, user rule callables): 4096 halves per-batch fixed
         # costs (serde setup, pandas materialization, numpy kernel
         # overheads) vs 2048 — measured 17.3 → 9.3 CPU-s floor per 50k-file
@@ -90,7 +91,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     extra = dict(extra_conf or {})
-    jars = ",".join(j for j in (scorer_jar(), extra.pop("spark.jars", "")) if j)
+    jars = ",".join(j for j in (udf_jar(), extra.pop("spark.jars", "")) if j)
     builder = builder.config("spark.jars", jars)
     for k, v in extra.items():
         builder = builder.config(k, v)

@@ -70,20 +70,23 @@ def test_ngram_jaccard(docs):
     assert j == 1.0
 
 
-def test_simhash_signature_goldens():
-    """Fixed-input goldens for the vectorized SimHash kernel — any change to
+def test_simhash_signature_goldens(spark):
+    """Fixed-input goldens for the JVM SimHash UDF — any change to
     tokenization, the polynomial/fmix64 hash, or the vote packing shows up
-    here. Also asserts batch-composition invariance (a row's signature must
-    not depend on its neighbors in the Arrow batch)."""
-    from llm_tab_cleaner_spark.operators.dedup import _batch_simhash
-
+    here. The values were produced by the numpy kernel it replaced
+    (``signature_oracles.batch_simhash``)."""
     base = (
         "the quick brown fox jumps over the lazy dog while the band plays on "
         "and the parade marches through the quiet town square at noon today"
     )
-    texts = pd.Series([base, base.replace("noon", "dusk"), "", "   ", "one", "x\t y\nz"])
-    sig = [int(x) for x in _batch_simhash(texts)]
-    assert sig == [
+    texts = [base, base.replace("noon", "dusk"), "", "   ", "one", "x\t y\nz",
+             "completely unrelated words here"]
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}), "doc_id long, text string"
+    )
+    rows = dedup.simhash_signatures(df, ["doc_id"], "text").orderBy("doc_id").collect()
+    sig = [r.simhash for r in rows]
+    assert sig[:-1] == [
         -3950139006177707604,
         -3950140105689892692,
         0,
@@ -91,13 +94,10 @@ def test_simhash_signature_goldens():
         -4718084096354523802,
         9030847160802041190,
     ]
-    solo = [int(_batch_simhash(pd.Series([t]))[0]) for t in texts]
-    assert solo == sig
     # near-dup hamming stays small, unrelated text is far
     ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")
     assert ham(sig[0], sig[1]) <= 6
-    far = int(_batch_simhash(pd.Series(["completely unrelated words here"]))[0])
-    assert ham(sig[0], far) > 15
+    assert ham(sig[0], sig[-1]) > 15
 
 
 def test_embedding_near_dup_lsh_matches_brute(spark):
@@ -208,10 +208,10 @@ def test_banding_bucket_cap_drops_giant_clusters(spark, op):
 @pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
 def test_pair_operators_run_signature_udf_once(spark, docs, op):
     """The banding core checkpoints a signature frame that still carries its
-    UDF, so the returned plan has no EvalPython (the cap aggregate and both
-    self-join sides read the checkpoint instead of replaying the UDF). A
-    pre-checkpointed input gets no second checkpoint: the same call runs
-    exactly one job fewer."""
+    UDF, so the returned plan has no signature UDF and no Python stage (the
+    cap aggregate and both self-join sides read the checkpoint instead of
+    replaying the UDF). A pre-checkpointed input gets no second checkpoint:
+    the same call runs exactly one job fewer."""
     import numpy as np
 
     sc = spark.sparkContext
@@ -241,7 +241,7 @@ def test_pair_operators_run_signature_udf_once(spark, docs, op):
 
     out, raw_jobs = jobs_of(sig, f"udf-once-{op}-raw")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan, plan[:1500]
+    assert "EvalPython" not in plan and "llm_tab_cleaner_" not in plan, plan[:1500]
     assert out.count() > 0
     if op != "embedding":  # its signature UDF is internal: always checkpointed
         _, pre_jobs = jobs_of(sig.localCheckpoint(eager=True), f"udf-once-{op}-pre")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -269,3 +270,39 @@ def test_run_and_write_jobs_and_observed_single_scorer_plan(spark, tmp_path):
     assert sum(d.count("llm_tab_cleaner_score_") for _, d in nodes) == 1, nodes
     assert names.count("CollectMetrics") == 1, names
     assert "InMemoryTableScan" not in names, names
+
+
+_SIGNATURE_ENTRIES = {
+    "minhash_pairs": "llm_tab_cleaner_minhash_",
+    "simhash_pairs": "llm_tab_cleaner_simhash_",
+    "embedding_near_dup": "llm_tab_cleaner_hyperplanes_",
+    "lsh_topk": "llm_tab_cleaner_hyperplanes_",
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_SIGNATURE_ENTRIES))
+def test_signature_entries_have_no_python_stage(spark, entry):
+    """The near-dup and LSH entries run their signature kernels as Java
+    UDFs: no query the entry runs (signature checkpoint, bucket-cap
+    collect, result) plans a Python stage, and the signature UDF is
+    evaluated in exactly one plan node across all of them."""
+    import __spark_entry__ as E
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        execs = store.executionsList()
+        return {execs.apply(i).executionId() for i in range(execs.size())}
+
+    before = execution_ids()
+    out = E.queries()[entry](spark, "/root/testdata/sf0.001")
+    out.collect()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    nodes = []
+    for eid in sorted(execution_ids() - before):
+        graph = store.planGraph(eid).allNodes()
+        nodes += [(graph.apply(k).name(), graph.apply(k).desc()) for k in range(graph.size())]
+    names = [n for n, _ in nodes]
+    assert not {"ArrowEvalPython", "BatchEvalPython", "MapInPandas"} & set(names), names
+    assert sum(d.count(_SIGNATURE_ENTRIES[entry]) for _, d in nodes) == 1, nodes

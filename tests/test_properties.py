@@ -15,7 +15,7 @@ from hypothesis import strategies as st
 
 from llm_tab_cleaner_spark.functions.pii import ALL_RULES, scrub_python
 from llm_tab_cleaner_spark.operators.calibration import _fit_platt, _pava
-from llm_tab_cleaner_spark.operators.dedup import _batch_simhash
+from signature_oracles import batch_simhash
 
 _PII_SNIPPETS = st.sampled_from(
     [
@@ -123,13 +123,14 @@ def test_scorer_token_stats_match_naive(texts):
 @given(st.lists(st.text(max_size=80), min_size=1, max_size=12), st.randoms())
 @settings(max_examples=150, deadline=None)
 def test_simhash_batch_composition_invariance(texts, rnd):
-    """A row's signature must not depend on its neighbors or position in the
-    Arrow batch (north-rule determinism under parallelism)."""
-    base = _batch_simhash(pd.Series(texts))
+    """A row's signature from the batch-vectorized numpy oracle must not
+    depend on its neighbors or position in the batch: the JVM SimHash is
+    row-at-a-time, so the oracle it is held equal to must be row-local too."""
+    base = batch_simhash(pd.Series(texts))
     perm = list(range(len(texts)))
     rnd.shuffle(perm)
-    shuffled = _batch_simhash(pd.Series([texts[i] for i in perm]))
+    shuffled = batch_simhash(pd.Series([texts[i] for i in perm]))
     for out_pos, src_pos in enumerate(perm):
         assert shuffled[out_pos] == base[src_pos]
-    solo = np.array([_batch_simhash(pd.Series([t]))[0] for t in texts])
+    solo = np.array([batch_simhash(pd.Series([t]))[0] for t in texts])
     assert (solo == np.asarray(base)).all()

@@ -179,7 +179,7 @@ def test_with_scores_without_scorer_class_names_the_fix(spark, monkeypatch):
     assert "--jars" in str(err.value)
 
 
-def test_build_session_compiles_scorer_jar_once(spark, monkeypatch, tmp_path):
+def test_build_session_compiles_udf_jar_once(spark, monkeypatch, tmp_path):
     import llm_tab_cleaner_spark.jvm as J
     from llm_tab_cleaner_spark.session import build_session
 
@@ -196,8 +196,8 @@ def test_build_session_compiles_scorer_jar_once(spark, monkeypatch, tmp_path):
     for _ in range(2):
         assert build_session(app_name="pytest", cpus=8, shuffle_partitions=8) is not None
     assert len(calls) == 1 and calls[0].endswith("javac"), calls
-    jars = list((tmp_path / "llm_tab_cleaner_spark").glob("scorer-*.jar"))
-    assert len(jars) == 1 and J.scorer_jar() == str(jars[0])
+    jars = list((tmp_path / "llm_tab_cleaner_spark").glob("udfs-*.jar"))
+    assert len(jars) == 1 and J.udf_jar() == str(jars[0])
     assert len(calls) == 1
     # nothing but the jar is left in the cache
     assert [p.name for p in (tmp_path / "llm_tab_cleaner_spark").iterdir()] == [jars[0].name]

@@ -31,7 +31,7 @@ def test_spark_submit_py_files_e2e(tmp_path, spark, code_files_small):
     pkg = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(pkg)
     zip_path = pkg.build(str(tmp_path / "llm_tab_cleaner_spark.zip"))
-    jar_path = pkg.build_jar(str(tmp_path / "llm_tab_cleaner_spark-scorer.jar"))
+    jar_path = pkg.build_jar(str(tmp_path / "llm_tab_cleaner_spark-udfs.jar"))
 
     cf, _ = code_files_small
     src = str(tmp_path / "in.parquet")
@@ -50,7 +50,7 @@ def test_spark_submit_py_files_e2e(tmp_path, spark, code_files_small):
             "--master", "local[2]",
             "--conf", "spark.ui.enabled=false",
             "--py-files", zip_path,
-            "--jars", jar_path,  # the JVM scorer
+            "--jars", jar_path,  # the JVM scorer and signature kernels
             job,
             "--input", src,
             "--output", out,
