@@ -1550,9 +1550,9 @@ def _q_minhash_pairs(spark, sf):
         d, ["doc_id"], "text", num_hashes=64, shingle_k=5
     ).localCheckpoint(eager=True)
     pairs = dedup.lsh_candidate_pairs(sigs, ["doc_id"], 64, 16)
-    return dedup.minhash_jaccard_estimate(
-        pairs, sigs, "doc_id", num_hashes=64
-    ).select("doc_id_a", "doc_id_b", "jaccard_est")
+    return dedup.minhash_jaccard_estimate(pairs, sigs, "doc_id").select(
+        "doc_id_a", "doc_id_b", "jaccard_est"
+    )
 
 
 def _q_simhash_pairs(spark, sf):

@@ -55,11 +55,6 @@ def scrub_expr(col: Column) -> Column:
     return out
 
 
-def pii_flags(col: Column) -> dict[str, Column]:
-    """One boolean Column per scrub family (pre-scrub detection, for audit)."""
-    return {name: col.rlike(pat) for name, pat, _repl in ALL_RULES}
-
-
 def any_pii_detect_expr(col: Column) -> Column:
     """Gated any-PII detection for the hot path: each expensive family regex
     runs behind a cheap necessary-condition scan (substring containment),

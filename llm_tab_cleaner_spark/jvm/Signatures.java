@@ -5,16 +5,19 @@ import java.nio.ByteOrder;
 
 import org.apache.spark.sql.SparkSession;
 import org.apache.spark.sql.api.java.UDF1;
+import org.apache.spark.sql.api.java.UDF2;
 import org.apache.spark.sql.functions;
 import org.apache.spark.sql.types.DataType;
 import org.apache.spark.sql.types.DataTypes;
 
+import scala.collection.Iterator;
 import scala.collection.Seq;
 
 /**
  * The near-duplicate signature kernels as row-at-a-time Java UDFs: MinHash
  * over byte shingles, SimHash over whitespace tokens, and random-hyperplane
- * bucket keys for embedding vectors.
+ * bucket keys for embedding vectors; plus the two pair-verify kernels, the
+ * dot product and the equal-slot count.
  *
  * <p>Each kernel equals the numpy kernel it replaced bit for bit (those
  * kernels are now the test oracles in {@code tests/signature_oracles.py}).
@@ -23,10 +26,13 @@ import scala.collection.Seq;
  * ({@link #mod61}), never a widening product. The parameters (permutations,
  * plane matrix) are drawn on the driver and travel inside the UDF instance.
  *
- * <p>The {@code register*} methods register a kernel as a nondeterministic
- * session function, as {@link Scorer#register} does: Catalyst does not push
- * a filter through a nondeterministic Project, so a filter on a signature
- * never evaluates the kernel a second time.
+ * <p>The {@code register*} methods register a signature kernel as a
+ * nondeterministic session function, as {@link Scorer#register} does:
+ * Catalyst does not push a filter through a nondeterministic Project, so a
+ * filter on a signature never evaluates the kernel a second time. The
+ * pair-verify kernels are registered deterministic, because they sit inside
+ * aggregates ({@code avg(sqrt(dot(v, v)))}), which Spark refuses for a
+ * nondeterministic expression.
  */
 public final class Signatures {
     private static final long MERSENNE = (1L << 61) - 1;
@@ -212,6 +218,52 @@ public final class Signatures {
         }
     }
 
+    /**
+     * Dot product of two double arrays as the sequential left fold
+     * {@code ((0.0 + a0*b0) + a1*b1) + ...}: the operations, in the order, of
+     * Spark's {@code aggregate(zip_with(a, b, (x, y) -> x * y), 0.0, (s, v) ->
+     * s + v)}, so the values are bit-identical to it. NULL on a NULL array, a
+     * NULL element or unequal widths; 0.0 on empty arrays.
+     */
+    public static final class Dot implements UDF2<Seq<Object>, Seq<Object>, Double> {
+        private static final long serialVersionUID = 1L;
+
+        @Override
+        public Double call(Seq<Object> a, Seq<Object> b) {
+            if (a == null || b == null || a.length() != b.length()) return null;
+            double acc = 0.0;
+            Iterator<Object> ia = a.iterator(), ib = b.iterator();
+            while (ia.hasNext()) {
+                Object x = ia.next(), y = ib.next();
+                if (x == null || y == null) return null;
+                acc += ((Number) x).doubleValue() * ((Number) y).doubleValue();
+            }
+            return acc;
+        }
+    }
+
+    /**
+     * Number of slots where two long arrays hold equal values. NULL on a NULL
+     * array, a NULL element or unequal widths; 0 on empty arrays, as
+     * {@code aggregate(zip_with(a, b, (x, y) -> int(x == y)), 0, (s, v) -> s + v)}.
+     */
+    public static final class EqualSlots implements UDF2<Seq<Object>, Seq<Object>, Integer> {
+        private static final long serialVersionUID = 1L;
+
+        @Override
+        public Integer call(Seq<Object> a, Seq<Object> b) {
+            if (a == null || b == null || a.length() != b.length()) return null;
+            int equal = 0;
+            Iterator<Object> ia = a.iterator(), ib = b.iterator();
+            while (ia.hasNext()) {
+                Object x = ia.next(), y = ib.next();
+                if (x == null || y == null) return null;
+                if (((Number) x).longValue() == ((Number) y).longValue()) equal++;
+            }
+            return equal;
+        }
+    }
+
     public static void registerMinHash(
             SparkSession spark, String name, byte[] a, byte[] b, int shingleK) {
         register(spark, name, new MinHash(longs(a), longs(b), shingleK),
@@ -229,6 +281,14 @@ public final class Signatures {
         ByteBuffer.wrap(planes).order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer().get(p);
         register(spark, name, new Hyperplanes(p, dim, bands, rows),
             DataTypes.createArrayType(DataTypes.IntegerType));
+    }
+
+    public static void registerDot(SparkSession spark, String name) {
+        spark.udf().register(name, functions.udf(new Dot(), DataTypes.DoubleType));
+    }
+
+    public static void registerEqualSlots(SparkSession spark, String name) {
+        spark.udf().register(name, functions.udf(new EqualSlots(), DataTypes.IntegerType));
     }
 
     private static void register(SparkSession spark, String name, UDF1<?, ?> f, DataType type) {

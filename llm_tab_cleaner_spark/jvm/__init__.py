@@ -2,12 +2,13 @@
 
 ``udf_jar()`` returns the path of a jar holding the package's Java UDFs
 (``Scorer``, the quality-filter scorer, and ``Signatures``, the near-dup
-signature kernels), compiling them with the JDK's ``javac`` against the
-Spark jars PySpark ships when the per-user cache has no jar for these
-sources and this Spark version. ``build_session`` puts it on
-``spark.jars``; for spark-submit, ``python jobs/package.py`` copies it into
-``dist/`` for ``--jars``. There is no Python fallback: without ``javac``
-(and no cached jar) this raises, saying what to install.
+signature kernels and the pair-verify dot product and equal-slot count),
+compiling them with the JDK's ``javac`` against the Spark jars PySpark
+ships when the per-user cache has no jar for these sources and this Spark
+version. ``build_session`` puts it on ``spark.jars``; for spark-submit,
+``python jobs/package.py`` copies it into ``dist/`` for ``--jars``. There
+is no Python fallback: without ``javac`` (and no cached jar) this raises,
+saying what to install.
 
 The cache is ``$XDG_CACHE_HOME/llm_tab_cleaner_spark`` (default
 ``~/.cache/llm_tab_cleaner_spark``), keyed by a hash of all the sources and

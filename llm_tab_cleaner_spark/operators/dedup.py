@@ -31,7 +31,7 @@ from llm_tab_cleaner_spark import jvm as J
 from llm_tab_cleaner_spark.operators.similarity import (
     banded_buckets,
     dot_expr,
-    dot_expr_unrolled,
+    equal_slots_expr,
     norm_expr,
 )
 
@@ -265,27 +265,11 @@ def minhash_jaccard_estimate(
     num_hashes: int | None = None,
 ) -> DataFrame:
     """Estimated Jaccard for candidate pairs = fraction of equal signature
-    slots. With ``num_hashes`` given (the signature width is a fixed model
-    parameter), the equal-slot count is an unrolled codegen-able add chain
-    — integer arithmetic, identical values to the lambda fold, which is a
-    CodegenFallback evaluated interpreted per slot per pair (the
-    pair-count-proportional cost of this operator); signatures of any
-    other width fall back to the fold, which also keeps the chain out of
-    whole-stage codegen (see similarity.dot_expr_unrolled for why that is
-    faster)."""
+    slots, counted by one Java UDF (``Signatures.EqualSlots``).
+    ``num_hashes`` is accepted for existing callers and ignored."""
     a = sig_df.select(F.col(id_col).alias(f"{id_col}_a"), F.col("minhash").alias("_sa"))
     b = sig_df.select(F.col(id_col).alias(f"{id_col}_b"), F.col("minhash").alias("_sb"))
-    eq = F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int"))
-    jac = F.aggregate(eq, F.lit(0), lambda acc, v: acc + v) / F.size("_sa")
-    if num_hashes:
-        sa, sb = F.col("_sa"), F.col("_sb")
-        acc = F.lit(0)
-        for j in range(num_hashes):
-            acc = acc + (sa[j] == sb[j]).cast("int")
-        jac = F.when(
-            (F.size(sa) == num_hashes) & (F.size(sb) == num_hashes),
-            acc / F.size(sa),
-        ).otherwise(jac)
+    jac = equal_slots_expr("_sa", "_sb") / F.size("_sa")
     return (
         pair_df.join(a, f"{id_col}_a").join(b, f"{id_col}_b")
         .withColumn("jaccard_est", F.round(jac, 4))
@@ -466,12 +450,8 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs.
 
-    ``dim`` (optional): the known vector width. When given, the per-pair
-    dot product uses the unrolled add chain (bit-identical values, see
-    similarity.dot_expr_unrolled) instead of the interpreted lambda fold —
-    the verify join is the pair-count-proportional cost here — and the LSH
-    planes are drawn for that width (without it, the width is read from one
-    row).
+    ``dim`` (optional): the known vector width, for which the LSH planes
+    are drawn; without it, the width is read from one row.
 
     Default (``method="lsh"``, the validated path): banded random-hyperplane
     LSH — every vector gets `bands` bucket keys (``similarity.banded_buckets``,
@@ -516,13 +496,9 @@ def embedding_near_dup_pairs(
         joined = va.crossJoin(vb).filter(F.col("id_a") < F.col("id_b"))
     # the norms come pre-computed per vector side: Catalyst inlines the
     # cosine into both the join condition and the output projection, so a
-    # per-pair norm fold would run several times per candidate pair; per
+    # per-pair norm would run several times per candidate pair; per
     # pair only the dot remains (same doubles, norm evaluated earlier)
-    dot = (
-        dot_expr_unrolled(F.col("_va"), F.col("_vb"), dim)
-        if dim
-        else dot_expr(F.col("_va"), F.col("_vb"))
-    )
+    dot = dot_expr(F.col("_va"), F.col("_vb"))
     cos = F.round(dot / (F.col("_na") * F.col("_nb")), 4)
     return (
         joined.withColumn("cosine", cos)
@@ -534,7 +510,7 @@ def embedding_near_dup_pairs(
 
 def _vec_side(df: DataFrame, id_col: str, vec_col: str, id_out: str, v_out: str, n_out: str) -> DataFrame:
     """One side of a cosine-verify join: (id, vector cast to double ONCE,
-    pre-computed norm). Casting and the norm fold happen per VECTOR here
+    pre-computed norm). Casting and the norm happen per VECTOR here
     instead of per candidate pair in the join."""
     return df.select(
         F.col(id_col).alias(id_out),

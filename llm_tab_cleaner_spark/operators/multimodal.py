@@ -14,6 +14,9 @@ the decode kernel is stubbed two ways (both clearly marked):
 Reference analog: multimodal_cleaning.py treats text/NaN cleanup per mode;
 this module is the genuinely-multimodal extension the north-star pipeline
 needs (task brief: "make the Spark-side plumbing real and tested").
+
+No query or public API reaches this module; SURVEY row X18 (multimodal
+binary columns) is why it stays.
 """
 
 from __future__ import annotations

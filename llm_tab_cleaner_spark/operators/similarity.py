@@ -1,12 +1,12 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k with fully native expressions
-(zip_with + aggregate — JVM-side, no Python). Scale path: random-hyperplane
-LSH bucketing so the candidate set shrinks from N to a bucket; at 100 TB the
-bucket table is the only thing that shuffles, and the plane matrix travels
-inside the Java UDF that computes the keys (``Signatures.Hyperplanes``). An
-IVF-style variant (seeded centroid assignment) gives probe-style search
-without MLlib dependencies.
+Baseline: brute-force cosine top-k; every dot product and norm is one Java
+UDF, ``Signatures.Dot`` (JVM-side, no Python, no lambda fold). Scale path:
+random-hyperplane LSH bucketing so the candidate set shrinks from N to a
+bucket; at 100 TB the bucket table is the only thing that shuffles, and the
+plane matrix travels inside the Java UDF that computes the keys
+(``Signatures.Hyperplanes``). An IVF-style variant (seeded centroid
+assignment) gives probe-style search without MLlib dependencies.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from llm_tab_cleaner_spark import jvm as J
@@ -25,41 +25,32 @@ def _lit_array(vec: Sequence[float]):
     return F.array(*[F.lit(float(x)) for x in vec])
 
 
+def _pair_kernel(prefix: str, method: str) -> str:
+    """Session function name of a pair-verify kernel in ``jvm/Signatures.java``,
+    registered in the active session on first use."""
+    return J.session_udf(SparkSession.active(), prefix, b"", J.SIGNATURES_CLASS, method)
+
+
 def dot_expr(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
+    """Dot product of two array<double> columns (``Signatures.Dot``): the
+    sequential double fold ``((0.0 + a0*b0) + a1*b1) + ...``. NULL on a
+    NULL array, a NULL element or unequal widths; 0.0 on empty arrays."""
+    return F.call_function(_pair_kernel("llm_tab_cleaner_dot", "registerDot"), a, b)
 
 
 def norm_expr(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
+    return F.sqrt(dot_expr(a, a))
 
 
 def cosine_expr(a, b):
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-def dot_expr_unrolled(a, b, dim: int):
-    """``dot_expr`` for known-width vectors, spelled codegen-able.
-
-    The lambda-HOF fold is a CodegenFallback evaluated interpreted per
-    element per row — the dominant cost of a pair-verify join (guide §4.1:
-    prefer expressions codegen can compile). This unrolls the identical
-    left-fold ``((0.0 + a0*b0) + a1*b1) + ...`` into a flat add chain of
-    GetArrayItem terms: the same double operations in the same order, so
-    every result is bit-identical to ``dot_expr``. Rows whose arrays are
-    not exactly ``dim`` long fall back to the interpreted fold — results
-    can never silently change on unexpected input.
-
-    That fallback is a CodegenFallback, so it also keeps the enclosing
-    operator out of whole-stage codegen, and it stays on purpose: without
-    it the 64-wide chain lands in one generated method of 15-38 KB of
-    bytecode, above HotSpot's 8,000-byte JIT limit, and runs interpreted
-    (the near_dup benchmark's embedding leg took 3.6 s instead of 1.1 s on
-    a 4-vCPU host)."""
-    acc = F.lit(0.0)
-    for j in range(dim):
-        acc = acc + a[j] * b[j]
-    return F.when((F.size(a) == dim) & (F.size(b) == dim), acc).otherwise(
-        dot_expr(a, b)
+def equal_slots_expr(a, b):
+    """Number of equal slots of two array<bigint> columns
+    (``Signatures.EqualSlots``), with ``dot_expr``'s NULL and empty rules."""
+    return F.call_function(
+        _pair_kernel("llm_tab_cleaner_equal_slots", "registerEqualSlots"), a, b
     )
 
 
@@ -67,7 +58,7 @@ def cosine_topk(
     df: DataFrame, id_col: str, vec_col: str, query: Sequence[float], k: int = 10
 ) -> DataFrame:
     """Brute-force cosine top-k vs a literal query vector. The per-row work
-    is a codegen'd fold over the array; the top-k is TakeOrderedAndProject
+    is the Java dot kernel over the array; the top-k is TakeOrderedAndProject
     (no full sort, no shuffle of vectors)."""
     q = _lit_array(query)
     sim = F.round(cosine_expr(F.col(vec_col).cast("array<double>"), q), 4)

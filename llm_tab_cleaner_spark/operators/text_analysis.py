@@ -1,9 +1,9 @@
 """Text-analysis operators for training-data pipelines — all native exprs.
 
-Language-ID (n-gram heuristic form), quality scoring, token counting,
-document fingerprinting. These are the SQL-expressible siblings of the
-model-based scorer in functions/scoring.py; both exist because the native
-forms cost nothing (codegen) and cross-check the UDF path.
+Quality scoring, token counting, document fingerprinting. These are the
+SQL-expressible siblings of the model-based scorer in functions/scoring.py;
+both exist because the native forms cost nothing (codegen) and cross-check
+the UDF path.
 """
 
 from __future__ import annotations
@@ -46,11 +46,6 @@ def quality_score(col: Column) -> Column:
     short_pen = F.when(TF.n_tokens(col) < 10, F.lit(0.3)).otherwise(F.lit(0.0))
     raw = F.lit(1.0) - 0.4 * (F.lit(1.0) - uniq) - 0.3 * (F.lit(1.0) - alnum) - short_pen
     return F.round(F.greatest(F.least(raw, F.lit(1.0)), F.lit(0.0)), 4)
-
-
-def language_guess(col: Column) -> Column:
-    """Keyword-heuristic language id (native; see text_features.keyword_langid)."""
-    return TF.keyword_langid(col)
 
 
 def char_ngrams(col: Column, n: int = 5) -> Column:

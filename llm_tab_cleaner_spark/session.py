@@ -50,9 +50,10 @@ def build_session(
     ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
     to the first ``build_session`` call.
 
-    The quality-filter scorer and the near-dup signature kernels are Java
-    UDFs: their jar (``jvm.udf_jar()``) goes on ``spark.jars``, ahead of any
-    jars in ``extra_conf``. The first call for a given version of the Java
+    The quality-filter scorer, the near-dup signature kernels and the
+    pair-verify dot product and equal-slot count are Java UDFs: their jar
+    (``jvm.udf_jar()``) goes on ``spark.jars``, ahead of any jars in
+    ``extra_conf``. The first call for a given version of the Java
     sources compiles them with ``javac`` into the per-user cache (a few
     seconds); later calls reuse the cached jar.
     Without a JDK this raises instead of starting a session the pipeline

@@ -1,14 +1,17 @@
-"""numpy reference kernels for the JVM signature UDFs (``jvm/Signatures.java``).
+"""Reference kernels for the JVM UDFs in ``jvm/Signatures.java``.
 
-These are the batch-vectorized kernels the package ran as pandas UDFs
-before the signatures moved into the JVM; the tests hold the Java UDFs
-equal to them bit for bit.
+The signature oracles are the batch-vectorized numpy kernels the package
+ran as pandas UDFs before the signatures moved into the JVM. The
+pair-verify oracles are the ``zip_with``/``aggregate`` lambda folds the
+package ran before the dot product and the equal-slot count did. The tests
+hold the Java UDFs equal to them bit for bit.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from llm_tab_cleaner_spark.operators.dedup import _MERSENNE, _batch_token_hashes
 
@@ -87,3 +90,26 @@ def hyperplane_keys(
         for j in range(planes_per_band):
             keys[:, b] |= bits[:, b * planes_per_band + j].astype(np.int32) << j
     return keys
+
+
+def dot_fold(a, b):
+    """``((0.0 + a0*b0) + a1*b1) + ...`` as a Spark lambda fold."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
+
+
+def norm_fold(a):
+    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
+
+
+def equal_slots_fold(a, b):
+    eq = F.zip_with(a, b, lambda x, y: (x == y).cast("int"))
+    return F.aggregate(eq, F.lit(0), lambda acc, v: acc + v)
+
+
+def sequential_dot(a, b) -> float | None:
+    """numpy's sequential (``cumsum``, not pairwise) sum of the products,
+    started at 0.0; None where the fold gives NULL."""
+    if a is None or b is None or len(a) != len(b) or None in a or None in b:
+        return None
+    prods = np.asarray(a, dtype=np.float64) * np.asarray(b, dtype=np.float64)
+    return float(np.cumsum(np.concatenate([[0.0], prods]))[-1])

@@ -5,11 +5,14 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 import pandas as pd
 import pytest
 
 from llm_tab_cleaner_spark import cli
+
+_ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -89,7 +92,7 @@ def test_job_pins_executor_blas_threads():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "run_quality_filter_job", "/root/repo/jobs/run_quality_filter.py"
+        "run_quality_filter_job", str(_ROOT / "jobs" / "run_quality_filter.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

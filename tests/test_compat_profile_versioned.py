@@ -1,4 +1,4 @@
-"""Compat facade, full table profiling, versioned time-travel store."""
+"""Compat facade and full table profiling."""
 
 from __future__ import annotations
 
@@ -56,22 +56,3 @@ def test_profile_table(spark):
     assert prof.duplicate_rows == 1  # the repeated (2, "b", "k", None) row
     assert 0 < prof.overall_quality_score <= 1
     assert prof.total_issues >= 2
-
-
-def test_versioned_table_time_travel(spark, tmp_path):
-    from llm_tab_cleaner_spark.sources.versioned import VersionedTable
-
-    vt = VersionedTable(str(tmp_path / "vt"))
-    v0 = vt.write(spark.range(3))
-    v1 = vt.write(spark.range(10))
-    assert (v0, v1) == (0, 1)
-    assert vt.read(spark).count() == 10           # head = latest
-    assert vt.read(spark, version=0).count() == 3  # time travel
-    vt.rollback(0)
-    assert vt.read(spark).count() == 3             # restore-on-failure
-    assert vt.versions() == [0, 1]                 # nothing deleted
-
-    import pytest
-
-    with pytest.raises(ValueError, match="no such version"):
-        vt.read(spark, version=7)

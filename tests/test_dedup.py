@@ -205,13 +205,21 @@ def test_banding_bucket_cap_drops_giant_clusters(spark, op):
     assert (1000, 1001) in set(zip(a, b))
 
 
-@pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
+_SIGNATURE_UDF = {
+    "minhash": "llm_tab_cleaner_minhash_",
+    "simhash": "llm_tab_cleaner_simhash_",
+    "embedding": "llm_tab_cleaner_hyperplanes_",
+}
+
+
+@pytest.mark.parametrize("op", sorted(_SIGNATURE_UDF))
 def test_pair_operators_run_signature_udf_once(spark, docs, op):
     """The banding core checkpoints a signature frame that still carries its
     UDF, so the returned plan has no signature UDF and no Python stage (the
     cap aggregate and both self-join sides read the checkpoint instead of
     replaying the UDF). A pre-checkpointed input gets no second checkpoint:
-    the same call runs exactly one job fewer."""
+    the same call runs exactly one job fewer. The embedding verify step's
+    dot product is a Java UDF too, but not a signature one."""
     import numpy as np
 
     sc = spark.sparkContext
@@ -241,7 +249,7 @@ def test_pair_operators_run_signature_udf_once(spark, docs, op):
 
     out, raw_jobs = jobs_of(sig, f"udf-once-{op}-raw")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan and "llm_tab_cleaner_" not in plan, plan[:1500]
+    assert "EvalPython" not in plan and _SIGNATURE_UDF[op] not in plan, plan[:1500]
     assert out.count() > 0
     if op != "embedding":  # its signature UDF is internal: always checkpointed
         _, pre_jobs = jobs_of(sig.localCheckpoint(eager=True), f"udf-once-{op}-pre")

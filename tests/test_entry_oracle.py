@@ -5,10 +5,11 @@ matrix runs via tools/parity_check.py)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF = "/root/testdata/sf0.001"
 SUBSET = [

@@ -306,3 +306,26 @@ def test_signature_entries_have_no_python_stage(spark, entry):
     names = [n for n, _ in nodes]
     assert not {"ArrowEvalPython", "BatchEvalPython", "MapInPandas"} & set(names), names
     assert sum(d.count(_SIGNATURE_ENTRIES[entry]) for _, d in nodes) == 1, nodes
+
+
+_PAIR_KERNEL_ENTRIES = {
+    "cosine_topk": "llm_tab_cleaner_dot_",
+    "knn_brute": "llm_tab_cleaner_dot_",
+    "lsh_topk": "llm_tab_cleaner_dot_",
+    "embedding_near_dup": "llm_tab_cleaner_dot_",
+    "embedding_norms": "llm_tab_cleaner_dot_",
+    "minhash_pairs": "llm_tab_cleaner_equal_slots_",
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_PAIR_KERNEL_ENTRIES))
+def test_pair_verify_entries_have_no_lambda_hof(spark, entry):
+    """Every dot product, norm and equal-slot count is a Java UDF: the
+    vector and pair-verify entries' optimized plans hold the kernel and no
+    lambda HOF (an interpreted CodegenFallback per element per row)."""
+    import __spark_entry__ as E
+
+    out = E.queries()[entry](spark, E.SF_DEFAULT)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in plan, plan[:3000]
+    assert _PAIR_KERNEL_ENTRIES[entry] in plan, plan[:3000]

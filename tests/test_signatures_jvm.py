@@ -1,15 +1,19 @@
-"""The JVM signature kernels (``jvm/Signatures.java``) equal the numpy
-oracles in ``signature_oracles.py`` bit for bit: MinHash and SimHash on
-arbitrary text (empty, whitespace-only, non-ASCII, NULL), hyperplane keys on
-random matrices against both the float32 and the float64 matmul. Values do
-not depend on how rows are partitioned."""
+"""The JVM kernels in ``jvm/Signatures.java`` equal the oracles in
+``signature_oracles.py`` bit for bit: MinHash and SimHash on arbitrary text
+(empty, whitespace-only, non-ASCII, NULL), hyperplane keys on random
+matrices against both the float32 and the float64 matmul, and the
+pair-verify dot product, norm and equal-slot count against the lambda folds
+they replaced (NULL arrays, NULL elements, unequal and zero widths). Values
+do not depend on how rows are partitioned."""
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 import signature_oracles as O
@@ -71,6 +75,57 @@ def test_hyperplane_keys_equal_numpy_f32_and_f64(spark, seed, n, dim, bands, row
     one = similarity.hyperplane_buckets(df, "vec_id", "embedding", rows, dim, seed % 1000)
     bucket = np.array([r.bucket for r in one.orderBy("vec_id").collect()])
     assert (bucket == O.hyperplane_keys(m, 1, rows, seed % 1000, np.float64)[:, 0]).all()
+
+
+@st.composite
+def _array_pair(draw, elem):
+    """Two arrays of width 0-96; sometimes of unequal widths, sometimes
+    with a NULL element, sometimes NULL."""
+    width = draw(st.integers(0, 96))
+    other = draw(st.sampled_from([width, width, width, max(width - 1, 0), width + 1]))
+    pair = [draw(st.lists(elem, min_size=w, max_size=w)) for w in (width, other)]
+    for arr in pair:
+        if arr and draw(st.integers(0, 9)) == 0:
+            arr[draw(st.integers(0, len(arr) - 1))] = None
+    return [None if draw(st.integers(0, 9)) == 0 else arr for arr in pair]
+
+
+def _bits(v):
+    return None if v is None else struct.pack("<d", v)
+
+
+_VEC_AND_SLOT_PAIRS = st.lists(
+    st.tuples(_array_pair(st.floats(-1e6, 1e6)), _array_pair(st.integers(0, 3))),
+    min_size=1, max_size=8,
+)
+
+
+@given(_VEC_AND_SLOT_PAIRS)
+@example([
+    (([], []), ([], [])),
+    ((None, [1.0]), ([1], None)),
+    (([1.0, 2.0], [3.0]), ([1, 2], [1])),
+])
+@settings(max_examples=40, deadline=None)
+def test_pair_kernels_equal_lambda_folds(spark, cases):
+    rows = [(i, a, b, x, y) for i, ((a, b), (x, y)) in enumerate(cases)]
+    df = spark.createDataFrame(
+        rows, "id long, a array<double>, b array<double>, x array<bigint>, y array<bigint>"
+    ).repartition(2)  # a shuffle keeps the projection out of planning-time folding
+    got = df.select(
+        "id",
+        similarity.dot_expr("a", "b").alias("dot"),
+        O.dot_fold("a", "b").alias("dot_fold"),
+        similarity.norm_expr("a").alias("norm"),
+        O.norm_fold("a").alias("norm_fold"),
+        similarity.equal_slots_expr("x", "y").alias("eq"),
+        O.equal_slots_fold("x", "y").alias("eq_fold"),
+    ).orderBy("id").collect()
+    assert len(got) == len(rows)
+    for r, (_, a, b, _, _) in zip(got, rows):
+        assert _bits(r.dot) == _bits(r.dot_fold) == _bits(O.sequential_dot(a, b)), (a, b)
+        assert _bits(r.norm) == _bits(r.norm_fold), a
+        assert r.eq == r.eq_fold
 
 
 def test_signatures_do_not_depend_on_partitioning(spark, parquet_input):

@@ -13,6 +13,9 @@ import os
 import shutil
 import subprocess
 import sys
+from pathlib import Path
+
+_ROOT = Path(__file__).resolve().parents[1]
 
 
 def _spark_submit() -> str:
@@ -27,7 +30,9 @@ def _spark_submit() -> str:
 def test_spark_submit_py_files_e2e(tmp_path, spark, code_files_small):
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("jobs_package", "/root/repo/jobs/package.py")
+    spec = importlib.util.spec_from_file_location(
+        "jobs_package", str(_ROOT / "jobs" / "package.py")
+    )
     pkg = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(pkg)
     zip_path = pkg.build(str(tmp_path / "llm_tab_cleaner_spark.zip"))
@@ -38,7 +43,7 @@ def test_spark_submit_py_files_e2e(tmp_path, spark, code_files_small):
     spark.createDataFrame(cf.iloc[:120]).write.parquet(src)
 
     job = str(tmp_path / "run_quality_filter.py")
-    shutil.copy("/root/repo/jobs/run_quality_filter.py", job)
+    shutil.copy(_ROOT / "jobs" / "run_quality_filter.py", job)
     out = str(tmp_path / "out.parquet")
     rep = str(tmp_path / "report.json")
 
