@@ -10,8 +10,8 @@ Architecture (see SURVEY.md §7):
   - ``functions/``  — native Column expressions (text features, PII scrub,
     hashes) and the scorer (langid + perplexity + token stats): the model is
     trained in Python and scored by one Java UDF.
-  - ``jvm/``        — the Java UDFs (the scorer, the near-dup signature
-    kernels) and the jar build (``build_session`` compiles it once per
+  - ``jvm/``        — the Java UDFs (the scorer, the dedup text and
+    signature kernels) and the jar build (``build_session`` compiles it once per
     source version).
   - ``operators/``  — rule compiler, quality-filter pipeline, profiler,
     dedup family, similarity search, text analysis, calibration.

@@ -2,6 +2,7 @@ package llm_tab_cleaner_spark.jvm;
 
 import java.nio.ByteBuffer;
 import java.nio.ByteOrder;
+import java.util.Arrays;
 
 import org.apache.spark.sql.SparkSession;
 import org.apache.spark.sql.api.java.UDF1;
@@ -14,10 +15,11 @@ import scala.collection.Iterator;
 import scala.collection.Seq;
 
 /**
- * The near-duplicate signature kernels as row-at-a-time Java UDFs: MinHash
- * over byte shingles, SimHash over whitespace tokens, and random-hyperplane
- * bucket keys for embedding vectors; plus the two pair-verify kernels, the
- * dot product and the equal-slot count.
+ * The dedup text and vector kernels as row-at-a-time Java UDFs: MinHash over
+ * byte shingles, SimHash and token n-gram hashes over one whitespace
+ * tokenizer ({@link #tokenHashes}), winnowing fingerprints over code points,
+ * and random-hyperplane bucket keys for embedding vectors; plus the two
+ * pair-verify kernels, the dot product and the equal-slot count.
  *
  * <p>Each kernel equals the numpy kernel it replaced bit for bit (those
  * kernels are now the test oracles in {@code tests/signature_oracles.py}).
@@ -26,7 +28,7 @@ import scala.collection.Seq;
  * ({@link #mod61}), never a widening product. The parameters (permutations,
  * plane matrix) are drawn on the driver and travel inside the UDF instance.
  *
- * <p>The {@code register*} methods register a signature kernel as a
+ * <p>The {@code register*} methods register a text or signature kernel as a
  * nondeterministic session function, as {@link Scorer#register} does:
  * Catalyst does not push a filter through a nondeterministic Project, so a
  * filter on a signature never evaluates the kernel a second time. The
@@ -99,11 +101,52 @@ public final class Signatures {
     }
 
     /**
-     * 64-bit SimHash over ASCII-whitespace-separated tokens of the UTF-8
-     * bytes: each token hashes to the wrapping polynomial
-     * {@code sum(byte_i * P^i)} finished with fmix64, and bit {@code j} of
-     * the signature is set when more than half the tokens have it set. A
-     * text with no token (NULL, empty, whitespace only) gives 0.
+     * Per-token hashes of the UTF-8 bytes, in document order: tokens are the
+     * runs between ASCII whitespace bytes (space, tab, LF, VT, FF, CR; UTF-8
+     * continuation bytes never match), each hashed to the wrapping
+     * polynomial {@code sum(byte_i * P^i)} finished with {@link #fmix64}.
+     * The one token-hash format of SimHash and NGrams.
+     */
+    static long[] tokenHashes(byte[] text) {
+        long[] out = new long[(text.length + 1) / 2];
+        int tokens = 0;
+        boolean inToken = false;
+        long h = 0, pow = 1;
+        for (byte c : text) {
+            int v = c & 0xFF;
+            if (v == ' ' || (v >= '\t' && v <= '\r')) {
+                if (inToken) {
+                    out[tokens++] = fmix64(h);
+                    inToken = false;
+                }
+                continue;
+            }
+            if (!inToken) {
+                inToken = true;
+                h = 0;
+                pow = 1;
+            }
+            h += v * pow;
+            pow *= POLY_P;
+        }
+        if (inToken) out[tokens++] = fmix64(h);
+        return Arrays.copyOf(out, tokens);
+    }
+
+    /** murmur3's 64-bit finalizer. */
+    static long fmix64(long h) {
+        h ^= h >>> 33;
+        h *= FMIX1;
+        h ^= h >>> 33;
+        h *= FMIX2;
+        h ^= h >>> 33;
+        return h;
+    }
+
+    /**
+     * 64-bit SimHash over {@link #tokenHashes}: bit {@code j} of the
+     * signature is set when more than half the tokens have it set. A text
+     * with no token (NULL, empty, whitespace only) gives 0.
      */
     public static final class SimHash implements UDF1<byte[], Long> {
         private static final long serialVersionUID = 1L;
@@ -111,51 +154,111 @@ public final class Signatures {
         @Override
         public Long call(byte[] text) {
             if (text == null) return 0L;
+            long[] tokens = tokenHashes(text);
             int[] ones = new int[64];
-            int tokens = 0;
-            boolean inToken = false;
-            long h = 0, pow = 1;
-            for (byte c : text) {
-                int v = c & 0xFF;
-                if (v == ' ' || (v >= '\t' && v <= '\r')) {
-                    if (inToken) {
-                        vote(ones, fmix64(h));
-                        tokens++;
-                        inToken = false;
-                    }
-                    continue;
-                }
-                if (!inToken) {
-                    inToken = true;
-                    h = 0;
-                    pow = 1;
-                }
-                h += v * pow;
-                pow *= POLY_P;
-            }
-            if (inToken) {
-                vote(ones, fmix64(h));
-                tokens++;
+            for (long h : tokens) {
+                for (int j = 0; j < 64; j++) ones[j] += (int) ((h >>> j) & 1);
             }
             long sig = 0;
             for (int j = 0; j < 64; j++) {
-                if (2 * ones[j] > tokens) sig |= 1L << j;
+                if (2 * ones[j] > tokens.length) sig |= 1L << j;
             }
             return sig;
         }
+    }
 
-        private static void vote(int[] ones, long h) {
-            for (int j = 0; j < 64; j++) ones[j] += (int) ((h >>> j) & 1);
+    /**
+     * Token n-gram hashes of the UTF-8 bytes: for each {@code n} in
+     * {@code ns}, the gram over tokens {@code i..i+n-1} of
+     * {@link #tokenHashes} hashes to {@code fmix64(((h_i * P) + h_i+1) * P +
+     * ...)} with wrapping arithmetic. With {@code distinct}, each n's grams
+     * are sorted as signed longs and deduplicated; without it they keep
+     * document order. The per-n results are concatenated in {@code ns}
+     * order. NULL gives an empty array.
+     */
+    public static final class NGrams implements UDF1<byte[], long[]> {
+        private static final long serialVersionUID = 1L;
+        private final int[] ns;
+        private final boolean distinct;
+
+        public NGrams(int[] ns, boolean distinct) {
+            this.ns = ns;
+            this.distinct = distinct;
         }
 
-        private static long fmix64(long h) {
-            h ^= h >>> 33;
-            h *= FMIX1;
-            h ^= h >>> 33;
-            h *= FMIX2;
-            h ^= h >>> 33;
-            return h;
+        @Override
+        public long[] call(byte[] text) {
+            long[] tokens = text == null ? new long[0] : tokenHashes(text);
+            int total = 0;
+            for (int n : ns) total += Math.max(tokens.length - n + 1, 0);
+            long[] out = new long[total];
+            int end = 0;
+            for (int n : ns) {
+                int start = end;
+                for (int i = 0; i + n <= tokens.length; i++) {
+                    long g = 0;
+                    for (int j = 0; j < n; j++) g = g * POLY_P + tokens[i + j];
+                    out[end++] = fmix64(g);
+                }
+                if (distinct) end = sortDistinct(out, start, end);
+            }
+            return end == total ? out : Arrays.copyOf(out, end);
         }
+    }
+
+    /**
+     * Winnowing fingerprints (Schleimer et al., SIGMOD 2003) over a text's
+     * code points ({@link String#codePoints}, so a character outside the
+     * BMP counts once, as in Python {@code str}): gram {@code i} hashes the
+     * {@code k} code points from {@code i} as {@code h = (h * 257 + cp) mod
+     * 2^31-1}, and every window of {@code w} consecutive grams selects its
+     * minimum (the rightmost one on ties; positions are not returned, so the
+     * tie-break never changes a value). A text with at most {@code w} grams
+     * is one window. Returns the selected hashes sorted and distinct; NULL,
+     * or fewer than {@code k} code points, gives an empty array.
+     */
+    public static final class Winnow implements UDF1<String, long[]> {
+        private static final long serialVersionUID = 1L;
+        private static final long MOD = (1L << 31) - 1;
+        private final int k;
+        private final int w;
+
+        public Winnow(int k, int w) {
+            this.k = k;
+            this.w = w;
+        }
+
+        @Override
+        public long[] call(String text) {
+            int[] cps = text == null ? new int[0] : text.codePoints().toArray();
+            if (cps.length < k) return new long[0];
+            int n = cps.length - k + 1;
+            long[] grams = new long[n];
+            for (int i = 0; i < n; i++) {
+                long h = 0;
+                for (int j = 0; j < k; j++) h = (h * 257 + cps[i + j]) % MOD;
+                grams[i] = h;
+            }
+            int windows = Math.max(n - w + 1, 1);
+            long[] mins = new long[windows];
+            for (int s = 0; s < windows; s++) {
+                long min = Long.MAX_VALUE;
+                for (int i = s; i < Math.min(s + w, n); i++) min = Math.min(min, grams[i]);
+                mins[s] = min;
+            }
+            return Arrays.copyOf(mins, sortDistinct(mins, 0, windows));
+        }
+    }
+
+    /** Sorts {@code a[from, to)} as signed longs and moves its distinct
+     *  values to the front; returns the end of the distinct run. */
+    private static int sortDistinct(long[] a, int from, int to) {
+        Arrays.sort(a, from, to);
+        int end = from;
+        for (int i = from; i < to; i++) {
+            if (i == from || a[i] != a[end - 1]) a[end++] = a[i];
+        }
+        return end;
     }
 
     /**
@@ -272,6 +375,18 @@ public final class Signatures {
 
     public static void registerSimHash(SparkSession spark, String name) {
         register(spark, name, new SimHash(), DataTypes.LongType);
+    }
+
+    /** {@code ns}: int32 little-endian n-gram orders. */
+    public static void registerNGrams(SparkSession spark, String name, byte[] ns, boolean distinct) {
+        int[] orders = new int[ns.length / 4];
+        ByteBuffer.wrap(ns).order(ByteOrder.LITTLE_ENDIAN).asIntBuffer().get(orders);
+        register(spark, name, new NGrams(orders, distinct),
+            DataTypes.createArrayType(DataTypes.LongType));
+    }
+
+    public static void registerWinnow(SparkSession spark, String name, int k, int w) {
+        register(spark, name, new Winnow(k, w), DataTypes.createArrayType(DataTypes.LongType));
     }
 
     /** {@code planes}: float32 little-endian, (dim × bands*rows) in C order. */

@@ -22,15 +22,15 @@ fingerprinting counterpart — its dedup unit is the whole cell/row
 
 Determinism & oracle parity: the gram hash is a polynomial rolling hash
 over Unicode CODE POINTS, base 257 modulo the Mersenne prime 2^31-1 —
-every intermediate fits comfortably in int64 on BOTH sides (numpy here,
-BIGINT in DuckDB), so the DuckDB oracle replays hashing, window-min
+every intermediate fits comfortably in int64 on BOTH sides (a Java long in
+the UDF, BIGINT in DuckDB), so the DuckDB oracle replays hashing, window-min
 selection and the rightmost tie-break value-for-value (the tie-break rides
 a single BIGINT key ``h * 2^31 + (2^31 - 1 - pos)`` whose window ``min``
 is lexicographic (h asc, pos desc)).  Code points — not UTF-8 bytes — so
 SQL ``substr``/``unicode`` (character-indexed) match ``str`` indexing.
 
-Scale shape: fingerprinting is one Arrow-batched pandas UDF (row-local →
-embarrassingly parallel, byte-bounded batches); pair matching is the same
+Scale shape: fingerprinting is one row-at-a-time Java UDF (row-local →
+embarrassingly parallel, no Python stage); pair matching is the same
 banded join shape as ``ngram_jaccard_pairs`` — explode fingerprints,
 document-frequency cap against boilerplate hot keys, int64-keyed
 self-join, groupBy pair.  No global sort, no all-pairs product; shuffle
@@ -39,50 +39,15 @@ payload is (id, int64 hash).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from llm_tab_cleaner_spark.operators.dedup import _byte_chunks
+from llm_tab_cleaner_spark import jvm as J
 
 #: Mersenne prime 2^31-1: with base 257 and code points < 0x110000 every
-#: fold step stays < 2^40 — exact in int64 (numpy) and BIGINT (DuckDB).
+#: fold step stays < 2^40 — exact in a Java long and a DuckDB BIGINT.
 WINNOW_MOD = (1 << 31) - 1
 WINNOW_BASE = 257
-
-_EMPTY = np.zeros(0, dtype=np.int64)
-
-
-def _winnow_hashes(text: str, k: int, w: int) -> np.ndarray:
-    """Sorted distinct winnowing fingerprint hashes of ``text``.
-
-    Documents with fewer than ``w`` grams (but at least one) are treated
-    as a single window — the paper's convention, and what the guarantee
-    requires for short files.  ``< k`` characters → no fingerprints.
-    """
-    if not isinstance(text, str) or len(text) < k:
-        return _EMPTY
-    codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(
-        np.int64
-    )
-    n = codes.size - k + 1
-    h = np.zeros(n, dtype=np.int64)
-    for j in range(k):
-        h = (h * WINNOW_BASE + codes[j : n + j]) % WINNOW_MOD
-    if n <= w:
-        # one (truncated) window over the whole doc, rightmost min
-        sel = np.array([n - 1 - int(np.argmin(h[::-1]))])
-    else:
-        win = sliding_window_view(h, w)  # (n-w+1, w) zero-copy view
-        # rightmost min per window: argmin over the REVERSED window gives
-        # the first min from the right
-        idx = w - 1 - np.argmin(win[:, ::-1], axis=1)
-        sel = np.unique(np.arange(n - w + 1, dtype=np.int64) + idx)
-    return np.unique(h[sel])
 
 
 def winnow_fingerprints(
@@ -93,26 +58,22 @@ def winnow_fingerprints(
     window: int = 16,
 ) -> DataFrame:
     """``id_cols`` + ``fp_hashes`` (array<long>): the distinct winnowing
-    fingerprints of ``content_col`` per row (empty array for rows shorter
-    than ``k`` characters).
+    fingerprints of ``content_col`` per row, sorted (empty array for NULL
+    and for rows shorter than ``k`` characters).
 
-    One Arrow-batched pandas UDF; per-row pure (fingerprints depend only on
-    the row's own text — batch composition can never change a result, per
-    the repo's batch-order-invariance contract), byte-bounded chunks like
-    the other dedup kernels (the hash array is ~8 B per input char).
+    One Java UDF (``Signatures.Winnow`` in ``jvm/Signatures.java``), row
+    local: a row's fingerprints depend only on its own text. A row with at
+    most ``window`` grams is one window, the paper's convention and what
+    the guarantee needs for short files.
     """
     if k < 1 or window < 1:
         raise ValueError(f"k and window must be >= 1, got k={k}, window={window}")
-
-    @F.pandas_udf("array<long>")
-    def fp_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in it:
-            for chunk in _byte_chunks(texts):
-                yield pd.Series(
-                    [_winnow_hashes(t, k, window) for t in chunk], dtype=object
-                )
-
-    return df.select(*id_cols, fp_udf(F.col(content_col)).alias("fp_hashes"))
+    name = J.session_udf(
+        df.sparkSession, "llm_tab_cleaner_winnow", repr((k, window)).encode(),
+        J.SIGNATURES_CLASS, "registerWinnow", k, window,
+    )
+    fp = F.call_function(name, F.col(content_col))
+    return df.select(*id_cols, fp.alias("fp_hashes"))
 
 
 def winnow_overlap_pairs(

@@ -12,12 +12,12 @@ of the RAW corpus; resampling by these weights shifts the corpus toward the
 target distribution.
 
 Spark-first shape (per-step scale notes in the function docstring):
-gram extraction rides the same vectorized Arrow kernel the dedup family
-uses (operators/dedup.py:token_multi_ngram_hashes — ONE tokenization pass
-produces every n-gram order, byte-bounded chunks); count estimation is two map-side-combined aggregations whose
-shuffle payload is (8-byte gram hash, partial count) pairs, never text;
-scoring is a join against the gram log-ratio table + a per-doc sum with
-map-side partial aggregation.
+gram extraction is the Java UDF the dedup family uses
+(operators/dedup.py:token_multi_ngram_hashes — ONE tokenization pass
+produces every n-gram order, no Python stage); count estimation is two
+map-side-combined aggregations whose shuffle payload is (8-byte gram hash,
+partial count) pairs, never text; scoring is a join against the gram
+log-ratio table + a per-doc sum with map-side partial aggregation.
 """
 
 from __future__ import annotations
@@ -39,9 +39,9 @@ def gram_occurrences(
 ) -> DataFrame:
     """id_cols + one row per token-n-gram OCCURRENCE (multiplicity kept —
     bag-of-n-grams semantics), gram identity as the kernel's 64-bit hash
-    ``gh``. ONE kernel pass for all n (token_multi_ngram_hashes — the text
-    is read and tokenized once, not once per n); tokenization is the
-    shared ASCII-ws split, so gram counts here agree with the
+    ``gh``. ONE Java UDF call for all n (token_multi_ngram_hashes — the
+    text is read and tokenized once, not once per n); tokenization is the
+    SimHash tokenizer, so gram counts here agree with the
     Jaccard/decontaminate family barring ~2^-64 hash collisions."""
     return token_multi_ngram_hashes(
         df, id_cols, text_col, tuple(n_values), distinct=False

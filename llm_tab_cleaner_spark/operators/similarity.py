@@ -1,7 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
 Baseline: brute-force cosine top-k; every dot product and norm is one Java
-UDF, ``Signatures.Dot`` (JVM-side, no Python, no lambda fold). Scale path:
+UDF, ``Signatures.Dot`` (JVM-side, no Python, no lambda fold), and a norm is
+computed once per vector (``vec_side``) or, for a literal query, once on
+the driver. Scale path:
 random-hyperplane LSH bucketing so the candidate set shrinks from N to a
 bucket; at 100 TB the bucket table is the only thing that shuffles, and the
 plane matrix travels inside the Java UDF that computes the keys
@@ -11,6 +13,7 @@ assignment) gives probe-style search without MLlib dependencies.
 
 from __future__ import annotations
 
+import math
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -42,10 +45,6 @@ def norm_expr(a):
     return F.sqrt(dot_expr(a, a))
 
 
-def cosine_expr(a, b):
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def equal_slots_expr(a, b):
     """Number of equal slots of two array<bigint> columns
     (``Signatures.EqualSlots``), with ``dot_expr``'s NULL and empty rules."""
@@ -54,14 +53,37 @@ def equal_slots_expr(a, b):
     )
 
 
+def vec_side(df: DataFrame, id_col, vec_col: str, id_out: str, v_out: str, n_out: str) -> DataFrame:
+    """One side of a cosine join: (id, vector cast to double once, its
+    norm). The cast and the norm run once per vector, not once per pair;
+    the pair's cosine is then ``dot(v_a, v_b) / (n_a * n_b)``. ``id_col`` is
+    a column name or a Column."""
+    ident = F.col(id_col) if isinstance(id_col, str) else id_col
+    return df.select(
+        ident.alias(id_out), F.col(vec_col).cast("array<double>").alias(v_out)
+    ).withColumn(n_out, norm_expr(F.col(v_out)))
+
+
+def pair_cosine(va: str, vb: str, na: str, nb: str):
+    """Cosine of two ``vec_side`` sides' vectors ``va``, ``vb`` with norms
+    ``na``, ``nb``, rounded to 4 places: one dot kernel per pair."""
+    return F.round(dot_expr(F.col(va), F.col(vb)) / (F.col(na) * F.col(nb)), 4)
+
+
 def cosine_topk(
     df: DataFrame, id_col: str, vec_col: str, query: Sequence[float], k: int = 10
 ) -> DataFrame:
-    """Brute-force cosine top-k vs a literal query vector. The per-row work
-    is the Java dot kernel over the array; the top-k is TakeOrderedAndProject
+    """Brute-force cosine top-k vs a literal query vector, ties by id. Per
+    row the Java dot kernel runs twice (the dot with the query and the
+    row's norm); the query's norm is a literal, the kernel's sequential
+    double sum replayed on the driver. The top-k is TakeOrderedAndProject
     (no full sort, no shuffle of vectors)."""
-    q = _lit_array(query)
-    sim = F.round(cosine_expr(F.col(vec_col).cast("array<double>"), q), 4)
+    q = [float(x) for x in query]
+    qq = 0.0
+    for x in q:
+        qq += x * x
+    v = F.col(vec_col).cast("array<double>")
+    sim = F.round(dot_expr(v, _lit_array(q)) / (norm_expr(v) * F.lit(math.sqrt(qq))), 4)
     return (
         df.select(F.col(id_col), sim.alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
@@ -147,13 +169,8 @@ def lsh_topk(
     for _ in range(max(0, multiprobe)):
         frontier = {key ^ (1 << j) for key in frontier for j in range(n_planes)}
         keys |= frontier
-    q = _lit_array(query)
-    sim = F.round(cosine_expr(F.col(vec_col).cast("array<double>"), q), 4)
-    return (
-        bucketed.filter(F.col("bucket").isin(*sorted(keys)))
-        .select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+    return cosine_topk(
+        bucketed.filter(F.col("bucket").isin(*sorted(keys))), id_col, vec_col, query, k
     )
 
 
@@ -165,12 +182,10 @@ def knn_join_brute(
     kept as the oracle-comparable baseline."""
     from pyspark.sql import Window
 
-    l = left.select(F.col(id_left).alias("qid"), F.col(vec_col).alias("_ql"))
-    r = right.select(F.col(id_right).alias("nid"), F.col(vec_col).alias("_qr"))
-    sim = F.round(
-        cosine_expr(F.col("_ql").cast("array<double>"), F.col("_qr").cast("array<double>")), 4
-    )
-    scored = l.crossJoin(r).select("qid", "nid", sim.alias("cosine"))
+    l = vec_side(left, id_left, vec_col, "qid", "_ql", "_nl")
+    r = vec_side(right, id_right, vec_col, "nid", "_qr", "_nr")
+    cos = pair_cosine("_ql", "_qr", "_nl", "_nr").alias("cosine")
+    scored = l.crossJoin(r).select("qid", "nid", cos)
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
@@ -248,13 +263,11 @@ def knn_join_blocked(
 
     schema = "qid long, nid long"
     cand = right.select(id_right, vec_col).mapInPandas(local_topk, schema).distinct()
-    lv = left.select(F.col(id_left).cast("long").alias("qid"), F.col(vec_col).alias("_ql"))
-    rv = right.select(F.col(id_right).cast("long").alias("nid"), F.col(vec_col).alias("_qr"))
-    sim = F.round(
-        cosine_expr(F.col("_ql").cast("array<double>"), F.col("_qr").cast("array<double>")), 4
-    )
+    lv = vec_side(left, F.col(id_left).cast("long"), vec_col, "qid", "_ql", "_nl")
+    rv = vec_side(right, F.col(id_right).cast("long"), vec_col, "nid", "_qr", "_nr")
     scored = (
-        cand.join(F.broadcast(lv), "qid").join(rv, "nid").select("qid", "nid", sim.alias("cosine"))
+        cand.join(F.broadcast(lv), "qid").join(rv, "nid")
+        .select("qid", "nid", pair_cosine("_ql", "_qr", "_nl", "_nr").alias("cosine"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -14,9 +14,8 @@ import os
 # One BLAS thread per python worker: N workers × default-N BLAS threads
 # oversubscribes quadratically, and numpy UDFs anti-scale (the former pandas
 # scorer measured a 4.5× slowdown at 32 workers). The quality-filter scorer
-# and the near-dup signature kernels run in the JVM now; the pins stay for
-# the numpy UDFs that remain (n-gram hashes, fingerprint, IVF and kNN
-# kernels). Must be set before numpy loads in the workers — local-mode
+# and the dedup text and signature kernels run in the JVM now; the pins stay
+# for the numpy UDFs that remain (IVF and kNN kernels). Must be set before numpy loads in the workers — local-mode
 # workers inherit the driver env, and executorEnv covers clusters.
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
            "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS"):
@@ -50,7 +49,7 @@ def build_session(
     ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
     to the first ``build_session`` call.
 
-    The quality-filter scorer, the near-dup signature kernels and the
+    The quality-filter scorer, the dedup text and signature kernels and the
     pair-verify dot product and equal-slot count are Java UDFs: their jar
     (``jvm.udf_jar()``) goes on ``spark.jars``, ahead of any jars in
     ``extra_conf``. The first call for a given version of the Java
@@ -74,8 +73,8 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch size for the pandas UDFs (n-gram hashes,
-        # fingerprints, user rule callables): 4096 halves per-batch fixed
+        # Arrow batch size for the pandas UDFs (IVF and kNN kernels,
+        # user rule callables): 4096 halves per-batch fixed
         # costs (serde setup, pandas materialization, numpy kernel
         # overheads) vs 2048 — measured 17.3 → 9.3 CPU-s floor per 50k-file
         # pass when the scorer was a pandas UDF (BENCH/BASELINE.md round-4).

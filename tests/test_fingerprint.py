@@ -1,5 +1,6 @@
-"""Winnowing fingerprints (operators/fingerprint.py) vs an independent
-brute-force reimplementation, plus the paper's structural guarantees."""
+"""Winnowing fingerprints (operators/fingerprint.py, the Java UDF
+``Signatures.Winnow``) vs an independent brute-force reimplementation, plus
+the paper's structural guarantees."""
 
 from __future__ import annotations
 
@@ -11,7 +12,6 @@ from pyspark.sql import functions as F
 from llm_tab_cleaner_spark.operators.fingerprint import (
     WINNOW_BASE,
     WINNOW_MOD,
-    _winnow_hashes,
     winnow_fingerprints,
     winnow_overlap_pairs,
 )
@@ -41,44 +41,53 @@ def brute_winnow(text: str, k: int, w: int) -> list[int]:
     return sorted({hashes[p] for p in sel})
 
 
+def _winnow(spark, texts, k: int, w: int) -> list[list[int]]:
+    """``winnow_fingerprints`` of each text, in input order."""
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}), "doc_id long, text string"
+    )
+    rows = winnow_fingerprints(df, ["doc_id"], "text", k, w).orderBy("doc_id").collect()
+    return [list(r.fp_hashes) for r in rows]
+
+
 @pytest.mark.parametrize("k,w", [(3, 4), (5, 8), (8, 16), (2, 1), (4, 100)])
-def test_kernel_matches_bruteforce(k, w):
+def test_kernel_matches_bruteforce(spark, k, w):
     rng = np.random.default_rng(11)
     alphabet = "abcdef ()\n\tλé"
-    for _ in range(120):
-        n = int(rng.integers(0, 60))
-        s = "".join(alphabet[i] for i in rng.integers(0, len(alphabet), n))
-        assert _winnow_hashes(s, k, w).tolist() == brute_winnow(s, k, w), repr(s)
+    texts = [
+        "".join(alphabet[i] for i in rng.integers(0, len(alphabet), int(rng.integers(0, 60))))
+        for _ in range(120)
+    ]
+    for s, got in zip(texts, _winnow(spark, texts, k, w)):
+        assert got == brute_winnow(s, k, w), repr(s)
 
 
-def test_kernel_edges():
-    assert _winnow_hashes("", 5, 8).size == 0
-    assert _winnow_hashes("abcd", 5, 8).size == 0  # shorter than k
-    assert _winnow_hashes(None, 5, 8).size == 0
+def test_kernel_edges(spark):
+    empty, short, null, one = _winnow(spark, ["", "abcd", None, "abcde"], 5, 8)
+    assert empty == short == null == []  # "abcd" is shorter than k
     # exactly k chars → one gram → one fingerprint
-    one = _winnow_hashes("abcde", 5, 8)
-    assert one.size == 1 and one.tolist() == brute_winnow("abcde", 5, 8)
+    assert len(one) == 1 and one == brute_winnow("abcde", 5, 8)
 
 
-def test_shared_substring_guarantee():
+def test_shared_substring_guarantee(spark):
     """Winnowing's core theorem: a shared substring of length >= k + w - 1
     yields at least one shared fingerprint."""
     k, w = 5, 8
     common = "def shared_helper(x): return x * 37 + 1"  # len 39 >= k+w-1
     a = "AAAA zzz " + common + " qq tail one"
     b = "totally other prefix " + common + " different suffix!"
-    fa, fb = set(_winnow_hashes(a, k, w)), set(_winnow_hashes(b, k, w))
-    assert fa & fb
+    fa, fb = _winnow(spark, [a, b], k, w)
+    assert set(fa) & set(fb)
 
 
-def test_density_bound():
+def test_density_bound(spark):
     """Expected density 2/(w+1): on random text the selected fraction sits
     near it (loose band — it's an expectation, not a guarantee)."""
     rng = np.random.default_rng(3)
     s = "".join("abcdefghij"[i] for i in rng.integers(0, 10, 20000))
     k, w = 8, 16
     n_grams = len(s) - k + 1
-    density = _winnow_hashes(s, k, w).size / n_grams
+    density = len(_winnow(spark, [s], k, w)[0]) / n_grams
     assert 0.5 * 2 / (w + 1) < density < 2.0 * 2 / (w + 1)
 
 

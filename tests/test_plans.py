@@ -272,20 +272,27 @@ def test_run_and_write_jobs_and_observed_single_scorer_plan(spark, tmp_path):
     assert "InMemoryTableScan" not in names, names
 
 
+#: entry → (its Java text/signature kernel, the plan nodes evaluating it)
 _SIGNATURE_ENTRIES = {
-    "minhash_pairs": "llm_tab_cleaner_minhash_",
-    "simhash_pairs": "llm_tab_cleaner_simhash_",
-    "embedding_near_dup": "llm_tab_cleaner_hyperplanes_",
-    "lsh_topk": "llm_tab_cleaner_hyperplanes_",
+    "minhash_pairs": ("llm_tab_cleaner_minhash_", 1),
+    "simhash_pairs": ("llm_tab_cleaner_simhash_", 1),
+    "embedding_near_dup": ("llm_tab_cleaner_hyperplanes_", 1),
+    "lsh_topk": ("llm_tab_cleaner_hyperplanes_", 1),
+    "ngram_jaccard": ("llm_tab_cleaner_ngrams_", 1),
+    "winnow_pairs": ("llm_tab_cleaner_winnow_", 1),
+    # one evaluation per input: the documents and the benchmark / target set
+    "decontaminate": ("llm_tab_cleaner_ngrams_", 2),
+    "dsir_weights": ("llm_tab_cleaner_ngrams_", 2),
+    "dsir_select": ("llm_tab_cleaner_ngrams_", 2),
 }
 
 
 @pytest.mark.parametrize("entry", sorted(_SIGNATURE_ENTRIES))
 def test_signature_entries_have_no_python_stage(spark, entry):
-    """The near-dup and LSH entries run their signature kernels as Java
-    UDFs: no query the entry runs (signature checkpoint, bucket-cap
-    collect, result) plans a Python stage, and the signature UDF is
-    evaluated in exactly one plan node across all of them."""
+    """The near-dup, LSH, n-gram, winnowing and DSIR entries run their
+    kernels as Java UDFs: no query the entry runs (checkpoints, bucket-cap
+    collect, result) plans a Python stage, and the kernel is evaluated once
+    per input across all of them."""
     import __spark_entry__ as E
 
     sc = spark.sparkContext
@@ -305,7 +312,8 @@ def test_signature_entries_have_no_python_stage(spark, entry):
         nodes += [(graph.apply(k).name(), graph.apply(k).desc()) for k in range(graph.size())]
     names = [n for n, _ in nodes]
     assert not {"ArrowEvalPython", "BatchEvalPython", "MapInPandas"} & set(names), names
-    assert sum(d.count(_SIGNATURE_ENTRIES[entry]) for _, d in nodes) == 1, nodes
+    prefix, evaluations = _SIGNATURE_ENTRIES[entry]
+    assert sum(d.count(prefix) for _, d in nodes) == evaluations, nodes
 
 
 _PAIR_KERNEL_ENTRIES = {
@@ -329,3 +337,13 @@ def test_pair_verify_entries_have_no_lambda_hof(spark, entry):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "lambdafunction" not in plan, plan[:3000]
     assert _PAIR_KERNEL_ENTRIES[entry] in plan, plan[:3000]
+
+
+def test_cosine_topk_evaluates_two_dot_kernels_per_row(spark):
+    """The query's norm is a literal computed on the driver: per row only
+    the dot with the query and the row's own norm call the dot kernel."""
+    import __spark_entry__ as E
+
+    out = E.queries()["cosine_topk"](spark, E.SF_DEFAULT)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("llm_tab_cleaner_dot_") == 2, plan[:3000]

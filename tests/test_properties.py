@@ -75,30 +75,6 @@ def test_platt_outputs_probabilities(pairs):
 _JAVA_WS = " \t\n\x0b\x0c\r"
 
 
-def _naive_distinct_ngrams(text: str, n: int) -> int:
-    """Independent (pure-Python) distinct token-n-gram count using the same
-    ASCII-whitespace token boundaries as the numpy kernel (Java \\s set —
-    NOT str.split(), which also splits on unicode whitespace)."""
-    toks = [t for t in re.split(f"[{re.escape(_JAVA_WS)}]+", text) if t]
-    return len({tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)})
-
-
-@given(st.lists(st.text(max_size=120), min_size=1, max_size=10), st.integers(2, 4))
-@settings(max_examples=200, deadline=None)
-def test_ngram_hash_count_matches_naive(texts, n):
-    """The vectorized gram hasher yields exactly one hash per DISTINCT token
-    n-gram (64-bit collisions are ~impossible at test sizes), and a row's
-    grams never depend on batch composition."""
-    from llm_tab_cleaner_spark.operators.dedup import _batch_token_ngram_hashes
-
-    batch = _batch_token_ngram_hashes(pd.Series(texts), n)
-    assert len(batch) == len(texts)
-    for t, grams in zip(texts, batch):
-        assert len(grams) == _naive_distinct_ngrams(t, n)
-        solo = _batch_token_ngram_hashes(pd.Series([t]), n)[0]
-        assert np.array_equal(np.sort(solo), np.sort(grams))
-
-
 @given(st.lists(st.text(max_size=120), min_size=1, max_size=10))
 @settings(max_examples=200, deadline=None)
 def test_scorer_token_stats_match_naive(texts):

@@ -1,6 +1,7 @@
 """The JVM kernels in ``jvm/Signatures.java`` equal the oracles in
-``signature_oracles.py`` bit for bit: MinHash and SimHash on arbitrary text
-(empty, whitespace-only, non-ASCII, NULL), hyperplane keys on random
+``signature_oracles.py`` bit for bit: MinHash, SimHash, token n-gram hashes
+and winnowing fingerprints on arbitrary text (empty, whitespace-only,
+non-ASCII, astral, NULL, too short), hyperplane keys on random
 matrices against both the float32 and the float64 matmul, and the
 pair-verify dot product, norm and equal-slot count against the lambda folds
 they replaced (NULL arrays, NULL elements, unequal and zero widths). Values
@@ -8,6 +9,7 @@ do not depend on how rows are partitioned."""
 
 from __future__ import annotations
 
+import re
 import struct
 
 import numpy as np
@@ -18,10 +20,11 @@ from hypothesis import strategies as st
 
 import signature_oracles as O
 from llm_tab_cleaner_spark import jvm as J
-from llm_tab_cleaner_spark.operators import dedup, similarity
+from llm_tab_cleaner_spark.operators import dedup, fingerprint, similarity
 
 _EDGE_TEXTS = [
-    "", " ", "   \t\n", "abcd", "abcde", "héllo wörld ", "日本語 テキスト", "x\ty\nz",
+    "", " ", "   \t\n", "\x0b\x0c \x0b", "abcd", "abcde", "héllo wörld ",
+    "日本語 テキスト", "x\ty\nz", "emoji 😀 𝔘 😀 tail", "\x1c\x85 not ascii whitespace",
 ]
 _TEXTS = st.lists(
     st.one_of(st.none(), st.text(max_size=120), st.sampled_from(_EDGE_TEXTS)),
@@ -52,6 +55,66 @@ def test_minhash_and_simhash_equal_numpy_oracles(spark, texts):
     assert _minhash(df) == O.minhash_batch(texts)
     assert _minhash(df, num_hashes=16, shingle_k=3, seed=7) == O.minhash_batch(texts, 16, 3, 7)
     assert _simhash(df) == [int(v) for v in O.batch_simhash(pd.Series(texts))]
+
+
+_JAVA_WS = " \t\n\x0b\x0c\r"
+
+
+def _naive_distinct_ngrams(text: str | None, n: int) -> int:
+    """Distinct token-n-gram count in pure Python, splitting on the ASCII
+    whitespace bytes only (not str.split(), which also splits on unicode
+    whitespace)."""
+    toks = [t for t in re.split(f"[{re.escape(_JAVA_WS)}]+", text or "") if t]
+    return len({tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)})
+
+
+def _ngrams(frame, n_values, distinct):
+    out = dedup.token_multi_ngram_hashes(frame, ["doc_id"], "text", n_values, distinct)
+    return [list(r.gram_hashes) for r in out.orderBy("doc_id").collect()]
+
+
+def _winnow(frame, k, w):
+    out = fingerprint.winnow_fingerprints(frame, ["doc_id"], "text", k, w)
+    return [list(r.fp_hashes) for r in out.orderBy("doc_id").collect()]
+
+
+_NGRAM_ORDERS = st.one_of(
+    st.sampled_from([((3,), True), ((5,), True), ((13,), True), ((1, 2), False),
+                     ((1, 2), True), ((3,), False)]),
+    st.tuples(st.lists(st.integers(1, 4), min_size=1, max_size=3).map(tuple), st.booleans()),
+)
+
+
+@given(_TEXTS, _NGRAM_ORDERS)
+@example(_EDGE_TEXTS + [None], ((1, 2), False))
+@example(_EDGE_TEXTS + [None], ((3,), True))
+@settings(max_examples=40, deadline=None)
+def test_ngrams_equal_numpy_oracle(spark, texts, orders):
+    n_values, distinct = orders
+    got = _ngrams(_docs(spark, texts), n_values, distinct)
+    assert got == O.batch_multi_ngram_hashes(texts, n_values, distinct)
+    if distinct and len(n_values) == 1:
+        # one hash per distinct token n-gram (64-bit collisions are
+        # ~impossible at test sizes)
+        assert [len(g) for g in got] == [_naive_distinct_ngrams(t, n_values[0]) for t in texts]
+
+
+@given(_TEXTS, st.sampled_from([(8, 16), (5, 4), (1, 1), (3, 50), (2, 3)]))
+@example(_EDGE_TEXTS + [None, "abc", "abcdefgh", "x" * 20], (3, 50))
+@settings(max_examples=40, deadline=None)
+def test_winnow_equal_numpy_oracle(spark, texts, kw):
+    k, w = kw
+    assert _winnow(_docs(spark, texts), k, w) == [O.winnow_hashes(t, k, w) for t in texts]
+
+
+@pytest.mark.parametrize("n_values", [(), (0,), (-1,), (2, 0)])
+def test_ngram_orders_validated_on_the_driver(spark, n_values):
+    df = _docs(spark, ["a b c"])
+    with pytest.raises(ValueError, match="n >= 1"):
+        dedup.token_multi_ngram_hashes(df, ["doc_id"], "text", n_values)
+    if len(n_values) == 1:
+        with pytest.raises(ValueError, match="n >= 1"):
+            dedup.token_ngram_hashes(df, ["doc_id"], "text", n_values[0])
 
 
 @given(
@@ -135,9 +198,15 @@ def test_signatures_do_not_depend_on_partitioning(spark, parquet_input):
     texts += [None, ""] + _EDGE_TEXTS
     df = parquet_input(pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
     want_mh, want_sh = O.minhash_batch(texts), [int(v) for v in O.batch_simhash(pd.Series(texts))]
+    want_ng = O.batch_multi_ngram_hashes(texts, (1, 3), True)
+    want_fp = [O.winnow_hashes(t, 5, 4) for t in texts]
     for parts in (1, 7):
         assert _minhash(df.repartition(parts)) == want_mh
         assert _simhash(df.repartition(parts)) == want_sh
+        assert _ngrams(df.repartition(parts), (1, 3), True) == want_ng
+        assert _winnow(df.repartition(parts), 5, 4) == want_fp
+    # the oracles are row local too: one row at a time gives the batch's values
+    assert [O.batch_multi_ngram_hashes([t], (1, 3), True)[0] for t in texts] == want_ng
 
     m = rng.standard_normal((120, 24)).astype(np.float32)
     vecs = spark.createDataFrame(

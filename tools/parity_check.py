@@ -3,13 +3,16 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same parquet dir, then compares
 row-count, column set, and order-insensitive values (sorted columns, sorted
-rows). Usage:
+rows). Each result line ends with the Spark result's sorted-row md5
+(``sorted_row_md5``), so two runs of this script diff into the entries whose
+output changed. Usage:
 
     python tools/parity_check.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 from pathlib import Path
 
@@ -43,6 +46,18 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
         elif str(df[c].dtype) == "bool":
             df[c] = df[c].astype(str)
     return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def _cell(v) -> str:
+    return repr(v.tolist() if hasattr(v, "tolist") else v)
+
+
+def sorted_row_md5(df: pd.DataFrame) -> str:
+    """md5 of the column names and the rows as text, columns by name and rows
+    sorted, every value at full precision: equal digests mean equal results."""
+    cols = sorted(df.columns)
+    rows = sorted("\t".join(_cell(v) for v in row) for row in df[cols].itertuples(index=False))
+    return hashlib.md5("\n".join(["\t".join(cols), *rows]).encode()).hexdigest()
 
 
 def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[str]:
@@ -94,8 +109,9 @@ def main():
             print(f"[FAIL] {name}: spark error: {e}")
             failed.append(name)
             continue
+        md5 = sorted_row_md5(sdf)
         if name not in oracles:
-            print(f"[rows-only] {name}: {len(sdf)} rows")
+            print(f"[rows-only] {name}: {len(sdf)} rows md5={md5}")
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -105,12 +121,12 @@ def main():
             continue
         problems = compare(name, sdf, odf)
         if problems:
-            print(f"[FAIL] {name}:")
+            print(f"[FAIL] {name}: md5={md5}")
             for p in problems:
                 print(f"    {p}")
             failed.append(name)
         else:
-            print(f"[ok] {name}: {len(sdf)} rows match")
+            print(f"[ok] {name}: {len(sdf)} rows match md5={md5}")
 
     print(f"\n{len(failed)} failures: {failed}")
     spark.stop()
