@@ -1,104 +1,95 @@
-"""PII / secret / toxicity scrubbing — compiled-regex, fully native.
+"""PII / secret / toxicity scrubbing: one rule table, applied in order.
 
-Spark side is a chain of ``regexp_replace`` Column expressions (whole-stage
-codegen, zero Python); ``scrub_python`` is the byte-exact mirror used by the
-fixture generator to produce golden scrubbed text. Patterns are kept in the
-common dialect subset of Java regex / Python re / RE2 (no backrefs, no
-lookbehind) so the same strings also work in DuckDB oracle SQL.
+On Spark it is one Java UDF (``jvm/Scrub.java``); ``scrub_python`` (fixture
+goldens) and ``scrub_sql`` (DuckDB oracles) mirror it in Python ``re`` and
+RE2. Patterns keep to the common subset (no backrefs, no lookbehind).
+
+The three agree on ASCII text only (``_WS`` spells out Java's ``\\s``:
+Python's adds \\x1c-\\x1f, RE2's lacks \\x0b). Python ``re`` scrubs
+non-ASCII text Java leaves alone: its ``\\d`` takes Arabic-Indic digits
+(<SSN>, <IP_ADDRESS>) and its ``(?i)`` folds U+017F to ``s`` and U+212A to
+``k`` (``ſecret=…``, ``api_Key=…``, ``baſtard``). ``re.ASCII`` does not
+close the gap; it moves it to ``\\b`` next to letters like ``é``, which
+Java 17's ``\\b`` counts as word characters. RE2 folds case like Python and
+its ``\\b`` is ASCII-only (``é123-45-6789`` is an SSN to DuckDB only).
 
 Reference parity: email/SSN/credit-card patterns mirror
 /root/reference/src/llm_tab_cleaner/advanced_security.py:56-88 (detection)
 and :277-307 (masking); secret-keyword family mirrors security.py:25-28.
 Replacement policy differs deliberately: fixed tokens (<EMAIL>, <SSN>, ...)
 instead of format-preserving masks — deterministic, byte-stable, and safe
-for training-data pipelines.
+for training-data pipelines. ``tokenize_expr`` stays for SURVEY T19.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
-# (name, pattern, replacement) applied strictly in this order.
-SCRUB_RULES: tuple[tuple[str, str, str], ...] = (
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    ("aws_key", r"\bAKIA[0-9A-Z]{16}\b", "<API_KEY>"),
-    (
-        "secret_assignment",
-        r"(?i)(?:api[_-]?key|apikey|secret|token|password|passwd)\s*[:=]\s*[\"']?[A-Za-z0-9_\-/+]{8,}[\"']?",
-        "<API_KEY>",
-    ),
-    ("ssn", r"\b\d{3}-\d{2}-\d{4}\b", "<SSN>"),
-    ("credit_card", r"\b\d{4}[- ]?\d{4}[- ]?\d{4}[- ]?\d{4}\b", "<CREDIT_CARD>"),
-    ("ipv4", r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP_ADDRESS>"),
-)
+from llm_tab_cleaner_spark import jvm as J
 
 # Toxicity lexicon (configurable; deliberately small + mild defaults).
 TOXIC_LEXICON: tuple[str, ...] = ("bastard", "dumbass", "shithead", "asshole")
-_TOXIC_PATTERN = r"(?i)\b(?:" + "|".join(TOXIC_LEXICON) + r")\b"
-TOXIC_RULE = ("toxic", _TOXIC_PATTERN, "<TOXIC>")
 
-ALL_RULES: tuple[tuple[str, str, str], ...] = SCRUB_RULES + (TOXIC_RULE,)
+_WS = r"[ \t\n\x0B\f\r]"
 
-EMAIL_PATTERN = SCRUB_RULES[0][1]  # shared by profiler.email_domains + oracles
+# (name, pattern, replacement, gates). Gates are lower-case literals, one of
+# which the lower-cased text holds whenever the pattern matches; the kernel
+# searches a family only then. None: no literal anchor, always searched.
+SCRUB_TABLE: tuple[tuple[str, str, str, tuple[str, ...] | None], ...] = (
+    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>", ("@",)),
+    ("aws_key", r"\bAKIA[0-9A-Z]{16}\b", "<API_KEY>", ("akia",)),
+    (
+        "secret_assignment",
+        r"(?i)(?:api[_-]?key|apikey|secret|token|password|passwd)"
+        + _WS + r"*[:=]" + _WS + r"*[\"']?[A-Za-z0-9_\-/+]{8,}[\"']?",
+        "<API_KEY>",
+        ("key", "secret", "token", "passw"),
+    ),
+    ("ssn", r"\b\d{3}-\d{2}-\d{4}\b", "<SSN>", None),
+    ("credit_card", r"\b\d{4}[- ]?\d{4}[- ]?\d{4}[- ]?\d{4}\b", "<CREDIT_CARD>", None),
+    ("ipv4", r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP_ADDRESS>", None),
+    ("toxic", r"(?i)\b(?:" + "|".join(TOXIC_LEXICON) + r")\b", "<TOXIC>", TOXIC_LEXICON),
+)
 
-_COMPILED = [(name, re.compile(pat), repl) for name, pat, repl in ALL_RULES]
+EMAIL_PATTERN = SCRUB_TABLE[0][1]  # shared by profiler.email_domains + oracles
+
+_COMPILED = [(re.compile(pat), repl) for _name, pat, repl, _gates in SCRUB_TABLE]
+
+
+def scrub_kernel(col: Column, spark: SparkSession | None = None) -> Column:
+    """The Java scrub's struct of ``col``: ``scrubbed`` (NULL for NULL),
+    ``content_clean`` (NULL when nothing matched) and ``scrub_rules`` (per
+    family its name if it matched the original text, else null; empty when
+    nothing matched). Registered nondeterministic in ``spark`` (default: the
+    active session), so Catalyst never inlines it into a filter."""
+    names, patterns, replacements, gates = zip(*SCRUB_TABLE)
+    name = J.session_udf(
+        spark or SparkSession.active(), "llm_tab_cleaner_scrub", repr(SCRUB_TABLE).encode(),
+        J.SCRUB_CLASS, "register",
+        "scrubbed boolean, content_clean string, scrub_rules array<string>",
+        list(names), list(patterns), list(replacements),
+        [None if g is None else list(g) for g in gates],
+    )
+    return F.call_function(name, col)
 
 
 def scrub_expr(col: Column) -> Column:
-    """Chained regexp_replace applying every scrub rule in order."""
-    out = col
-    for _name, pat, repl in ALL_RULES:
-        out = F.regexp_replace(out, pat, repl)
-    return out
+    """``col`` with every scrub rule applied in order."""
+    return F.coalesce(scrub_kernel(col).getField("content_clean"), col)
 
 
 def any_pii_detect_expr(col: Column) -> Column:
-    """Gated any-PII detection for the hot path: each expensive family regex
-    runs behind a cheap necessary-condition scan (substring containment),
-    short-circuited per row. Identity-equal to ``any_pii_expr`` — a gate is
-    a NECESSARY condition for its family's pattern: email needs '@', an AWS
-    key needs 'AKIA', the (?i) secret pattern needs one of
-    key/secret/token/passw in the lowercased text (apikey/api_key → 'key',
-    password/passwd → 'passw'), and the (?i) toxic pattern needs one of its
-    lexicon words lowercased. Round-2 measured the email/AKIA gates (72 MB
-    leg ~19 → ~10 CPU-s); round-4 measured the lower()-contains gates for
-    the secret/toxic families (detection scan 5.92 → 4.90 CPU-s/50k files,
-    best of 3 interleaved pairs, identical match sets). The digit families
-    (ssn/cc/ipv4) have no literal anchor — a digit gate is near-universal
-    in code and was not worth a scan (ROADMAP round-3 note)."""
-    by_name = {name: pat for name, pat, _repl in ALL_RULES}
-    lc = F.lower(col)
-    secret_gate = (
-        lc.contains("key") | lc.contains("secret")
-        | lc.contains("token") | lc.contains("passw")
-    )
-    toxic_gate: Column | None = None
-    for w in TOXIC_LEXICON:
-        t = lc.contains(w)
-        toxic_gate = t if toxic_gate is None else (toxic_gate | t)
-    return (
-        (col.contains("@") & col.rlike(by_name["email"]))
-        | (col.contains("AKIA") & col.rlike(by_name["aws_key"]))
-        | (secret_gate & col.rlike(by_name["secret_assignment"]))
-        | col.rlike(by_name["ssn"])
-        | col.rlike(by_name["credit_card"])
-        | col.rlike(by_name["ipv4"])
-        | (toxic_gate & col.rlike(by_name["toxic"]))
-    )
-
-
-def any_pii_expr(col: Column) -> Column:
-    combined = "|".join(f"(?:{pat})" for _n, pat, _r in ALL_RULES)
-    return col.rlike(combined)
+    """Whether any scrub family matches ``col`` (NULL for NULL)."""
+    return scrub_kernel(col).getField("scrubbed")
 
 
 def scrub_python(text: str) -> str:
-    """Byte-exact Python mirror of ``scrub_expr`` (fixture golden path)."""
+    """Python mirror of ``scrub_expr``, byte-exact on ASCII text."""
     out = text
-    for _name, rx, repl in _COMPILED:
+    for rx, repl in _COMPILED:
         out = rx.sub(repl, out)
     return out
 
@@ -113,7 +104,7 @@ def tokenize_expr(col: Column, prefix: str = "TOKEN_") -> Column:
 def scrub_sql(col_name: str) -> str:
     """DuckDB-SQL mirror (RE2 dialect) for oracle queries."""
     expr = col_name
-    for _name, pat, repl in ALL_RULES:
+    for _name, pat, repl, _gates in SCRUB_TABLE:
         sql_pat = pat.replace("'", "''")
         expr = f"regexp_replace({expr}, '{sql_pat}', '{repl}', 'g')"
     return expr

@@ -167,29 +167,3 @@ def keyword_langid(col: Column) -> Column:
     )
     best = F.array_max(pairs)
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit(None))
-
-
-def feature_columns(content: Column) -> dict[str, Column]:
-    """The full native feature bundle as standalone expressions (each tree
-    self-contained — fine for one-off queries/oracles). The pipeline takes
-    the token/alnum stats and is_nullish from the JVM scorer instead: these
-    trees each embed their own ``split``, and neither CollapseProject nor
-    codegen subexpression elimination dedupes the copies (measured 24 vs 8
-    CPU-s for the token family on 72 MB).
-
-    Deliberately lambda-free: any higher-order function in the collapsed
-    Project disables whole-stage codegen AND subexpression elimination for
-    every expression in it (measured ~2× on the full pipeline)."""
-    return {
-        "n_chars": n_chars(content).alias("n_chars"),
-        # n_lines deliberately NOT here: no drop rule consumes it, and it
-        # costs a full-content regexp_replace + split per row (profiling
-        # queries that want it call text_features.n_lines directly)
-        "has_long_line": has_long_line(content).alias("has_long_line"),
-        "n_tokens": n_tokens(content).alias("n_tokens"),
-        "n_distinct_tokens": n_distinct_tokens(content).alias("n_distinct_tokens"),
-        "unique_token_ratio": unique_token_ratio(content).alias("unique_token_ratio"),
-        "alnum_ratio": alnum_ratio(content).alias("alnum_ratio"),
-        "is_nullish": is_nullish(content).alias("is_nullish"),
-        "is_autogen": is_autogen(content).alias("is_autogen"),
-    }

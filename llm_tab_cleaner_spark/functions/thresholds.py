@@ -99,9 +99,6 @@ SHORT_TOKENS_MAX = 15
 SHORT_BASE = 0.90
 SHORT_SLOPE = 0.01
 
-# Perplexity (hashed char-trigram model, bits/char). Above DROP → junk text.
-PPL_DROP_BITS = 6.0
-
 # Language-ID: flag a mismatch only when the model is confident. Calibrated
 # on the fixture: normal-class margins ≥1.55 (and always agree with `lang`),
 # wrong-lang margins ≥1.71, noise classes ≤0.9 → 1.2 splits cleanly.
@@ -134,16 +131,3 @@ AUTOGEN_PATTERNS = (
     "\"lockfileVersion\"",
     "# This file is auto-generated",
 )
-
-LANGUAGES = ("python", "javascript", "java", "c", "go", "markdown", "json")
-
-EXT_TO_LANG = {
-    ".py": "python",
-    ".js": "javascript",
-    ".java": "java",
-    ".c": "c",
-    ".h": "c",
-    ".go": "go",
-    ".md": "markdown",
-    ".json": "json",
-}

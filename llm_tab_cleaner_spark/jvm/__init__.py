@@ -1,9 +1,10 @@
 """The JVM UDF jar: every ``*.java`` here compiled once per source version.
 
 ``udf_jar()`` returns the path of a jar holding the package's Java UDFs
-(``Scorer``, the quality-filter scorer, and ``Signatures``, the dedup text
-and signature kernels: MinHash, SimHash, token n-grams, winnowing,
-hyperplane buckets, and the pair-verify dot product and equal-slot count),
+(``Scorer``, the quality-filter scorer; ``Scrub``, the PII / secret /
+toxicity scrub; and ``Signatures``, the dedup text and signature kernels:
+MinHash, SimHash, token n-grams, winnowing, hyperplane buckets, and the
+pair-verify dot product and equal-slot count),
 compiling them with the JDK's ``javac`` against the Spark jars PySpark
 ships when the per-user cache has no jar for these sources and this Spark
 version. ``build_session`` puts it on ``spark.jars``; for spark-submit,
@@ -31,6 +32,7 @@ import zipfile
 from importlib import resources
 
 SCORER_CLASS = "llm_tab_cleaner_spark.jvm.Scorer"
+SCRUB_CLASS = "llm_tab_cleaner_spark.jvm.Scrub"
 SIGNATURES_CLASS = "llm_tab_cleaner_spark.jvm.Signatures"
 JAR_NAME = "llm_tab_cleaner_spark-udfs.jar"
 
@@ -48,7 +50,7 @@ def _javac() -> str:
     if found:
         return found
     raise RuntimeError(
-        "javac not found: the scorer and the dedup kernels run "
+        "javac not found: the scorer, the scrub and the dedup kernels run "
         "as Java UDFs that build_session compiles once into "
         f"{cache_dir()}. Install a JDK 17+ (e.g. `apt-get install "
         "openjdk-17-jdk-headless`) or point JAVA_HOME at one, then rerun. "

@@ -16,7 +16,8 @@ Plan shape (SURVEY.md §7):
     JVM scorer UDF over the full content (it scores the first
     TH.SCORE_PREFIX_CHARS characters and checks null-ish on all of it) →
     rule when-chains → keep/confidence →
-    scrub (regexp_replace chain) → clean_sha256 → result + audit
+    JVM scrub UDF (gated detection, attribution, replace chain) →
+    clean_sha256 → result + audit
 """
 
 from __future__ import annotations
@@ -26,8 +27,7 @@ from pyspark.sql import functions as F
 
 from llm_tab_cleaner_spark.functions import thresholds as TH
 from llm_tab_cleaner_spark.functions import text_features as TF
-from llm_tab_cleaner_spark.functions.pii import ALL_RULES as SCRUB_RULE_SPECS
-from llm_tab_cleaner_spark.functions.pii import any_pii_detect_expr, scrub_expr
+from llm_tab_cleaner_spark.functions.pii import scrub_kernel
 from llm_tab_cleaner_spark.functions.scoring import ScoringModel, default_model, with_scores
 
 KEY_COLS = ("repo", "path", "commit")
@@ -172,38 +172,25 @@ def apply_quality_filter(
         ),
         F.lit(TH.KEEP_CONF_FLOOR),
     )
-    # scrub stage: ONE combined detection scan gates the 7-pass replace
-    # chain + per-family attribution — PII-free rows (the vast majority) pay
-    # a single regex pass instead of 14. Identity-equal to the ungated chain.
+    # scrub: one Java UDF detects, attributes and replaces (pii.scrub_kernel);
+    # its content_clean is NULL on rows without PII, so coalesce keeps content
     out = out.withColumns({
         "confidence": F.when(~F.col("keep"), F.col("drop_confidence"))
         .when(F.col("drop_confidence") > 0, F.lit(1.0) - F.col("drop_confidence"))
         .otherwise(clean_keep_conf),
-        "scrubbed": any_pii_detect_expr(content),
+        "_scrub": scrub_kernel(content, spark),
     })
-    scrub_hits = F.array(
-        *[
-            F.when(content.rlike(pat), F.lit(name))
-            for name, pat, _repl in SCRUB_RULE_SPECS
-        ]
-    )
+    clean = F.col("_scrub.content_clean")
     out = out.withColumns({
-        "content_clean": F.when(F.col("scrubbed"), scrub_expr(content)).otherwise(content),
-        "scrub_rules": F.when(F.col("scrubbed"), scrub_hits).otherwise(
-            F.array().cast("array<string>")
-        ),
-    })
-    # for unscrubbed rows (the vast majority) content_clean IS content, so
-    # clean_sha256 == content_sha256 by construction — reuse it instead of
-    # paying a second full-content SHA-256 pass per row (guide §1.2
-    # per-task work); scrubbed rows still hash their cleaned bytes
-    out = out.withColumns({
-        "clean_sha256": F.when(
-            F.col("scrubbed"), F.sha2(F.col("content_clean"), 256)
-        ).otherwise(F.col("content_sha256")),
+        "scrubbed": F.col("_scrub.scrubbed"),
+        "content_clean": F.coalesce(clean, content),
+        "scrub_rules": F.col("_scrub.scrub_rules"),
+        # unscrubbed rows keep their bytes, so they reuse content_sha256
+        # instead of paying a second full-content SHA-256 pass
+        "clean_sha256": F.coalesce(F.sha2(clean, 256), F.col("content_sha256")),
         "partition_id": F.spark_partition_id(),
     })
-    return out, model
+    return out.drop("_scrub"), model
 
 
 def audit_trail(result: DataFrame) -> DataFrame:

@@ -48,29 +48,6 @@ def quality_score(col: Column) -> Column:
     return F.round(F.greatest(F.least(raw, F.lit(1.0)), F.lit(0.0)), 4)
 
 
-def char_ngrams(col: Column, n: int = 5) -> Column:
-    """Array of character n-grams — native substring windows. Strings shorter
-    than n yield [] (sequence(1, x<1) would count DOWN and emit bogus grams)."""
-    return F.when(
-        F.length(col) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(col) - (n - 1)),
-            lambda i: F.substring(col, i, n),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def rolling_hash_fingerprints(col: Column, n: int = 8, keep_mod: int = 16) -> Column:
-    """Winnowing-style selective fingerprints: hash every char n-gram, keep
-    those ≡ 0 (mod keep_mod) — a deterministic sketch of the document usable
-    for containment checks. Fully native (sequence/transform/filter)."""
-    grams = char_ngrams(col, n)
-    hashes = F.transform(grams, lambda g: F.xxhash64(g))
-    return F.array_distinct(
-        F.filter(hashes, lambda h: F.pmod(h, F.lit(keep_mod)) == 0)
-    )
-
-
 # tiny default stopword list (deterministic; callers pass their own for
 # real lexicons — this is the operator, not the linguistics)
 STOPWORDS = (

@@ -267,21 +267,6 @@ def test_ngram_jaccard_short_docs_dont_crash(spark):
     assert set(map(tuple, out[["id_a", "id_b"]].values)) == set()
 
 
-def test_char_ngrams_short_strings_empty(spark):
-    from llm_tab_cleaner_spark.operators import text_analysis as TA
-
-    pdf = pd.DataFrame({"doc_id": [1, 2, 3], "text": ["ab", "abcde", ""]})
-    df = spark.createDataFrame(pdf)
-    out = df.select(
-        "doc_id",
-        TA.char_ngrams(F.col("text"), 5).alias("grams"),
-        TA.rolling_hash_fingerprints(F.col("text"), 8, 1).alias("fps"),
-    ).toPandas().set_index("doc_id")
-    assert list(out.loc[1, "grams"]) == []  # shorter than n → no bogus grams
-    assert list(out.loc[2, "grams"]) == ["abcde"]
-    assert list(out.loc[1, "fps"]) == [] and list(out.loc[3, "fps"]) == []
-
-
 def test_chunk_documents(spark):
     from llm_tab_cleaner_spark.operators import text_analysis as TA
 

@@ -78,8 +78,11 @@ def test_whole_stage_codegen_covers_rules(spark, tmp_path):
 
     cf_path, _ = write_fixture(str(tmp_path / "fx2"), 200)
     out = spark.read.parquet(cf_path)
-    for name, expr in TF.feature_columns(F.col("content")).items():
-        out = out.withColumn(name, expr)
+    for name in (
+        "n_chars", "has_long_line", "n_tokens", "n_distinct_tokens",
+        "unique_token_ratio", "alnum_ratio", "is_nullish", "is_autogen",
+    ):
+        out = out.withColumn(name, getattr(TF, name)(F.col("content")))
     plan = _plan(out)
     # codegen'd operators print with a "*(n)" stage marker; an interpreted
     # Project (e.g. if a lambda HOF sneaks back in) prints bare
@@ -270,6 +273,60 @@ def test_run_and_write_jobs_and_observed_single_scorer_plan(spark, tmp_path):
     assert sum(d.count("llm_tab_cleaner_score_") for _, d in nodes) == 1, nodes
     assert names.count("CollectMetrics") == 1, names
     assert "InMemoryTableScan" not in names, names
+
+
+def _max_generated_method(spark, df) -> int:
+    """Bytes of the largest generated method over the whole-stage-codegen
+    stages of ``df``'s executed plan."""
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    stages = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+    return max(stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size()))
+
+
+def test_scrub_is_one_kernel_call(spark, code_files_small, parquet_input):
+    """The scrub is one Java UDF call (jvm/Scrub.java): the optimized
+    ``result``, ``audit_trail`` and ``result.filter("scrubbed")`` plans hold
+    the kernel once (it is nondeterministic, so the filter is not pushed
+    through it), no ``regexp_replace``, no ``lower(``, and no more ``RLIKE``
+    than the keep-count plan."""
+    from llm_tab_cleaner_spark import CleanPipeline
+
+    cf, _ = code_files_small
+    result, audit = CleanPipeline(spark).run(parquet_input(cf.iloc[:50]))
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    rlikes = optimized(result.filter("keep").groupBy().count()).count("RLIKE")
+    for df in (result, audit, result.filter("scrubbed")):
+        plan = optimized(df)
+        assert plan.count("llm_tab_cleaner_scrub_") == 1, plan[:3000]
+        assert "regexp_replace" not in plan and "lower(" not in plan, plan[:3000]
+        assert plan.count("RLIKE") == rlikes, plan[:3000]
+
+
+def test_run_and_write_stage_is_jit_sized(spark, code_files_small, parquet_input):
+    """The output write of ``run_and_write`` (the same observe → keep filter
+    → select) has no generated method at or over HotSpot's 8,000-byte JIT
+    limit, above which the stage's per-row code would stay in the bytecode
+    interpreter."""
+    from pyspark.sql import Observation
+
+    from llm_tab_cleaner_spark import CleanPipeline
+    from llm_tab_cleaner_spark.plans.pipeline import _report_aggs
+
+    cf, _ = code_files_small
+    pipe = CleanPipeline(spark)
+    result, _ = pipe.run(parquet_input(cf.iloc[:50]))
+    written = (
+        result.observe(Observation(), *_report_aggs(pipe._rule_names()))
+        .filter(F.col("keep"))
+        .select(
+            "repo", "path", "commit", "lang", F.col("content_clean").alias("content"),
+            "content_sha256", "clean_sha256", "confidence",
+        )
+    )
+    assert _max_generated_method(spark, written) < 8000
 
 
 #: entry → (its Java text/signature kernel, the plan nodes evaluating it)

@@ -13,7 +13,7 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from llm_tab_cleaner_spark.functions.pii import ALL_RULES, scrub_python
+from llm_tab_cleaner_spark.functions.pii import SCRUB_TABLE, scrub_python
 from llm_tab_cleaner_spark.operators.calibration import _fit_platt, _pava
 from signature_oracles import batch_simhash
 
@@ -39,7 +39,7 @@ def test_scrub_idempotent_and_exhaustive(text):
     # idempotent: replacement tokens never re-match any scrub pattern
     assert scrub_python(once) == once
     # exhaustive: no rule pattern survives in the scrubbed output
-    for _name, pat, _repl in ALL_RULES:
+    for _name, pat, _repl, _gates in SCRUB_TABLE:
         assert re.search(pat, once) is None
 
 
