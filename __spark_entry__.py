@@ -1471,8 +1471,9 @@ def _q_knn_brute(spark, sf):
 
 
 def _q_knn_blocked(spark, sf):
-    """Exact kNN join via the scale path (per-partition numpy top-k, no
-    cartesian shuffle) — same oracle as knn_brute, results identical."""
+    """Exact kNN join via the scale path (broadcast probes, a Java top-k
+    aggregated partially before the shuffle, no cartesian shuffle) — same
+    oracle as knn_brute, results identical."""
     e = _t(spark, sf, "embeddings")
     left = e.filter(F.col("vec_id") < 10)
     out = similarity.knn_join_blocked(
@@ -1506,7 +1507,7 @@ def _q_ivf_assign(spark, sf):
     decimals, unit-normalized). The Lloyd-trained codebook path
     (train_ivf_codebook) is pytest-verified (test_trained_ivf_beats_random_
     centroids); this query oracles the distributed assignment operator —
-    broadcast codebook, one f64 matmul argmax per Arrow batch."""
+    the codebook inside one Java UDF, a sequential f64 dot argmax per row."""
     import numpy as np
 
     e = _t(spark, sf, "embeddings")

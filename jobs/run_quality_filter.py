@@ -30,23 +30,6 @@ import sys
 # dev convenience: running the file directly (no --py-files) finds the repo
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# One BLAS thread per executor python worker (round-2 VERDICT #5): without
-# the pin, N workers × default-N BLAS threads oversubscribes quadratically
-# and numpy UDFs anti-scale (the former pandas scorer measured 4.5× at 32
-# workers in session.py's local harness). The scorer and the near-dup
-# signature kernels run in the JVM now; the pins stay for the numpy UDFs
-# that remain (n-gram hashes, fingerprint, IVF and kNN kernels).
-# spark-submit bypasses session.build_session, so the job must carry the
-# executorEnv pins itself — they are semantic configs, cluster-safe, and
-# inert where BLAS is absent.
-EXECUTOR_ENV_PINS = {
-    "spark.executorEnv.OMP_NUM_THREADS": "1",
-    "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
-    "spark.executorEnv.MKL_NUM_THREADS": "1",
-    "spark.executorEnv.VECLIB_MAXIMUM_THREADS": "1",
-    "spark.executorEnv.NUMEXPR_NUM_THREADS": "1",
-}
-
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="language-ID + quality-filter + PII-scrub over code files")
@@ -68,10 +51,7 @@ def main(argv: list[str] | None = None) -> int:
     from llm_tab_cleaner_spark.functions import thresholds as TH
     from llm_tab_cleaner_spark.sources.io import save_report
 
-    builder = SparkSession.builder.appName("quality_filter")
-    for key, val in EXECUTOR_ENV_PINS.items():
-        builder = builder.config(key, val)
-    spark = builder.getOrCreate()
+    spark = SparkSession.builder.appName("quality_filter").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     # default: shuffle-free linear plan (scan splits distribute the work —

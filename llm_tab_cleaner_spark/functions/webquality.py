@@ -23,7 +23,8 @@ functions/text_features.py); these are the corpus-pipeline complements,
 same tier as functions/repetition.py.
 
 SCALE SHAPE: every operator here is a PURE PER-ROW PROJECTION — no shuffle,
-no UDF, no driver round-trip. At 100 TB each is one map stage fused into the
+no Python UDF (the zlib length of ``compression_stats`` is a Java UDF), no
+driver round-trip. At 100 TB each is one map stage fused into the
 scan (C4's line filter uses one array HOF lambda, which costs codegen for
 its projection but still runs JVM-side and row-local — these operators are
 standalone stages, not part of the quality-filter hot-path projection whose
@@ -39,12 +40,10 @@ normalized sources instead.
 
 from __future__ import annotations
 
-import zlib
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from llm_tab_cleaner_spark import jvm as J
 from llm_tab_cleaner_spark.functions import thresholds as TH
 from llm_tab_cleaner_spark.functions.repetition import (
     lines_expr,
@@ -325,40 +324,34 @@ def compression_stats(
     (compressed/raw, rounded to 4; 0.0 for empty docs), compress_keep
     (min_ratio <= ratio <= max_ratio; empty docs fail the floor).
 
-    Implementation: one Arrow-batched pandas UDF (zlib is a per-row codec —
-    no native Spark expression exists), both outputs packed in one struct
-    so the text crosses the Python boundary ONCE. Unlike the dedup kernels
-    no batch-level intermediate exists to byte-bound — zlib streams one row
-    at a time, so peak extra memory is a single row's compressed bytes.
-    Deterministic: fixed level, the bundled zlib; the pytest mirror runs
-    the same codec byte-for-byte. No DuckDB oracle (no SQL zlib) —
-    rows-only query + pytest goldens, same tier as minhash/simhash.
+    Implementation: ``n_bytes`` is the native ``octet_length``, and
+    ``n_bytes_compressed`` one Java UDF (``Signatures.DeflatedLength``, a
+    ``java.util.zip.Deflater`` at ``level``); NULL text gives 0 for both.
+    The length equals Python's ``zlib.compress`` when both link the same
+    zlib: the JDK's ``Deflater`` links the system zlib here (1.2.13, the
+    same as Python's). A JDK that bundles a different zlib may differ by a
+    few bytes; the golden test (tests/test_webquality.py) is what catches
+    that. No DuckDB oracle (no SQL zlib) — rows-only query + pytest goldens.
     """
-
-    @F.pandas_udf("struct<n_bytes:bigint,n_comp:bigint>")
-    def comp_udf(texts: pd.Series) -> pd.DataFrame:
-        raw = [
-            t.encode("utf-8", "replace") if isinstance(t, str) else b""
-            for t in texts
-        ]
-        return pd.DataFrame(
-            {
-                "n_bytes": [len(b) for b in raw],
-                "n_comp": [len(zlib.compress(b, level)) if b else 0 for b in raw],
-            }
-        )
-
-    s = comp_udf(F.col(text_col))
+    name = J.session_udf(
+        df.sparkSession, "llm_tab_cleaner_deflated_length", repr(level).encode(),
+        J.SIGNATURES_CLASS, "registerDeflatedLength", level,
+    )
+    lengths = df.select(
+        id_col,
+        F.coalesce(F.octet_length(text_col), F.lit(0)).cast("bigint").alias("n_bytes"),
+        F.call_function(name, F.encode(F.col(text_col), "UTF-8")).alias("n_bytes_compressed"),
+    )
     ratio = F.round(
         F.when(
-            s["n_bytes"] > 0, s["n_comp"].cast("double") / s["n_bytes"]
+            F.col("n_bytes") > 0, F.col("n_bytes_compressed").cast("double") / F.col("n_bytes")
         ).otherwise(F.lit(0.0)),
         4,
     ).cast("double")
-    return df.select(
+    return lengths.select(
         id_col,
-        s["n_bytes"].alias("n_bytes"),
-        s["n_comp"].alias("n_bytes_compressed"),
+        "n_bytes",
+        "n_bytes_compressed",
         ratio.alias("compress_ratio"),
         ((ratio >= min_ratio) & (ratio <= max_ratio)).alias("compress_keep"),
     )

@@ -2,31 +2,45 @@ package llm_tab_cleaner_spark.jvm;
 
 import java.nio.ByteBuffer;
 import java.nio.ByteOrder;
+import java.util.ArrayList;
 import java.util.Arrays;
+import java.util.Collections;
+import java.util.Comparator;
+import java.util.List;
+import java.util.zip.Deflater;
 
+import org.apache.spark.sql.Encoder;
+import org.apache.spark.sql.Encoders;
+import org.apache.spark.sql.Row;
+import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.SparkSession;
 import org.apache.spark.sql.api.java.UDF1;
 import org.apache.spark.sql.api.java.UDF2;
+import org.apache.spark.sql.expressions.Aggregator;
 import org.apache.spark.sql.functions;
 import org.apache.spark.sql.types.DataType;
 import org.apache.spark.sql.types.DataTypes;
+import org.apache.spark.sql.types.StructType;
 
+import scala.Tuple2;
 import scala.collection.Iterator;
 import scala.collection.Seq;
+import scala.jdk.javaapi.CollectionConverters;
 
 /**
  * The dedup text and vector kernels as row-at-a-time Java UDFs: MinHash over
  * byte shingles, SimHash and token n-gram hashes over one whitespace
  * tokenizer ({@link #tokenHashes}), winnowing fingerprints over code points,
- * and random-hyperplane bucket keys for embedding vectors; plus the two
- * pair-verify kernels, the dot product and the equal-slot count.
+ * zlib lengths, and random-hyperplane bucket keys and IVF cells for
+ * embedding vectors; plus the two pair-verify kernels, the dot product and
+ * the equal-slot count, and the kNN top-k aggregator.
  *
  * <p>Each kernel equals the numpy kernel it replaced bit for bit (those
  * kernels are now the test oracles in {@code tests/signature_oracles.py}).
  * numpy's int64 and uint64 arithmetic wraps, so the hashes here use plain
  * wrapping {@code long} multiplies reduced with floor-mod semantics
  * ({@link #mod61}), never a widening product. The parameters (permutations,
- * plane matrix) are drawn on the driver and travel inside the UDF instance.
+ * planes, centroids) are drawn on the driver and travel inside the UDF.
  *
  * <p>The {@code register*} methods register a text or signature kernel as a
  * nondeterministic session function, as {@link Scorer#register} does:
@@ -250,6 +264,32 @@ public final class Signatures {
         }
     }
 
+    /** Length of {@code zlib.compress(text, level)} (a {@link Deflater},
+     *  when both link the same zlib); NULL or empty text gives 0. */
+    public static final class DeflatedLength implements UDF1<byte[], Long> {
+        private static final long serialVersionUID = 1L;
+        private final int level;
+
+        public DeflatedLength(int level) {
+            this.level = level;
+        }
+
+        @Override
+        public Long call(byte[] text) {
+            if (text == null || text.length == 0) return 0L;
+            Deflater deflater = new Deflater(level);
+            try {
+                deflater.setInput(text);
+                deflater.finish();
+                byte[] sink = new byte[8192];
+                while (!deflater.finished()) deflater.deflate(sink);
+                return deflater.getBytesWritten();
+            } finally {
+                deflater.end();
+            }
+        }
+    }
+
     /** Sorts {@code a[from, to)} as signed longs and moves its distinct
      *  values to the front; returns the end of the distinct run. */
     private static int sortDistinct(long[] a, int from, int to) {
@@ -263,32 +303,20 @@ public final class Signatures {
 
     /**
      * Random-hyperplane bucket keys: one int per band, bit {@code j} of
-     * band {@code b} set when the vector's dot with plane
-     * {@code b * rows + j} is positive. Each dot is a sequential double sum
-     * over the float32 plane values. A vector whose width differs from the
-     * planes' raises; a NULL vector gives NULL.
+     * band {@code b} set when the vector's {@link #rowDot} with plane
+     * {@code b * rows + j} is positive. A vector whose width differs from
+     * the planes' raises; a NULL vector gives NULL.
      */
     public static final class Hyperplanes implements UDF1<Seq<Object>, int[]> {
         private static final long serialVersionUID = 1L;
-        /** Plane-major: plane p's dim values at {@code [p * dim, (p+1) * dim)},
-         *  float32 widened to double. */
+        /** Plane-major: plane p's dim values at {@code [p * dim, (p+1) * dim)}. */
         private final double[] planes;
         private final int dim;
         private final int bands;
         private final int rows;
 
-        /** @param planes (dim × bands*rows) in C order, as numpy draws them */
-        public Hyperplanes(float[] planes, int dim, int bands, int rows) {
-            int total = bands * rows;
-            if (planes.length != dim * total) {
-                throw new IllegalArgumentException(
-                    "hyperplanes: expected " + dim * total + " plane values, got "
-                    + planes.length);
-            }
-            this.planes = new double[planes.length];
-            for (int i = 0; i < dim; i++) {
-                for (int p = 0; p < total; p++) this.planes[p * dim + i] = planes[i * total + p];
-            }
+        public Hyperplanes(double[] planes, int dim, int bands, int rows) {
+            this.planes = planes;
             this.dim = dim;
             this.bands = bands;
             this.rows = rows;
@@ -297,28 +325,68 @@ public final class Signatures {
         @Override
         public int[] call(Seq<Object> vec) {
             if (vec == null) return null;
-            if (vec.length() != dim) {
-                throw new IllegalArgumentException(
-                    "hyperplane buckets: expected vectors of width " + dim + ", got "
-                    + vec.length());
-            }
-            double[] x = new double[dim];
-            for (int i = 0; i < dim; i++) {
-                Object v = vec.apply(i);
-                if (v == null) {
-                    throw new IllegalArgumentException("hyperplane buckets: NULL vector element");
-                }
-                x[i] = ((Number) v).doubleValue();
-            }
-            int total = bands * rows;
+            double[] x = vector(vec, dim, "hyperplane buckets");
             int[] keys = new int[bands];
-            for (int p = 0; p < total; p++) {
-                double dot = 0.0;
-                for (int i = 0; i < dim; i++) dot += x[i] * planes[p * dim + i];
-                if (dot > 0) keys[p / rows] |= 1 << (p % rows);
+            for (int p = 0; p < bands * rows; p++) {
+                if (rowDot(planes, p, x) > 0) keys[p / rows] |= 1 << (p % rows);
             }
             return keys;
         }
+    }
+
+    /** IVF cell: the index of the centroid with the largest {@link #rowDot},
+     *  the first on ties (as {@code np.argmax}). NULL gives NULL; a vector
+     *  whose width differs from the centroids' raises. */
+    public static final class NearestCentroid implements UDF1<Seq<Object>, Integer> {
+        private static final long serialVersionUID = 1L;
+        /** Centroid-major, as {@link Hyperplanes#planes}. */
+        private final double[] centroids;
+        private final int dim;
+
+        public NearestCentroid(double[] centroids, int dim) {
+            this.centroids = centroids;
+            this.dim = dim;
+        }
+
+        @Override
+        public Integer call(Seq<Object> vec) {
+            if (vec == null) return null;
+            double[] x = vector(vec, dim, "nearest centroid");
+            int best = 0;
+            double bestDot = rowDot(centroids, 0, x);
+            for (int c = 1; c * dim < centroids.length; c++) {
+                double dot = rowDot(centroids, c, x);
+                if (dot > bestDot) {
+                    best = c;
+                    bestDot = dot;
+                }
+            }
+            return best;
+        }
+    }
+
+    /** A vector's elements as doubles; raises when its width is not
+     *  {@code dim} or an element is NULL. */
+    private static double[] vector(Seq<Object> vec, int dim, String kernel) {
+        if (vec.length() != dim) {
+            throw new IllegalArgumentException(
+                kernel + ": expected vectors of width " + dim + ", got " + vec.length());
+        }
+        double[] x = new double[dim];
+        for (int i = 0; i < dim; i++) {
+            Object v = vec.apply(i);
+            if (v == null) throw new IllegalArgumentException(kernel + ": NULL vector element");
+            x[i] = ((Number) v).doubleValue();
+        }
+        return x;
+    }
+
+    /** Dot of {@code x} with row {@code r} of the row-major matrix {@code m},
+     *  as a sequential double sum from 0.0. */
+    private static double rowDot(double[] m, int r, double[] x) {
+        double dot = 0.0;
+        for (int i = 0; i < x.length; i++) dot += x[i] * m[r * x.length + i];
+        return dot;
     }
 
     /**
@@ -367,6 +435,64 @@ public final class Signatures {
         }
     }
 
+    /** kNN top-k: a group's {@code k} first (nid, cosine) inputs in {@link
+     *  #RANK_ORDER}, as {@code struct<top: array<struct<nid, cosine>>>}. Its
+     *  buffer holds at most {@code k} rows, which partial aggregation shuffles. */
+    public static final class TopK extends Aggregator<Tuple2<Long, Double>, TopK.Best, Row> {
+        private static final long serialVersionUID = 1L;
+        private final int k;
+
+        public static final class Best extends ArrayList<Tuple2<Long, Double>> {}
+
+        public TopK(int k) {
+            this.k = k;
+        }
+
+        @Override
+        public Best zero() {
+            return new Best();
+        }
+
+        @Override
+        public Best reduce(Best best, Tuple2<Long, Double> row) {
+            int at = Collections.binarySearch(best, row, RANK_ORDER);
+            if (at < 0) at = -at - 1;
+            if (at < k) best.add(at, row);
+            if (best.size() > k) best.remove(k);
+            return best;
+        }
+
+        @Override
+        public Best merge(Best a, Best b) {
+            for (Tuple2<Long, Double> row : b) reduce(a, row);
+            return a;
+        }
+
+        @Override
+        public Row finish(Best best) {
+            List<Row> top = new ArrayList<>();
+            for (Tuple2<Long, Double> row : best) top.add(RowFactory.create(row._1(), row._2()));
+            return RowFactory.create(CollectionConverters.asScala(top).toSeq());
+        }
+
+        @Override
+        public Encoder<Best> bufferEncoder() {
+            return Encoders.javaSerialization(Best.class);
+        }
+
+        @Override
+        public Encoder<Row> outputEncoder() {
+            return Encoders.row(StructType.fromDDL("top array<struct<nid: bigint, cosine: double>>"));
+        }
+    }
+
+    /** Spark's {@code ORDER BY cosine DESC, nid ASC} on (nid, cosine): a NULL
+     *  cosine last, NaN above every number, -0.0 equal to 0.0; a NULL nid first. */
+    private static final Comparator<Tuple2<Long, Double>> RANK_ORDER = Comparator
+        .comparing((Tuple2<Long, Double> row) -> row._2(), Comparator.nullsLast(
+            (Double a, Double b) -> a.doubleValue() == b.doubleValue() ? 0 : Double.compare(b, a)))
+        .thenComparing(Tuple2::_1, Comparator.nullsFirst(Comparator.<Long>naturalOrder()));
+
     public static void registerMinHash(
             SparkSession spark, String name, byte[] a, byte[] b, int shingleK) {
         register(spark, name, new MinHash(longs(a), longs(b), shingleK),
@@ -389,13 +515,21 @@ public final class Signatures {
         register(spark, name, new Winnow(k, w), DataTypes.createArrayType(DataTypes.LongType));
     }
 
-    /** {@code planes}: float32 little-endian, (dim × bands*rows) in C order. */
+    /** {@code planes}: float64 little-endian, plane-major ((bands*rows) × dim). */
     public static void registerHyperplanes(
             SparkSession spark, String name, byte[] planes, int dim, int bands, int rows) {
-        float[] p = new float[planes.length / 4];
-        ByteBuffer.wrap(planes).order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer().get(p);
-        register(spark, name, new Hyperplanes(p, dim, bands, rows),
+        register(spark, name, new Hyperplanes(doubles(planes), dim, bands, rows),
             DataTypes.createArrayType(DataTypes.IntegerType));
+    }
+
+    /** {@code centroids}: float64 little-endian, (n × dim) in C order. */
+    public static void registerNearestCentroid(
+            SparkSession spark, String name, byte[] centroids, int dim) {
+        register(spark, name, new NearestCentroid(doubles(centroids), dim), DataTypes.IntegerType);
+    }
+
+    public static void registerDeflatedLength(SparkSession spark, String name, int level) {
+        register(spark, name, new DeflatedLength(level), DataTypes.LongType);
     }
 
     public static void registerDot(SparkSession spark, String name) {
@@ -406,8 +540,20 @@ public final class Signatures {
         spark.udf().register(name, functions.udf(new EqualSlots(), DataTypes.IntegerType));
     }
 
+    public static void registerTopK(SparkSession spark, String name, int k) {
+        spark.udf().register(
+            name, functions.udaf(new TopK(k), Encoders.tuple(Encoders.LONG(), Encoders.DOUBLE())));
+    }
+
     private static void register(SparkSession spark, String name, UDF1<?, ?> f, DataType type) {
         spark.udf().register(name, functions.udf(f, type).asNondeterministic());
+    }
+
+    /** float64 little-endian bytes → double[]. */
+    private static double[] doubles(byte[] raw) {
+        double[] out = new double[raw.length / 8];
+        ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().get(out);
+        return out;
     }
 
     /** int64 little-endian bytes → long[]. */

@@ -3,8 +3,9 @@
 ``udf_jar()`` returns the path of a jar holding the package's Java UDFs
 (``Scorer``, the quality-filter scorer; ``Scrub``, the PII / secret /
 toxicity scrub; and ``Signatures``, the dedup text and signature kernels:
-MinHash, SimHash, token n-grams, winnowing, hyperplane buckets, and the
-pair-verify dot product and equal-slot count),
+MinHash, SimHash, token n-grams, winnowing, the zlib length, hyperplane
+buckets, IVF cells, the pair-verify dot product and equal-slot count, and
+the kNN top-k aggregator),
 compiling them with the JDK's ``javac`` against the Spark jars PySpark
 ships when the per-user cache has no jar for these sources and this Spark
 version. ``build_session`` puts it on ``spark.jars``; for spark-submit,

@@ -7,17 +7,19 @@ the driver. Scale path:
 random-hyperplane LSH bucketing so the candidate set shrinks from N to a
 bucket; at 100 TB the bucket table is the only thing that shuffles, and the
 plane matrix travels inside the Java UDF that computes the keys
-(``Signatures.Hyperplanes``). An IVF-style variant (seeded centroid
-assignment) gives probe-style search without MLlib dependencies.
+(``Signatures.Hyperplanes``). An IVF-style variant (seeded or trained
+centroids, assigned by the Java UDF ``Signatures.NearestCentroid``) gives
+probe-style search without MLlib dependencies, and the blocked kNN join
+ranks with a Java top-k aggregator (``Signatures.TopK``). No operator here
+starts a Python worker.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -131,7 +133,7 @@ def banded_buckets(
         row = df.filter(F.col(vec_col).isNotNull()).select(F.size(vec_col)).head()
         dim = row[0] if row else 0
     total = bands * planes_per_band
-    planes = _planes(dim, total, seed).astype("<f4").tobytes()
+    planes = _planes(dim, total, seed).T.astype("<f8").tobytes()  # plane-major
     params = repr((dim, bands, planes_per_band)).encode() + planes
     name = J.session_udf(
         df.sparkSession, "llm_tab_cleaner_hyperplanes", params,
@@ -197,80 +199,46 @@ def knn_join_blocked(
     id_right: str,
     vec_col: str,
     k: int = 5,
-    pad: int = 8,
     max_probe_rows: int = 100_000,
 ) -> DataFrame:
     """EXACT k nearest right-rows per left-row without a cartesian shuffle —
     the scale path for kNN joins when the query side is small (the usual
     shape: a batch of probe vectors against a 100 TB corpus).
 
-    Stage 1: the query matrix is shipped in the UDF closure (a broadcast);
-    one ``mapInPandas`` pass over the right side computes, per partition, the
-    numpy-BLAS cosine of every (row, query) pair and keeps only the local
-    top-(k+pad) per query. Only P·M·(k+pad) candidate (qid, nid) rows leave
-    the scan stage — the vectors never shuffle.
+    The probes are broadcast to the right side's scan; each pair gets
+    ``knn_join_brute``'s cosine, and a Java top-k aggregator
+    (``Signatures.TopK``) keeps per ``qid`` the k first pairs in the brute
+    window's order, so the result equals ``knn_join_brute`` row for row.
+    Spark aggregates it partially, so only one k-row buffer per partition
+    and probe crosses the shuffle; the vectors never do.
 
-    Stage 2: candidates are re-scored with the SAME native cosine expression
-    the brute path uses (bit-identical to the oracle; numpy is used only to
-    SELECT candidates, never to produce the reported score) and ranked with
-    a window. Exactness: every true global top-k element is in its
-    partition's local top-k; ``pad`` absorbs float-noise at the local cut.
-
-    Guard (round-2 VERDICT #2): the probe side is collected to the driver,
-    so the "query side is small" contract is ENFORCED — more than
-    ``max_probe_rows`` probe rows raises instead of silently OOMing the
-    driver. For bigger probe sets, batch the probes or use the LSH/IVF
-    variants (lsh_topk / ivf_assign) whose candidate sets stay distributed.
-    The count costs one cheap job bounded by limit(max_probe_rows + 1).
+    Guard: more than ``max_probe_rows`` probe rows raises instead of
+    silently OOMing the driver with the broadcast; batch the probes or use
+    lsh_topk / ivf_assign. The check is one job bounded by
+    limit(max_probe_rows + 1).
     """
-    from pyspark.sql import Window
-
-    # ONE bounded action serves both the guard and the probe collect
-    # (limit(max+1) + length check == the old separate count, minus a job)
-    qpdf = (
-        left.select(F.col(id_left).alias("qid"), F.col(vec_col).alias("_q"))
-        .limit(max_probe_rows + 1)
-        .toPandas()
-    )
-    if len(qpdf) > max_probe_rows:
+    if left.limit(max_probe_rows + 1).count() > max_probe_rows:
         raise ValueError(
-            f"knn_join_blocked collects the probe (left) side to the driver; "
+            f"knn_join_blocked broadcasts the probe (left) side; "
             f"got > {max_probe_rows} probe rows. Batch the probes, raise "
             f"max_probe_rows explicitly, or use lsh_topk/ivf_assign for "
             f"large probe sets."
         )
-    qids = qpdf["qid"].to_numpy()
-    qmat = np.stack(qpdf["_q"].to_numpy()).astype(np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
-    qn = (qmat / qnorm[:, None]).T  # (dim, M)
-    take = k + pad
-
-    def local_topk(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0] = 1.0
-            sims = (m / norms[:, None]) @ qn  # (n, M)
-            t = min(take, sims.shape[0])
-            idx = np.argpartition(-sims, t - 1, axis=0)[:t]  # (t, M)
-            nid = pdf[id_right].to_numpy()
-            out_q = np.repeat(qids, t)
-            out_n = nid[idx].T.reshape(-1)
-            yield pd.DataFrame({"qid": out_q, "nid": out_n})
-
-    schema = "qid long, nid long"
-    cand = right.select(id_right, vec_col).mapInPandas(local_topk, schema).distinct()
     lv = vec_side(left, F.col(id_left).cast("long"), vec_col, "qid", "_ql", "_nl")
     rv = vec_side(right, F.col(id_right).cast("long"), vec_col, "nid", "_qr", "_nr")
-    scored = (
-        cand.join(F.broadcast(lv), "qid").join(rv, "nid")
-        .select("qid", "nid", pair_cosine("_ql", "_qr", "_nl", "_nr").alias("cosine"))
+    topk = J.session_udf(
+        left.sparkSession, "llm_tab_cleaner_topk", repr(k).encode(),
+        J.SIGNATURES_CLASS, "registerTopK", k,
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    best = (
+        rv.crossJoin(F.broadcast(lv))
+        .select("qid", "nid", pair_cosine("_ql", "_qr", "_nl", "_nr").alias("cosine"))
+        .groupBy("qid")
+        .agg(F.call_function(topk, F.col("nid"), F.col("cosine")).alias("best"))
+    )
+    return best.select("qid", F.posexplode("best.top")).select(
+        "qid", "col.nid", "col.cosine", (F.col("pos") + 1).alias("rank")
+    )
 
 
 def train_ivf_codebook(
@@ -329,24 +297,20 @@ def ivf_assign(
     """IVF-style partition assignment. Pass a trained ``codebook`` (from
     train_ivf_codebook) for real recall; without one, seeded random unit
     centroids keep the operator deterministic and dependency-free. The
-    Spark plumbing is identical either way: broadcast codebook, one matmul
-    argmax per Arrow batch, downstream partition-by-cell. The matmul runs in
-    float64 so an external twin (DuckDB double arithmetic) lands on the same
-    argmax; np.argmax takes the FIRST max → ties break to the lowest cell."""
+    codebook travels inside one Java UDF (``Signatures.NearestCentroid``):
+    each vector gets the cell with the largest sequential double dot, as an
+    external twin in double arithmetic (the DuckDB oracle) computes it, the
+    lowest cell on ties (np.argmax's first max). A NULL vector gets a NULL
+    cell; a vector of another width raises."""
     if codebook is not None:
         cents = np.asarray(codebook, dtype=np.float64)
     else:
         rng = np.random.default_rng(seed)
         cents = rng.standard_normal((n_centroids, dim)).astype(np.float32).astype(np.float64)
         cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-
-    @F.pandas_udf("int")
-    def assign_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for vecs in it:
-            m = np.stack(vecs.to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (m / norms) @ cents.T
-            yield pd.Series(np.argmax(sims, axis=1).astype(np.int32))
-
-    return df.select(id_col, vec_col, assign_udf(F.col(vec_col)).alias("cell"))
+    raw = cents.astype("<f8").tobytes()
+    name = J.session_udf(
+        df.sparkSession, "llm_tab_cleaner_nearest_centroid", repr(cents.shape).encode() + raw,
+        J.SIGNATURES_CLASS, "registerNearestCentroid", raw, cents.shape[1],
+    )
+    return df.select(id_col, vec_col, F.call_function(name, F.col(vec_col)).alias("cell"))

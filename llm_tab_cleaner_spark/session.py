@@ -11,16 +11,6 @@ from __future__ import annotations
 
 import os
 
-# One BLAS thread per python worker: N workers × default-N BLAS threads
-# oversubscribes quadratically, and numpy UDFs anti-scale (the former pandas
-# scorer measured a 4.5× slowdown at 32 workers). The quality-filter scorer
-# and the dedup text and signature kernels run in the JVM now; the pins stay
-# for the numpy UDFs that remain (IVF and kNN kernels). Must be set before numpy loads in the workers — local-mode
-# workers inherit the driver env, and executorEnv covers clusters.
-for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
-           "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS"):
-    os.environ.setdefault(_v, "1")
-
 from pyspark.sql import SparkSession
 
 from llm_tab_cleaner_spark.jvm import udf_jar
@@ -49,8 +39,9 @@ def build_session(
     ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
     to the first ``build_session`` call.
 
-    The quality-filter scorer, the dedup text and signature kernels and the
-    pair-verify dot product and equal-slot count are Java UDFs: their jar
+    The quality-filter scorer, the scrub, the dedup text and signature
+    kernels, the pair-verify dot product and equal-slot count, the zlib
+    length, the IVF cell and the kNN top-k are Java UDFs: their jar
     (``jvm.udf_jar()``) goes on ``spark.jars``, ahead of any jars in
     ``extra_conf``. The first call for a given version of the Java
     sources compiles them with ``javac`` into the per-user cache (a few
@@ -73,11 +64,11 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch size for the pandas UDFs (IVF and kNN kernels,
-        # user rule callables): 4096 halves per-batch fixed
-        # costs (serde setup, pandas materialization, numpy kernel
-        # overheads) vs 2048 — measured 17.3 → 9.3 CPU-s floor per 50k-file
-        # pass when the scorer was a pandas UDF (BENCH/BASELINE.md round-4).
+        # Arrow batch size for the Python stages left (user rule callables,
+        # streaming_exact_dedup, multimodal): 4096 halves per-batch fixed
+        # costs (serde setup, pandas materialization) vs 2048 — measured
+        # 17.3 → 9.3 CPU-s floor per 50k-file pass when the scorer was a
+        # pandas UDF (BENCH/BASELINE.md round-4).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # split big text-heavy scans across tasks (default 128m under-splits
         # a 150 MB single-file input into 1-2 tasks)
@@ -85,9 +76,6 @@ def build_session(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.executorEnv.MKL_NUM_THREADS", "1")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     extra = dict(extra_conf or {})

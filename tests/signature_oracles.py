@@ -1,10 +1,12 @@
 """Reference kernels for the JVM UDFs in ``jvm/Signatures.java``.
 
-The signature, n-gram and winnowing oracles are the numpy kernels the
+The signature, n-gram, winnowing and IVF oracles are the numpy kernels the
 package ran as pandas UDFs before those kernels moved into the JVM. The
 pair-verify oracles are the ``zip_with``/``aggregate`` lambda folds the
 package ran before the dot product and the equal-slot count did. The tests
-hold the Java UDFs equal to them bit for bit.
+hold the Java UDFs equal to them bit for bit; the IVF cell equals
+``nearest_centroid``, a sequential replay of its dots, and the numpy
+matmul's cell wherever the matmul's rounding cannot move the argmax.
 """
 
 from __future__ import annotations
@@ -206,6 +208,34 @@ def hyperplane_keys(
         for j in range(planes_per_band):
             keys[:, b] |= bits[:, b * planes_per_band + j].astype(np.int32) << j
     return keys
+
+
+def nearest_centroid(vec, cents) -> int | None:
+    """Index of the first row of ``cents`` with the largest sequential
+    double dot with ``vec`` (the hyperplane keys' sum); None for None."""
+    if vec is None:
+        return None
+    best, best_dot = 0, None
+    for c, row in enumerate(cents):
+        dot = 0.0
+        for x, y in zip(vec, row):
+            dot += float(x) * float(y)
+        if best_dot is None or dot > best_dot:
+            best, best_dot = c, dot
+    return best
+
+
+def ivf_cells(m: np.ndarray, cents: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The numpy IVF assignment ``ivf_assign`` ran per Arrow batch: argmax
+    of the row-normalized f64 matmul with the codebook (two or more rows).
+    Returns the cells and each row's gap between its best and second-best
+    similarity."""
+    m = m.astype(np.float64)
+    norms = np.linalg.norm(m, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    sims = (m / norms) @ np.asarray(cents, dtype=np.float64).T
+    top2 = np.sort(sims, axis=1)[:, -2:]
+    return np.argmax(sims, axis=1), top2[:, 1] - top2[:, 0]
 
 
 def dot_fold(a, b):

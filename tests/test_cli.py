@@ -4,15 +4,11 @@ arg validation, profile command."""
 from __future__ import annotations
 
 import json
-import os
-from pathlib import Path
 
 import pandas as pd
 import pytest
 
 from llm_tab_cleaner_spark import cli
-
-_ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -84,20 +80,6 @@ def test_quality_filter_mode(spark, tmp_path, code_files_small):
     assert "content_sha256" in kept.columns
     report = json.load(open(out + ".report.json"))
     assert report["total_files"] == 80
-
-
-def test_job_pins_executor_blas_threads():
-    """The spark-submit job must carry the executorEnv BLAS pins itself —
-    it bypasses session.build_session (round-2 VERDICT #5)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "run_quality_filter_job", str(_ROOT / "jobs" / "run_quality_filter.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    for lib in ("OMP", "OPENBLAS", "MKL"):
-        assert mod.EXECUTOR_ENV_PINS[f"spark.executorEnv.{lib}_NUM_THREADS"] == "1"
 
 
 def test_clean_with_hash_sample_key(spark, tmp_path, code_files_small):

@@ -344,15 +344,13 @@ _SIGNATURE_ENTRIES = {
 }
 
 
-@pytest.mark.parametrize("entry", sorted(_SIGNATURE_ENTRIES))
-def test_signature_entries_have_no_python_stage(spark, entry):
-    """The near-dup, LSH, n-gram, winnowing and DSIR entries run their
-    kernels as Java UDFs: no query the entry runs (checkpoints, bucket-cap
-    collect, result) plans a Python stage, and the kernel is evaluated once
-    per input across all of them."""
+def _entry_nodes(spark, entry: str, collect: bool) -> list[tuple[str, str]]:
+    """(name, description) of every plan node an entry runs at sf0.001: the
+    SQL status store's plans of the jobs run while the entry is built (and,
+    with ``collect``, while its result is collected), plus, without
+    ``collect``, the returned frame's executed plan."""
     import __spark_entry__ as E
 
-    sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
 
     def execution_ids():
@@ -361,14 +359,47 @@ def test_signature_entries_have_no_python_stage(spark, entry):
 
     before = execution_ids()
     out = E.queries()[entry](spark, "/root/testdata/sf0.001")
-    out.collect()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
     nodes = []
+    if collect:
+        out.collect()
+    else:
+        for line in _plan(out).splitlines():
+            m = re.match(r"[\s:|+\-*]*(?:\(\d+\)\s*)?(\w+)(.*)", line)
+            if m:
+                nodes.append((m.group(1), m.group(2)))
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     for eid in sorted(execution_ids() - before):
         graph = store.planGraph(eid).allNodes()
         nodes += [(graph.apply(k).name(), graph.apply(k).desc()) for k in range(graph.size())]
-    names = [n for n, _ in nodes]
-    assert not {"ArrowEvalPython", "BatchEvalPython", "MapInPandas"} & set(names), names
+    return nodes
+
+
+def _all_entries() -> list[str]:
+    import __spark_entry__ as E
+
+    return sorted(E.queries())
+
+
+@pytest.mark.parametrize("entry", _all_entries())
+def test_no_entry_plans_a_python_stage(spark, entry):
+    """No ``queries()`` entry starts a Python worker: neither the jobs it
+    runs while it is built (checkpoints, collects) nor its returned plan
+    holds a Python eval, ``*InPandas`` or ``*InArrow`` node. The Python
+    stages left in the package (user rule callables, ``multimodal``,
+    ``streaming_exact_dedup``) are not reached from any entry."""
+    names = [n for n, _ in _entry_nodes(spark, entry, collect=False)]
+    assert names, entry
+    python = [n for n in names if any(s in n for s in ("Python", "InPandas", "InArrow"))]
+    assert not python, names
+
+
+@pytest.mark.parametrize("entry", sorted(_SIGNATURE_ENTRIES))
+def test_signature_entries_have_no_python_stage(spark, entry):
+    """The near-dup, LSH, n-gram, winnowing and DSIR entries run their
+    kernels as Java UDFs, evaluated once per input across every query the
+    entry runs (checkpoints, bucket-cap collect, result). That no entry
+    plans a Python stage is ``test_no_entry_plans_a_python_stage``."""
+    nodes = _entry_nodes(spark, entry, collect=True)
     prefix, evaluations = _SIGNATURE_ENTRIES[entry]
     assert sum(d.count(prefix) for _, d in nodes) == evaluations, nodes
 

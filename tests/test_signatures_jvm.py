@@ -2,7 +2,8 @@
 ``signature_oracles.py`` bit for bit: MinHash, SimHash, token n-gram hashes
 and winnowing fingerprints on arbitrary text (empty, whitespace-only,
 non-ASCII, astral, NULL, too short), hyperplane keys on random
-matrices against both the float32 and the float64 matmul, and the
+matrices against both the float32 and the float64 matmul, IVF cells against
+a sequential replay of their dots and the numpy matmul they replaced, and the
 pair-verify dot product, norm and equal-slot count against the lambda folds
 they replaced (NULL arrays, NULL elements, unequal and zero widths). Values
 do not depend on how rows are partitioned."""
@@ -138,6 +139,44 @@ def test_hyperplane_keys_equal_numpy_f32_and_f64(spark, seed, n, dim, bands, row
     one = similarity.hyperplane_buckets(df, "vec_id", "embedding", rows, dim, seed % 1000)
     bucket = np.array([r.bucket for r in one.orderBy("vec_id").collect()])
     assert (bucket == O.hyperplane_keys(m, 1, rows, seed % 1000, np.float64)[:, 0]).all()
+
+
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    n=st.integers(1, 30),
+    dim=st.integers(1, 48),
+    cells=st.integers(2, 12),
+)
+@settings(max_examples=25, deadline=None)
+def test_ivf_cells_equal_sequential_and_numpy_oracles(spark, seed, n, dim, cells):
+    rng = np.random.default_rng(seed)
+    m = rng.standard_normal((n, dim)).astype(np.float32)
+    cents = rng.standard_normal((cells, dim))
+    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(n), "embedding": [v.tolist() for v in m]}),
+        "vec_id long, embedding array<float>",
+    )
+    out = similarity.ivf_assign(df, "vec_id", "embedding", codebook=cents)
+    got = np.array([r.cell for r in out.orderBy("vec_id").collect()])
+    assert got.tolist() == [O.nearest_centroid(v, cents) for v in m]
+    want, gap = O.ivf_cells(m, cents)
+    clear = gap > 1e-9  # the matmul's rounding cannot reorder these rows
+    assert (got[clear] == want[clear]).all()
+
+
+def test_ivf_cell_edge_rows(spark):
+    """A zero vector lands in cell 0, exact ties in the lowest cell, a NULL
+    vector in a NULL cell; a vector of another width raises."""
+    cents = np.array([[1.0, 0.0], [0.0, 1.0], [1.0, 0.0]])
+    vecs = [[0.0, 0.0], [1.0, 1.0], [0.0, 1.0], [1.0, 0.0], None, [-2.0, -1.0]]
+    df = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+    out = similarity.ivf_assign(df, "vec_id", "embedding", codebook=cents)
+    got = [r.cell for r in out.orderBy("vec_id").collect()]
+    assert got == [0, 0, 1, 0, None, 1] == [O.nearest_centroid(v, cents) for v in vecs]
+    wide = spark.createDataFrame([(0, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="expected vectors of width 2, got 3"):
+        similarity.ivf_assign(wide, "vec_id", "embedding", codebook=cents).collect()
 
 
 @st.composite

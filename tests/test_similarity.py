@@ -2,9 +2,15 @@
 
 from __future__ import annotations
 
+import math
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from llm_tab_cleaner_spark.operators import similarity
 
@@ -51,8 +57,8 @@ def test_knn_join_brute(vecs):
 
 
 def test_knn_join_blocked_equals_brute(vecs):
-    """The scale path (per-partition numpy candidate top-k + native rescore)
-    must be row-identical to the cartesian baseline."""
+    """The scale path (broadcast probes + partial Java top-k) must be
+    row-identical to the cartesian baseline."""
     df, m = vecs
     left = df.filter("vec_id < 3")
     right = df.filter("vec_id >= 3").repartition(7)  # force multi-partition merge
@@ -69,13 +75,105 @@ def test_knn_join_blocked_equals_brute(vecs):
     )
 
 
-def test_knn_join_blocked_plan_no_cartesian(vecs):
-    df, _ = vecs
+def test_knn_join_blocked_plan_no_cartesian(vecs, parquet_input):
+    """On a file scan (a ``createDataFrame`` input would be folded at
+    planning time), the blocked join has no cartesian product, and its only
+    shuffle is hash-partitioned on ``qid`` directly above the partial top-k
+    aggregate: pairs and vectors never cross it."""
+    _, m = vecs
+    scan = parquet_input(pd.DataFrame({"vec_id": range(len(m)), "embedding": list(map(list, m))}))
     out = similarity.knn_join_blocked(
-        df.filter("vec_id < 3"), df.filter("vec_id >= 3"), "vec_id", "vec_id", "embedding", 4
+        scan.filter("vec_id < 3"), scan.filter("vec_id >= 3"), "vec_id", "vec_id", "embedding", 4
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan, plan[:1500]
+    lines = plan.splitlines()
+    assert "CartesianProduct" not in plan, plan
+    shuffles = [i for i, ln in enumerate(lines) if re.search(r"(?<!Broadcast)Exchange ", ln)]
+    assert len(shuffles) == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(qid#\d+L?, \d+\)", lines[shuffles[0]]), plan
+    below = lines[shuffles[0] + 1]
+    assert "ObjectHashAggregate" in below and "partial_llm_tab_cleaner_topk_" in below, plan
+
+
+def _ranked(frame) -> list[tuple]:
+    """(qid, rank, nid, cosine) rows, sorted; NaN as "nan" and -0.0 as 0.0,
+    since Spark ranks each as one value."""
+    def cos(c):
+        return None if c is None else "nan" if math.isnan(c) else c + 0.0
+
+    return sorted((r.qid, r["rank"], r.nid, cos(r.cosine)) for r in frame.collect())
+
+
+def test_knn_join_blocked_ties_zero_vectors_and_short_right_side(spark, parquet_input):
+    """Duplicate and sign-flipped vectors (cosine ties, also at 0.0 after
+    rounding), zero vectors and a k larger than the right side: the
+    blocked join equals the brute window row for row. A zero vector has no
+    cosine: under ANSI mode (the default) both joins raise, without it
+    both rank its NULL cosine last."""
+    base = [1.0, 2.0, 0.0, -1.0]
+    vecs = [
+        base, base, base, [-x for x in base], [0.0] * 4, [0.0] * 4,
+        [2.0, -1.0, 0.0, 0.0], [1e-9, 0.0, 5.0, 0.0], [-1e-9, 0.0, 5.0, 0.0],
+        [0.5, 1.0, 0.0, -0.5],
+    ]
+    df = parquet_input(pd.DataFrame({"vec_id": range(len(vecs)), "embedding": vecs}))
+
+    def both(left, right, k):
+        return [
+            join(left, right, "vec_id", "vec_id", "embedding", k)
+            for join in (similarity.knn_join_brute, similarity.knn_join_blocked)
+        ]
+
+    nonzero = df.filter("vec_id NOT IN (4, 5)")
+    left = nonzero.filter("vec_id IN (0, 3, 7)")
+    for right, k in ((nonzero, 3), (nonzero.repartition(3), 20), (df.filter("vec_id >= 8"), 5)):
+        brute, blocked = both(left, right, k)
+        assert _ranked(blocked) == _ranked(brute)
+    assert len(_ranked(blocked)) == 3 * 2  # k beyond the right side keeps every row
+    for out in both(df.filter("vec_id IN (0, 4)"), df, 4):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            out.collect()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        brute, blocked = both(df.filter("vec_id IN (0, 4)"), df.repartition(3), 12)
+        assert _ranked(blocked) == _ranked(brute)
+        assert [r[3] for r in _ranked(blocked)].count(None) == 2 + 10
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+
+
+_TOPK_ROWS = st.lists(
+    st.tuples(
+        st.integers(0, 2),
+        st.one_of(st.none(), st.integers(0, 6)),
+        st.sampled_from([float("nan"), -0.0, 0.0, 1.0, -1.0, 0.5, None]),
+    ),
+    min_size=1, max_size=40,
+)
+
+
+@given(_TOPK_ROWS, st.integers(1, 6))
+@settings(max_examples=30, deadline=None)
+def test_topk_aggregator_orders_like_spark(spark, rows, k):
+    """The top-k aggregator ranks (nid, cosine) as Spark's ``ORDER BY
+    cosine DESC, nid ASC`` does: NaN above every number, -0.0 equal to 0.0,
+    a NULL cosine last, a NULL nid first."""
+    from pyspark.sql import Window
+
+    from llm_tab_cleaner_spark import jvm as J
+
+    df = spark.createDataFrame(rows, "qid int, nid bigint, cosine double").repartition(3)
+    topk = J.session_udf(
+        spark, "llm_tab_cleaner_topk", repr(k).encode(), J.SIGNATURES_CLASS, "registerTopK", k
+    )
+    got = (
+        df.groupBy("qid").agg(F.call_function(topk, F.col("nid"), F.col("cosine")).alias("b"))
+        .select("qid", F.posexplode("b.top"))
+        .select("qid", (F.col("pos") + 1).alias("rank"), "col.nid", "col.cosine")
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
+    want = df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    assert _ranked(got) == _ranked(want)
 
 
 def test_lsh_topk_multiprobe_improves_recall(vecs):

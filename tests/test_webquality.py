@@ -298,17 +298,27 @@ def test_webquality_plans_are_pure_projections(spark):
 
 def test_compression_stats_goldens(spark):
     """compress ratio must equal the same zlib codec run driver-side, and
-    the keep flag must separate repetitive / normal / incompressible docs."""
+    the keep flag must separate repetitive / normal / incompressible docs.
+    The MB-sized, astral and random rows hold the JVM's Deflater to
+    Python's zlib where their outputs could part."""
+    import random
     import zlib
 
     from llm_tab_cleaner_spark.functions.webquality import compression_stats
 
+    rng = random.Random(12)
+    bmp = [c for c in range(0x20, 0x10000) if not 0xD800 <= c <= 0xDFFF]
     cases = [
         "spam spam spam " * 200,                       # highly repetitive
         GOOD_PROSE,                                    # normal text
         "".join(chr(33 + ((i * 7919) % 90)) for i in range(400)),  # noisy
         "",                                            # empty
         "x",                                           # tiny
+        None,
+        "x" * 10**6,
+        "".join(chr(c) for c in rng.choices(bmp, k=200_000)),
+        "é€𝄞" * 5000,
+        "".join(rng.choices("0123456789abcdef", k=300_000)),
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(cases)], "doc_id long, text string"
@@ -318,7 +328,7 @@ def test_compression_stats_goldens(spark):
         for r in compression_stats(df, "doc_id", "text").collect()
     }
     for i, t in enumerate(cases):
-        b = t.encode("utf-8")
+        b = (t or "").encode("utf-8")
         assert got[i]["n_bytes"] == len(b)
         exp_comp = len(zlib.compress(b, 6)) if b else 0
         assert got[i]["n_bytes_compressed"] == exp_comp, i
@@ -328,21 +338,26 @@ def test_compression_stats_goldens(spark):
     assert got[1]["compress_keep"] is True
     assert got[4]["compress_ratio"] > 1.0 and got[4]["compress_keep"] is False
     assert got[3]["compress_keep"] is False  # empty fails the floor
+    assert got[5]["compress_keep"] is False  # so does NULL
 
 
-def test_compression_plan_single_arrow_stage(spark):
+def test_compression_plan_single_kernel_call(spark, parquet_input):
+    """The zlib length is one Java UDF call: the plan holds the kernel once,
+    no Python stage and no Exchange. The input is a parquet scan, because
+    the optimizer folds projections over a ``createDataFrame`` input."""
+    import pandas as pd
+
     from llm_tab_cleaner_spark.functions.webquality import compression_stats
 
-    df = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
+    df = parquet_input(pd.DataFrame({"doc_id": [1], "text": ["abc"]}))
     plan = (
         compression_stats(df, "doc_id", "text")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert plan.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in plan
-    assert "Exchange" not in plan
+    assert plan.count("llm_tab_cleaner_deflated_length_") == 1, plan
+    assert "Python" not in plan and "Exchange" not in plan, plan
 
 
 def test_webquality_stateless_on_streams(spark, tmp_path):
