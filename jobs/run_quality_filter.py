@@ -16,8 +16,13 @@ the driver's classpath when the JVM starts. This script runs inside an
 already-started JVM, so setting ``spark.jars`` here could not add it.
 
 On a cluster, --master/--num-executors/memory come from spark-submit; the
-job only sets semantic configs. Incremental by default when --state is given
-(anti-join resume + atomic manifest commit).
+job only sets semantic configs. The job is one ``CleanPipeline.run_and_write``
+call. Without --state it overwrites --output, --audit and --metrics. With
+--state it is incremental: it scores only rows whose content hash no earlier
+run committed, appends to the three sinks, and commits the batch to the state
+manifest last. A crash before that commit means the rerun writes the batch's
+rows again (at-least-once output, never a lost row). The last stdout line is
+a JSON summary; ``batch_id`` is the committed batch (null without --state).
 """
 
 from __future__ import annotations
@@ -45,7 +50,6 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
     from llm_tab_cleaner_spark.functions import thresholds as TH
@@ -65,40 +69,13 @@ def main(argv: list[str] | None = None) -> int:
         state_dir=args.state,
     )
     pipe = CleanPipeline(spark, cfg)
-    df = spark.read.parquet(args.input)
-
-    if args.state:
-        result, audit, batch_id = pipe.run_incremental(df)
-    else:
-        result, audit = pipe.run(df)
-        # multi-consumer intermediate (output + metrics + report below):
-        # localCheckpoint per the repo's cache-ownership rule — no
-        # CacheManager entry to leak or unpersist (round-3 VERDICT nit)
-        result = result.localCheckpoint(eager=True)
-        batch_id = None
-
-    (
-        result.filter(F.col("keep"))
-        .select(
-            "repo", "path", "commit", "lang",
-            F.col("content_clean").alias("content"),
-            "content_sha256", "clean_sha256", "confidence",
-        )
-        .write.mode("append" if args.state else "overwrite")
-        .parquet(args.output)
+    report = pipe.run_and_write(
+        spark.read.parquet(args.input), args.output, args.audit, args.metrics
     )
-    if args.audit:
-        audit.write.mode("append" if args.state else "overwrite").parquet(args.audit)
-    if args.metrics:
-        pipe.partition_metrics(result).write.mode(
-            "append" if args.state else "overwrite"
-        ).parquet(args.metrics)
-
-    report = pipe.report(result)
     if args.report:
         save_report(report, args.report)
     print(json.dumps({
-        "batch_id": batch_id,
+        "batch_id": pipe.state.committed_batches()[-1] if pipe.state else None,
         "total": report.total_files,
         "kept": report.kept,
         "dropped": report.dropped,

@@ -23,7 +23,7 @@ import json
 import os
 import sys
 
-from llm_tab_cleaner_spark.sources.io import load_table, save_report, save_table
+from llm_tab_cleaner_spark.sources.io import load_table, sample_table, save_report, save_table
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -90,7 +90,7 @@ def _clean(args, spark) -> None:
 
             df = hash_sample(df, args.sample_key, args.sample_rate)
         else:
-            df = df.sample(fraction=args.sample_rate, seed=42)  # P13 (core.py:352-358)
+            df = sample_table(df, args.sample_rate)
     output = args.output or _default_output(args.input_file)
 
     if args.mode == "quality-filter":

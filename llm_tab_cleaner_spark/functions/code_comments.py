@@ -20,7 +20,7 @@ shuffle, whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: dialect-common patterns (applied in this order: block first, so a
@@ -72,26 +72,6 @@ def comment_ratio_expr(col: Column, lang: Column | None = None) -> Column:
     total = F.length(col)
     kept = F.length(strip_comments_expr(col, lang))
     return F.when(total > 0, (total - kept) / total).otherwise(F.lit(0.0))
-
-
-def with_comment_features(
-    df: DataFrame, content_col: str = "content", lang_col: str | None = "lang"
-) -> DataFrame:
-    """df + content_nocomments + comment_ratio (pure projection).
-
-    The ratio is derived from the content_nocomments COLUMN (not a second
-    strip_comments_expr build): CollapseProject declines to inline a
-    non-cheap expression referenced twice, so the executed plan keeps two
-    stacked Projects in one codegen span and evaluates the strip chain
-    exactly once — tests/test_plans.py asserts that shape."""
-    c = F.col(content_col)
-    lang = F.col(lang_col) if lang_col and lang_col in df.columns else None
-    out = df.withColumn("content_nocomments", strip_comments_expr(c, lang))
-    total = F.length(c)
-    ratio = F.when(
-        total > 0, (total - F.length(F.col("content_nocomments"))) / total
-    ).otherwise(F.lit(0.0))
-    return out.withColumn("comment_ratio", ratio)
 
 
 def strip_comments_sql(expr: str, lang: str | None = None) -> str:

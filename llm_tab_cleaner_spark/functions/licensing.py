@@ -107,20 +107,6 @@ def with_license(
     ).withColumn("spdx_id", spdx_expr(c, scan_chars))
 
 
-def license_filter(
-    df: DataFrame,
-    allow: tuple[str, ...] = ("permissive", "none"),
-    content_col: str = "content",
-) -> DataFrame:
-    """Keep only files whose license class is in ``allow`` — the standard
-    pre-filter before a permissively-licensed training set. Pushdown-able
-    (a plain projection + filter over the header prefix)."""
-    bad = [c for c in allow if c not in LICENSE_CLASSES]
-    if bad:
-        raise ValueError(f"unknown license classes: {bad} (choose from {LICENSE_CLASSES})")
-    return df.filter(license_class_expr(F.col(content_col)).isin(*allow))
-
-
 def license_class_sql(expr: str, scan_chars: int = LICENSE_SCAN_CHARS) -> str:
     """DuckDB twin of license_class_expr over the SQL expression ``expr`` —
     generated from the SAME marker tables so oracle and engine can never

@@ -5,6 +5,9 @@ and validation.py:27-47: sensitive-column detection is a driver-side schema
 check (metadata, no data scan); malicious-content predicates are native
 rlike Columns evaluated over a bounded sample; size guards read cheap
 metadata/statistics, never full scans.
+
+No pipeline stage or entry query calls the four helpers; they stay because
+SURVEY rows P10, P11 and P14 name them.
 """
 
 from __future__ import annotations

@@ -140,25 +140,6 @@ def domain_stats(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def domain_filter(
-    df: DataFrame,
-    url_col: str = "url",
-    blocklist: tuple[str, ...] = (),
-    allowlist: tuple[str, ...] = (),
-) -> DataFrame:
-    """Gate rows by registrable domain. Both lists are literal sets compiled
-    into the scan predicate (codegen isin — pushdown-friendly); for
-    list sizes beyond a few thousand, swap to a broadcast anti-join with
-    the same semantics."""
-    dom = registrable_domain(url_host(F.col(url_col)))
-    out = df
-    if blocklist:
-        out = out.filter(~dom.isin(*blocklist))
-    if allowlist:
-        out = out.filter(dom.isin(*allowlist))
-    return out
-
-
 def domain_cap(
     df: DataFrame,
     url_col: str = "url",

@@ -36,9 +36,6 @@ public final class Scorer implements UDF1<byte[], Row> {
 
     private static final int B_LANG = 4096;
     private static final int B_PPL = 1 << 15;
-    private static final long POLY_P = 1099511628211L;
-    private static final long FMIX1 = 0xFF51AFD7ED558CCDL;
-    private static final long FMIX2 = 0xC4CEB9FE1A85EC53L;
     /** Fewer sampled langid trigrams than this → no confident call. */
     private static final int MIN_LANG_TRIGRAMS = 8;
 
@@ -166,7 +163,7 @@ public final class Scorer implements UDF1<byte[], Row> {
                 pow = 1;
             }
             h += v * pow;
-            pow *= POLY_P;
+            pow *= Signatures.POLY_P;
         }
         if (inToken) hashes[nt++] = finish(h);
         Arrays.sort(hashes, 0, nt);
@@ -233,12 +230,7 @@ public final class Scorer implements UDF1<byte[], Row> {
 
     /** fmix64 finalizer, truncated to the 52 bits the reference compares. */
     private static long finish(long h) {
-        h ^= h >>> 33;
-        h *= FMIX1;
-        h ^= h >>> 33;
-        h *= FMIX2;
-        h ^= h >>> 33;
-        return h >>> 12;
+        return Signatures.fmix64(h) >>> 12;
     }
 
     /**

@@ -52,7 +52,7 @@ import scala.jdk.javaapi.CollectionConverters;
  */
 public final class Signatures {
     private static final long MERSENNE = (1L << 61) - 1;
-    private static final long POLY_P = 1099511628211L;
+    static final long POLY_P = 1099511628211L;
     private static final long FMIX1 = 0xFF51AFD7ED558CCDL;
     private static final long FMIX2 = 0xC4CEB9FE1A85EC53L;
 

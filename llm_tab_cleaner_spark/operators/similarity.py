@@ -68,8 +68,9 @@ def vec_side(df: DataFrame, id_col, vec_col: str, id_out: str, v_out: str, n_out
 
 def pair_cosine(va: str, vb: str, na: str, nb: str):
     """Cosine of two ``vec_side`` sides' vectors ``va``, ``vb`` with norms
-    ``na``, ``nb``, rounded to 4 places: one dot kernel per pair."""
-    return F.round(dot_expr(F.col(va), F.col(vb)) / (F.col(na) * F.col(nb)), 4)
+    ``na``, ``nb``, rounded to 4 places: one dot kernel per pair. A zero
+    vector has no cosine: NULL (``try_divide``), under ANSI mode or not."""
+    return F.round(F.try_divide(dot_expr(F.col(va), F.col(vb)), F.col(na) * F.col(nb)), 4)
 
 
 def cosine_topk(
@@ -78,14 +79,17 @@ def cosine_topk(
     """Brute-force cosine top-k vs a literal query vector, ties by id. Per
     row the Java dot kernel runs twice (the dot with the query and the
     row's norm); the query's norm is a literal, the kernel's sequential
-    double sum replayed on the driver. The top-k is TakeOrderedAndProject
-    (no full sort, no shuffle of vectors)."""
+    double sum replayed on the driver. A zero vector's cosine is NULL and
+    ranks last. The top-k is TakeOrderedAndProject (no full sort, no shuffle
+    of vectors)."""
     q = [float(x) for x in query]
     qq = 0.0
     for x in q:
         qq += x * x
     v = F.col(vec_col).cast("array<double>")
-    sim = F.round(dot_expr(v, _lit_array(q)) / (norm_expr(v) * F.lit(math.sqrt(qq))), 4)
+    sim = F.round(
+        F.try_divide(dot_expr(v, _lit_array(q)), norm_expr(v) * F.lit(math.sqrt(qq))), 4
+    )
     return (
         df.select(F.col(id_col), sim.alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))

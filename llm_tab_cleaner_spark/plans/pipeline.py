@@ -3,11 +3,17 @@
 ``TableCleaner.clean`` (/root/reference/src/llm_tab_cleaner/core.py:274-296)
 → ``CleanPipeline.run(df)``; ``SparkCleaner.clean_distributed``
 (spark.py:67-156) → ``CleanPipeline.run_and_write``; incremental resume
-(incremental.py:46-85) → ``CleanPipeline.run_incremental``. The report
-mirrors CleaningReport (core.py:162-176, 384-392) but is computed
+(incremental.py:46-85) → ``run_and_write`` with ``PipelineConfig.state_dir``
+set, or ``CleanPipeline.run_incremental`` for the scored frames themselves.
+The report mirrors CleaningReport (core.py:162-176, 384-392) but is computed
 distributed, not row-by-row: ``run_and_write`` observes it (an
 ``Observation`` on the output write) in the same pass that writes the
 cleaned rows, and ``report(result)`` runs the same aggregates as one job.
+
+``run_and_write`` is the one writer of cleaned output, audit and metrics,
+for the spark-submit job (``jobs/run_quality_filter.py``) and the CLI alike:
+batch mode overwrites, state mode appends and commits the state last. It
+owns its cache; ``run_incremental`` hands its persisted result to the caller.
 """
 
 from __future__ import annotations
@@ -165,6 +171,14 @@ class CleanPipeline:
         result = self.score(df)
         return result, audit_trail(result)
 
+    def _unprocessed(self, df: DataFrame) -> DataFrame:
+        """The rows of ``df`` whose content hash no committed batch holds
+        (the resume anti-join)."""
+        if self.state is None:
+            raise ValueError("PipelineConfig.state_dir required for incremental runs")
+        hashed = df.withColumn("content_sha256", F.sha2(F.col("content"), 256))
+        return self.state.filter_new(hashed, self.spark).drop("content_sha256")
+
     def run_incremental(self, df: DataFrame, batch_id: str | None = None) -> tuple[DataFrame, DataFrame, str]:
         """Anti-join away already-processed rows, run, commit state atomically.
 
@@ -172,39 +186,60 @@ class CleanPipeline:
         after its manifest flip, so a crash mid-run reprocesses that batch and
         nothing else; output for already-committed rows is never recomputed.
 
-        The returned ``result`` is persisted (it was materialized to make the
-        state commit match the output exactly) — the CALLER owns the cache and
-        must ``result.unpersist()`` once the batch's output/audit are written,
-        or cached partitions accumulate across incremental batches.
+        The returned ``result`` is persisted. The state commit's write is its
+        first action and computes every partition into the cache before the
+        manifest flips, so the committed state matches what the caller reads
+        from ``result``. The CALLER owns the cache and must
+        ``result.unpersist()`` once the batch's output/audit are written, or
+        cached partitions accumulate across incremental batches. The state is
+        committed before the caller writes anything; state-mode
+        ``run_and_write`` writes first and commits last.
         """
-        if self.state is None:
-            raise ValueError("PipelineConfig.state_dir required for incremental runs")
-        hashed = df.withColumn("content_sha256", F.sha2(F.col("content"), 256))
-        fresh = self.state.filter_new(hashed, self.spark).drop("content_sha256")
-        result = self.score(fresh)
+        result = self.score(self._unprocessed(df))
         result.persist()
-        result.count()  # materialize before commit so state matches output
         committed = self.state.commit(result, batch_id)
         return result, audit_trail(result), committed
 
     def run_and_write(
-        self, df: DataFrame, output_path: str, audit_path: str | None = None
+        self,
+        df: DataFrame,
+        output_path: str,
+        audit_path: str | None = None,
+        metrics_path: str | None = None,
     ) -> CleaningReport:
-        """Run + write cleaned parquet (kept rows, scrubbed content) + audit
-        parquet; return the report (spark.py:67-156 analog).
+        """Run + write cleaned parquet (kept rows, scrubbed content), the
+        audit parquet and the ``partition_metrics`` parquet; return the
+        report (spark.py:67-156 analog). This is the pipeline's only writer.
 
         The report is observed during the output write: an ``Observation``
         sits below the write's ``keep`` filter, so it sees every row and
-        costs no extra job. ``result`` is persisted only when ``audit_path``
-        is set (the audit write is its second consumer) and is unpersisted
-        even when a write raises. Without an audit path the run is one job
-        with one scorer evaluation.
+        costs no extra job.
+
+        Batch mode (no ``state_dir``): the sinks are overwritten. ``result``
+        is persisted only when it has a second consumer (an audit or metrics
+        path); without one the run is one job with one scorer evaluation.
+
+        State mode (``PipelineConfig.state_dir`` set): only rows whose
+        content hash no committed batch holds are scored; ``result`` is
+        persisted; output, audit and metrics are appended; then the batch is
+        committed to the state store, so its manifest flips only after the
+        data it records is written. A crash after the output append and
+        before the flip leaves that batch's rows in the output and absent
+        from the state, and the rerun writes them again: the output is
+        at-least-once and never loses a row (idempotent output would need
+        per-batch output partitions).
+
+        Either way ``result`` is unpersisted before returning, even when a
+        write raises; the caller owns no cache.
         """
         t0 = time.time()
-        result, audit = self.run(df)
+        incremental = self.state is not None
+        result, audit = self.run(self._unprocessed(df) if incremental else df)
         rules = self._rule_names()
         obs = Observation()
-        if audit_path:
+        mode = "append" if incremental else "overwrite"
+        cached = incremental or bool(audit_path or metrics_path)
+        if cached:
             result.persist()
         try:
             (
@@ -215,13 +250,17 @@ class CleanPipeline:
                     F.col("content_clean").alias("content"),
                     "content_sha256", "clean_sha256", "confidence",
                 )
-                .write.mode("overwrite")
+                .write.mode(mode)
                 .parquet(output_path)
             )
             if audit_path:
-                audit.write.mode("overwrite").parquet(audit_path)
+                audit.write.mode(mode).parquet(audit_path)
+            if metrics_path:
+                self.partition_metrics(result).write.mode(mode).parquet(metrics_path)
+            if incremental:
+                self.state.commit(result)
         finally:
-            if audit_path:
+            if cached:
                 result.unpersist()
         report = _to_report(obs.get, rules)
         report.processing_time = time.time() - t0

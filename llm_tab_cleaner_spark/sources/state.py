@@ -74,7 +74,12 @@ class StateStore:
         """Drop rows already processed (left-anti join on content_sha256).
         Input must already carry content_sha256. The state side is not
         deduplicated: a left-anti join only asks whether a match exists, and
-        a distinct() would plan an aggregate and a shuffle over all state."""
+        a distinct() would plan an aggregate and a shuffle over all state.
+        With no committed batch there is nothing to drop and ``df`` is
+        returned as is: the empty state is an RDD scan the planner cannot
+        size, so joining it would shuffle and sort the whole input."""
+        if not self._read_manifest():
+            return df
         state = self.processed(spark).select("content_sha256")
         return df.join(state, "content_sha256", "left_anti")
 

@@ -10,7 +10,6 @@ from llm_tab_cleaner_spark.functions.code_comments import (
     comment_ratio_expr,
     comments_python,
     strip_comments_expr,
-    with_comment_features,
 )
 
 CASES = [
@@ -47,7 +46,9 @@ def test_comment_ratio_and_features(spark):
         pd.DataFrame({"content": ["# all comment", "x = 1\n", ""],
                       "lang": ["python", "python", "python"]})
     )
-    out = with_comment_features(df).select("comment_ratio").collect()
+    out = df.select(
+        comment_ratio_expr(F.col("content"), F.col("lang")).alias("comment_ratio")
+    ).collect()
     assert out[0].comment_ratio == 1.0
     assert out[1].comment_ratio == 0.0
     assert out[2].comment_ratio == 0.0  # empty → 0, not NaN

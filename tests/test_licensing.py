@@ -1,16 +1,15 @@
-"""License detection (X21): class precedence, SPDX extraction, header-prefix
-bounding, and the allow-list filter."""
+"""License detection (X21): class precedence, SPDX extraction and
+header-prefix bounding. The allow-list gate is ``CleanPipeline.prepare``'s
+(tests/test_pipeline_corpus.py)."""
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from llm_tab_cleaner_spark.functions.licensing import (
     LICENSE_SCAN_CHARS,
     license_class_expr,
-    license_filter,
     spdx_expr,
     with_license,
 )
@@ -44,17 +43,6 @@ def test_license_class_and_spdx(spark):
     for (content, cls, tag), row in zip(CASES, got):
         assert row.license_class == cls, (content or "")[:60]
         assert row.spdx_id == tag, (content or "")[:60]
-
-
-def test_license_filter(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"content": [c for c, _cls, _tag in CASES]}), "content string"
-    )
-    kept = license_filter(df, allow=("permissive", "none")).count()
-    want = sum(1 for _c, cls, _t in CASES if cls in ("permissive", "none"))
-    assert kept == want
-    with pytest.raises(ValueError, match="unknown license classes"):
-        license_filter(df, allow=("permisive",))
 
 
 def test_license_exprs_stay_in_codegen(spark, tmp_path):

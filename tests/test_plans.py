@@ -106,29 +106,6 @@ def test_apply_rules_projection_is_codegen(spark):
     assert re.search(r"\*\(\d+\) Project", _plan(applied.cleaned))
 
 
-def test_comment_features_strip_chain_evaluated_once(spark, tmp_path):
-    """Round-4 VERDICT nit: with_comment_features derives the ratio from the
-    content_nocomments COLUMN, so CollapseProject declines to inline it (a
-    non-cheap expression referenced twice) — the executed plan must show the
-    regex strip chain exactly ONCE, both Projects inside one codegen span,
-    no lambda HOFs."""
-    from llm_tab_cleaner_spark.fixtures.code_files import write_fixture
-    from llm_tab_cleaner_spark.functions.code_comments import with_comment_features
-
-    cf_path, _ = write_fixture(str(tmp_path / "fxc"), 200)
-    out = with_comment_features(spark.read.parquet(cf_path))
-    plan = _plan(out)
-    assert "lambdafunction" not in plan, plan[:2000]
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the language when-chain (the strip build) appears exactly once: the
-    # ratio references the column, it does not rebuild the chain
-    assert plan.count("CASE WHEN (lang") == 1, plan[:2500]
-    # every Project is codegen-resident (no bare interpreted Project)
-    assert len(re.findall(r"\*\(\d+\) Project", plan)) == len(
-        re.findall(r"\bProject\b", plan)
-    ), plan[:2500]
-
-
 def test_license_chain_codegen(spark, tmp_path):
     """The license when-chain (bounded-substring contains chains + one
     anchored SPDX regex) must stay a single codegen-resident projection."""
@@ -222,35 +199,65 @@ def test_filter_new_has_no_aggregate_on_state_side(spark, tmp_path):
     assert sorted(r[0] for r in fresh.collect()) == ["h3", "h4", "h5"]
 
 
-def _run_and_write_jobs_and_nodes(spark, df, tmp_path, audit: bool):
-    """(job count, [(name, description)] of the output write's executed
-    plan nodes) of one ``run_and_write``; jobs are counted with a
-    statusTracker job group, the plan is read back from the SQL status
-    store."""
-    from llm_tab_cleaner_spark import CleanPipeline
-
+def _jobs_and_plans(spark, group: str, action):
+    """(job count, one node list per SQL execution) of ``action()``. Jobs
+    are counted with a statusTracker job group; each execution's plan is
+    read back from the SQL status store as [(name, description, {metric
+    name: value})], holding the metrics the execution's tasks updated."""
     sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
-    group = f"run-and-write-{audit}"
     since = store.executionsCount()
     sc.setJobGroup(group, group)
     try:
-        CleanPipeline(spark).run_and_write(
-            df, str(tmp_path / f"out{audit}"), str(tmp_path / f"audit{audit}") if audit else None
-        )
+        action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     execs = store.executionsList()
-    first_write = None
+    plans = []
     for i in range(since, execs.size()):
-        graph = store.planGraph(execs.apply(i).executionId()).allNodes()
-        nodes = [(graph.apply(k).name(), graph.apply(k).desc()) for k in range(graph.size())]
-        if any("InsertIntoHadoopFsRelationCommand" in n for n, _ in nodes):
-            first_write = nodes
-            break
-    return jobs, first_write
+        eid = execs.apply(i).executionId()
+        values = store.executionMetrics(eid)
+        graph = store.planGraph(eid).allNodes()
+        nodes = []
+        for k in range(graph.size()):
+            node = graph.apply(k)
+            metrics = {}
+            for m in (node.metrics().apply(j) for j in range(node.metrics().size())):
+                value = values.get(m.accumulatorId())
+                if value.isDefined():
+                    metrics[m.name()] = value.get()
+            nodes.append((node.name(), node.desc(), metrics))
+        plans.append(nodes)
+    return jobs, plans
+
+
+def _run_and_write_jobs_and_nodes(spark, df, tmp_path, audit: bool):
+    """(job count, [(name, description)] of the output write's executed
+    plan nodes) of one batch-mode ``run_and_write``."""
+    from llm_tab_cleaner_spark import CleanPipeline
+
+    jobs, plans = _jobs_and_plans(
+        spark,
+        f"run-and-write-{audit}",
+        lambda: CleanPipeline(spark).run_and_write(
+            df, str(tmp_path / f"out{audit}"), str(tmp_path / f"audit{audit}") if audit else None
+        ),
+    )
+    writes = [p for p in plans if any("InsertIntoHadoopFsRelationCommand" in n for n, _, _ in p)]
+    return jobs, [(n, d) for n, d, _ in writes[0]] if writes else None
+
+
+def _scanned_rows(plan) -> int:
+    """Rows the plan's parquet scans produced in this execution: a scan
+    under an ``InMemoryTableScan`` whose cache was already built reports
+    none."""
+    return sum(
+        int(m.get("number of output rows", "0").replace(",", ""))
+        for n, _, m in plan
+        if n.startswith("Scan parquet")
+    )
 
 
 def test_run_and_write_jobs_and_observed_single_scorer_plan(spark, tmp_path):
@@ -273,6 +280,55 @@ def test_run_and_write_jobs_and_observed_single_scorer_plan(spark, tmp_path):
     assert sum(d.count("llm_tab_cleaner_score_") for _, d in nodes) == 1, nodes
     assert names.count("CollectMetrics") == 1, names
     assert "InMemoryTableScan" not in names, names
+
+
+def test_state_mode_run_and_write_is_three_jobs_over_one_cache(spark, tmp_path):
+    """State mode with an audit path: output, audit and state commit are one
+    job each over one persisted ``result``. Only the first plan scans (and
+    so scores) the input; the audit and commit read the cache. With no
+    batch committed yet, no resume join is planned."""
+    from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
+    from llm_tab_cleaner_spark.fixtures.code_files import write_fixture
+
+    cf_path, _ = write_fixture(str(tmp_path / "fxs"), 300)
+    df = spark.read.parquet(cf_path)
+    pipe = CleanPipeline(spark, PipelineConfig(state_dir=str(tmp_path / "state")))
+    jobs, plans = _jobs_and_plans(
+        spark,
+        "run-and-write-state",
+        lambda: pipe.run_and_write(df, str(tmp_path / "out"), str(tmp_path / "audit")),
+    )
+    assert jobs == 3 and len(plans) == 3
+    for plan in plans:
+        names = [n for n, _, _ in plan]
+        assert any("InsertIntoHadoopFsRelationCommand" in n for n in names), names
+        assert "InMemoryTableScan" in names, names
+        assert not any("Join" in n for n in names), names
+    assert [_scanned_rows(p) for p in plans] == [300, 0, 0]
+    assert len(pipe.state.committed_batches()) == 1
+
+
+def test_run_incremental_materializes_with_the_commit_write(spark, tmp_path):
+    """``run_incremental``'s state commit write is its only job: it builds
+    the persisted ``result`` (no separate count job) and scans the input
+    once."""
+    from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
+    from llm_tab_cleaner_spark.fixtures.code_files import write_fixture
+
+    cf_path, _ = write_fixture(str(tmp_path / "fxi"), 300)
+    df = spark.read.parquet(cf_path)
+    pipe = CleanPipeline(spark, PipelineConfig(state_dir=str(tmp_path / "state")))
+    out = []
+    jobs, plans = _jobs_and_plans(
+        spark, "run-incremental", lambda: out.append(pipe.run_incremental(df, "b1"))
+    )
+    result = out[0][0]
+    try:
+        assert jobs == 1 and len(plans) == 1
+        assert _scanned_rows(plans[0]) == 300
+        assert result.count() == 300
+    finally:
+        result.unpersist()
 
 
 def _max_generated_method(spark, df) -> int:

@@ -181,3 +181,77 @@ def test_run_and_write_unpersists_when_a_write_raises(spark, fixture_df, tmp_pat
     with pytest.raises(Exception):
         CleanPipeline(spark).run_and_write(df, out, audit)
     assert cache.isEmpty()
+
+
+def _first_half(df):
+    return df.filter(F.xxhash64(*KEYS) % 2 == 0)
+
+
+def test_two_state_mode_runs_equal_single_shot(spark, fixture_df, tmp_path):
+    """Two state-mode ``run_and_write`` calls, the second over a superset:
+    the second scores only rows whose content hash the first did not
+    commit, the output holds every scored kept row once, and each scored
+    row's keep/confidence/clean_sha256 equal a single batch run's."""
+    from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
+
+    df, _ = fixture_df
+    first = _first_half(df)
+    pipe = CleanPipeline(spark, PipelineConfig(state_dir=str(tmp_path / "state")))
+    out, audit = str(tmp_path / "out"), str(tmp_path / "audit")
+    reports = [pipe.run_and_write(d, out, audit) for d in (first, df)]
+
+    single, _ = CleanPipeline(spark).run(df)
+    ps = single.select(*KEYS, "content_sha256", "keep", "confidence", "clean_sha256").toPandas()
+    in_first = ps.set_index(KEYS).index.isin(first.select(*KEYS).toPandas().set_index(KEYS).index)
+    scored = ps[in_first | ~ps.content_sha256.isin(ps.content_sha256[in_first])]
+    assert reports[0].total_files == in_first.sum()
+    assert reports[1].total_files == len(scored) - in_first.sum() > 0
+    assert len(pipe.state.committed_batches()) == 2
+
+    def rows(frame, cols):
+        return frame[cols].sort_values(cols).reset_index(drop=True)
+
+    cols = KEYS + ["confidence", "clean_sha256"]
+    written = spark.read.parquet(out).toPandas()
+    assert not written.duplicated(KEYS).any()
+    pd.testing.assert_frame_equal(rows(written, cols), rows(scored[scored.keep], cols))
+    state = pipe.state.processed(spark).toPandas()
+    cols = ["content_sha256", "keep", "confidence"]
+    pd.testing.assert_frame_equal(rows(state, cols), rows(scored, cols))
+    dropped = spark.read.parquet(audit).filter("decision = 'drop'").select(*KEYS).distinct()
+    assert dropped.count() == (~scored.keep).sum()
+
+
+@pytest.mark.parametrize("failing", ["output", "audit"])
+def test_state_mode_commits_only_after_its_writes(spark, fixture_df, tmp_path, failing):
+    """State mode commits last: a sink that cannot be written raises, the
+    manifest keeps its batches, no cache is left, and the rerun scores the
+    same rows. The output is at-least-once: a failed audit write leaves the
+    appended output behind, and the rerun appends those rows again."""
+    from llm_tab_cleaner_spark import CleanPipeline, PipelineConfig
+
+    df, _ = fixture_df
+    pipe = CleanPipeline(spark, PipelineConfig(state_dir=str(tmp_path / "state")))
+    out, audit = str(tmp_path / "out"), str(tmp_path / "audit")
+    pipe.run_and_write(_first_half(df), out, audit)
+    committed = pipe.state.committed_batches()
+    kept_first = spark.read.parquet(out).count()
+
+    blocker = tmp_path / "blocker"
+    blocker.write_text("a regular file, so no directory can be made under it")
+    bad = str(blocker / "sink")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    sinks = (bad, audit) if failing == "output" else (out, bad)
+    with pytest.raises(Exception):
+        pipe.run_and_write(df, *sinks)
+    assert cache.isEmpty()
+    assert pipe.state.committed_batches() == committed
+
+    seen = set(pipe.state.processed(spark).toPandas().content_sha256)
+    hashes = df.select(F.sha2("content", 256).alias("h")).toPandas().h
+    report = pipe.run_and_write(df, out, audit)
+    assert report.total_files == (~hashes.isin(seen)).sum() > 0
+    assert len(pipe.state.committed_batches()) == 2
+    written = spark.read.parquet(out).count()
+    assert written == kept_first + report.kept * (2 if failing == "audit" else 1)

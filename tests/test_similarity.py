@@ -108,8 +108,8 @@ def test_knn_join_blocked_ties_zero_vectors_and_short_right_side(spark, parquet_
     """Duplicate and sign-flipped vectors (cosine ties, also at 0.0 after
     rounding), zero vectors and a k larger than the right side: the
     blocked join equals the brute window row for row. A zero vector has no
-    cosine: under ANSI mode (the default) both joins raise, without it
-    both rank its NULL cosine last."""
+    cosine: with ANSI mode on (the default) and off, both joins rank its
+    NULL cosine last."""
     base = [1.0, 2.0, 0.0, -1.0]
     vecs = [
         base, base, base, [-x for x in base], [0.0] * 4, [0.0] * 4,
@@ -130,16 +130,21 @@ def test_knn_join_blocked_ties_zero_vectors_and_short_right_side(spark, parquet_
         brute, blocked = both(left, right, k)
         assert _ranked(blocked) == _ranked(brute)
     assert len(_ranked(blocked)) == 3 * 2  # k beyond the right side keeps every row
-    for out in both(df.filter("vec_id IN (0, 4)"), df, 4):
-        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            out.collect()
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        brute, blocked = both(df.filter("vec_id IN (0, 4)"), df.repartition(3), 12)
-        assert _ranked(blocked) == _ranked(brute)
-        assert [r[3] for r in _ranked(blocked)].count(None) == 2 + 10
-    finally:
-        spark.conf.unset("spark.sql.ansi.enabled")
+    for ansi in ("true", "false"):
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        try:
+            brute, blocked = both(df.filter("vec_id IN (0, 4)"), df.repartition(3), 12)
+            ranked = _ranked(blocked)
+            assert ranked == _ranked(brute)
+        finally:
+            spark.conf.unset("spark.sql.ansi.enabled")
+        assert [r[3] for r in ranked].count(None) == 2 + 10
+        for qid in (0, 4):
+            cos = [r[3] for r in ranked if r[0] == qid]
+            nulls = cos.count(None)
+            assert nulls and cos[-nulls:] == [None] * nulls  # NULLs rank last
+    top = similarity.cosine_topk(df, "vec_id", "embedding", base, 10).collect()
+    assert [(r.vec_id, r.cosine) for r in top[-2:]] == [(4, None), (5, None)]
 
 
 _TOPK_ROWS = st.lists(
